@@ -60,17 +60,11 @@ object Bench {
     // `Aggregate [count(1)] +- LocalRelation`). This is the
     // measurement-bug fix the r20 verdict pre-authorized; the record
     // carries "action" so cross-round normalization can see the
-    // methodology edge, and SPARK_GRAFT_BENCH_ACTION=count reproduces
-    // the old action for bridge comparisons (one same-session bridge
-    // record with both actions is committed under plans/r21/).
+    // methodology edge (one same-session bridge record with both
+    // actions is committed under plans/r21/).
     val action: org.apache.spark.sql.DataFrame => Unit =
-      if (sys.env.get("SPARK_GRAFT_BENCH_ACTION").contains("count"))
-        df => df.count()
-      else
-        df => df.write.format("noop").mode("overwrite").save()
-    val actionName =
-      if (sys.env.get("SPARK_GRAFT_BENCH_ACTION").contains("count"))
-        "count" else "noop"
+      df => df.write.format("noop").mode("overwrite").save()
+    val actionName = "noop"
     // Warmup: run every timed query shape once at the smallest SF so
     // codegen compilation + JIT happen outside the timed region (plan
     // shape, and therefore generated code, is SF-independent). Without

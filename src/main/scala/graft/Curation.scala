@@ -532,6 +532,8 @@ object Curation {
         minhash_signature(col("text"), 3).as("sig"))
       .filter(col("sig").isNotNull)
     val batchBands = graft.text.TextQueries.explodeBands(mh).persist()
+    // a crashed forgetBatch may have left a band bucket aside
+    graft.etl.Commit.recover(java.nio.file.Paths.get(s"$storeDir/bands"))
     try {
       val np = graft.text.IncrementalDedup.newPairsPruned(
         spark.read.parquet(s"$storeDir/bands"), batchBands, buckets)
@@ -607,6 +609,7 @@ object Curation {
     val d = docs.select(col("doc_id")).distinct().persist()
     try {
       val bandsPath = s"$storeDir/bands"
+      graft.etl.Commit.recover(java.nio.file.Paths.get(bandsPath))
       val bands = spark.read.parquet(bandsPath)
       val mine = bands.join(broadcast(d), Seq("doc_id"), "left_semi")
       val hit = mine.select(col("_bb")).distinct().collect().map {
@@ -617,13 +620,13 @@ object Curation {
       }.toSeq.sorted
       val removed = if (hit.isEmpty) 0L else mine.count()
       val bandBytes = if (hit.nonEmpty) {
-        val tmp = java.nio.file.Files.createTempDirectory("graft-bandforget")
+        val tmp = graft.etl.Commit.stage(java.nio.file.Paths.get(storeDir))
         try {
           val keep = bands.filter(col("_bb").isin(hit: _*))
             .join(broadcast(d), Seq("doc_id"), "left_anti")
           graft.text.LabelStore.rewritePartitions(spark, bandsPath,
-            "_bb", hit, keep, tmp.resolve("stageBands"))
-        } finally graft.text.Artifacts.deleteRecursively(tmp)
+            "_bb", hit, keep, tmp)
+        } finally graft.etl.Commit.deleteRecursively(tmp)
       } else 0L
       val fs = graft.text.LabelStore.forget(spark, s"$storeDir/dedup",
         buckets, d)

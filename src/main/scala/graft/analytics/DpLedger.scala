@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * hash-checkable cross-engine (q161).
   *
   * Persistence: [[record]]/[[load]] use the versioned-parquet
-  * publication idiom ([[graft.etl.VersionedDir]] — the anomaly
+  * publication idiom ([[graft.etl.Commit]] — the anomaly
   * thresholds' discipline): each recorded ledger is a new immutable
   * `v<N>`, so an auditor can replay spend history and a reader never
   * sees a half-written ledger. */
@@ -127,9 +127,9 @@ object DpLedger {
 
   /** Publish a ledger as the next immutable version under `dir`. */
   def record(ledger: DataFrame, dir: String): Long =
-    graft.etl.VersionedDir.publish(ledger, dir)
+    graft.etl.Commit.publish(ledger, dir)
 
   /** Read the highest-version recorded ledger. */
   def load(spark: SparkSession, dir: String): DataFrame =
-    graft.etl.VersionedDir.loadLatest(spark, dir)
+    graft.etl.Commit.loadLatest(spark, dir)
 }

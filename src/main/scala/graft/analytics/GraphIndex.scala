@@ -328,15 +328,11 @@ object RankHistory {
     * rank tables r1..r3 (|V| rows each — rank-scale) plus
     * (state_version, n_nodes) under `historyDir`.
     *
-    * Publication is the state store's staged-claim/versioned-dir idiom
-    * (r19 ADVICE — the previous delete-before-move left NO readable
-    * history between the delete and the move, and a crash there lost it
-    * until a republish): each publish stages a complete payload and
-    * claims the next `v<N>` subdir atomically ([[graft.etl
-    * .VersionedDir.claim]]); readers resolve the highest version, so a
-    * history is readable at every instant. The claimed version plus one
-    * predecessor are retained (in-flight readers keep the dir they
-    * resolved); older ones are pruned. The pre-versioned FLAT layout
+    * Publication stages a complete payload and claims the next `v<N>`
+    * subdir ([[graft.etl.Commit.claim]]); readers resolve the highest
+    * version, so a history is readable at every instant. The claimed
+    * version plus one predecessor are retained (in-flight readers keep
+    * the dir they resolved); older ones are pruned. The pre-versioned FLAT layout
     * (payload directly under `historyDir`) stays readable until the
     * first versioned publish supersedes it. */
   def publish(s: SparkSession, storeDir: String,
@@ -347,9 +343,8 @@ object RankHistory {
     val ed = EdgeFold.degreedEdgesBucketed(s, storeDir).persist()
     val nodes = ed.select(col("src").as("node")).distinct().persist()
     val hroot = Paths.get(historyDir)
-    Files.createDirectories(hroot)
-    graft.etl.VersionedDir.sweep(hroot, "._stage-")
-    val tmp = hroot.resolve("._stage-" + java.util.UUID.randomUUID)
+    graft.etl.Commit.recover(hroot)
+    val tmp = graft.etl.Commit.stage(hroot)
     try {
       val nNodes = nodes.count()
       val rInit = scale / nNodes
@@ -364,14 +359,11 @@ object RankHistory {
       }
       Files.writeString(tmp.resolve("state_version"), version.toString)
       Files.writeString(tmp.resolve("n_nodes"), nNodes.toString)
-      graft.etl.VersionedDir.claim(hroot, tmp)
-      graft.etl.VersionedDir.versions(hroot)
-        .sorted(Ordering[Long].reverse).drop(2)
-        .foreach(v => graft.text.Artifacts.deleteRecursively(
-          hroot.resolve(s"v$v")))
+      graft.etl.Commit.claim(hroot, tmp)
+      graft.etl.Commit.prune(hroot, 2)
     } finally {
       nodes.unpersist(false); ed.unpersist(false)
-      graft.text.Artifacts.deleteRecursively(tmp)
+      graft.etl.Commit.deleteRecursively(tmp)
     }
   }
 
@@ -379,7 +371,7 @@ object RankHistory {
     * versioned, else the legacy flat layout (`historyDir` itself). */
   private def latestHistory(
       hroot: java.nio.file.Path): java.nio.file.Path =
-    graft.etl.VersionedDir.versions(hroot).maxOption
+    graft.etl.Commit.versions(hroot).maxOption
       .map(v => hroot.resolve(s"v$v")).getOrElse(hroot)
 
   /** The q136-shaped rank table ((node string, rank_scaled)) served by

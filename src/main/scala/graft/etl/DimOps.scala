@@ -66,6 +66,7 @@ object DimOps {
            keyCols: Seq[String], newValues: DataFrame,
            schema: StructType = null): DataFrame = {
     val sch = Option(schema).getOrElse(dimSchema(idCol, keyCols))
+    store.recover(table) // ids continue from the settled table
     val existing = store.read(table, sch)
     val updated = getOrCreate(existing, newValues, idCol, keyCols)
     store.overwrite(table, updated)

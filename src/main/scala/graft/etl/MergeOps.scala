@@ -168,14 +168,10 @@ object MergeOps {
     def fullMax(df: DataFrame): Int =
       df.agg(coalesce(max(col(idCol)), lit(0))).collect()(0).getInt(0)
 
-    // heal any crash-orphaned aside dirs BEFORE reading the target: an
-    // unrepaired aside means a bucket's rows are invisible, and this
-    // merge would re-insert its keys with fresh surrogate ids.
-    // Also reap day-old staged leftovers — safe here (and only here)
-    // because merges are single-writer: nothing else can have an
-    // in-flight staging on this root
-    store.repairBuckets(table)
-    store.sweepTmp()
+    // settle crashed swaps BEFORE reading the target: an unsettled
+    // bucket's rows are invisible, and this merge would re-insert its
+    // keys with fresh surrogate ids
+    store.recover(table)
 
     val meta = store.readMeta(table)
     if (store.exists(table) && (!store.isBucketed(table) || meta.isEmpty)) {
@@ -230,12 +226,7 @@ object MergeOps {
           .parquet(tmp.toString))
       store.writeMeta(table, math.max(maxId0, stagedMax), nb)
       store.commitBuckets(table, tmp, touched)
-    } catch {
-      // commitBuckets deletes tmp on success; on any failure between
-      // staging and commit the staged copy would leak under _tmp
-      // forever (live buckets stay consistent, so it is safe to drop)
-      case e: Throwable => store.discardStaged(tmp); throw e
-    }
+    } finally Commit.deleteRecursively(tmp)
   }
 
   /** What a keyed delete did: the buckets it rewrote and the rows it
@@ -270,11 +261,10 @@ object MergeOps {
                      deleteKeys: DataFrame, keys: Seq[String])
       : DeleteStats = {
     require(keys.nonEmpty, "delete needs at least one key column")
-    // single-writer discipline, as mergeBucketed: heal crash asides
+    // single-writer discipline, as mergeBucketed: settle crashed swaps
     // before reading, or a stranded bucket's rows would silently
     // survive the delete
-    store.repairBuckets(table)
-    store.sweepTmp()
+    store.recover(table)
     val meta = store.readMeta(table)
     require(store.exists(table) && store.isBucketed(table) &&
       meta.isDefined,
@@ -298,7 +288,7 @@ object MergeOps {
     if (deleted == 0L) return DeleteStats(touched, 0L)
     val tmp = store.stageBuckets(table, kept.withColumn(bcol, bucketOf))
     try store.commitBuckets(table, tmp, touched)
-    catch { case e: Throwable => store.discardStaged(tmp); throw e }
+    finally Commit.deleteRecursively(tmp)
     DeleteStats(touched, deleted)
   }
 }

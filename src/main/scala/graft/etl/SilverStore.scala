@@ -1,18 +1,17 @@
 package graft.etl
 
-import org.apache.hadoop.fs.Path
+import java.nio.file.{Files, Path, Paths}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** Parquet-backed Silver table store with atomic snapshot swap.
+/** Parquet-backed Silver table store.
   *
   * The reference's sink is Postgres with per-statement transactions;
   * our equivalent storage contract (SURVEY §7 "Design stance") is a
-  * directory per table, replaced atomically: write the new snapshot to
-  * `_tmp/<table>-<nonce>`, then rename over the live dir. Readers see
-  * either the old or the new snapshot, never a partial write. Uses the
-  * Hadoop FileSystem API so the same code runs on HDFS/object-store
-  * committers, not just local disk.
+  * directory per table, published through [[Commit]]: readers see
+  * either the old or the new snapshot (or bucket), never a partial
+  * write.
   *
   * Scale note: snapshot-rewrite merge is O(table) per batch, which is
   * the right trade for dimension/entity tables (small-to-medium); the
@@ -20,12 +19,11 @@ import org.apache.spark.sql.types.StructType
   * growth path never rewrites them.
   */
 final class SilverStore(val spark: SparkSession, val root: String) {
-  private val hadoopConf = spark.sessionState.newHadoopConf()
-  private def fs = new Path(root).getFileSystem(hadoopConf)
+  private val rootPath = Paths.get(root)
 
-  private def tablePath(table: String) = new Path(root, table)
+  private def tablePath(table: String) = rootPath.resolve(table)
 
-  def exists(table: String): Boolean = fs.exists(tablePath(table))
+  def exists(table: String): Boolean = Files.exists(tablePath(table))
 
   /** Bucketed layout (MergeOps.mergeBucketed): entity tables partition
     * their directory by `_bucket=NN` (hash of the natural key mod
@@ -41,8 +39,8 @@ final class SilverStore(val spark: SparkSession, val root: String) {
 
   def isBucketed(table: String): Boolean =
     bucketedCache.computeIfAbsent(table, _ =>
-      exists(table) && fs.listStatus(tablePath(table))
-        .exists(_.getPath.getName.startsWith(s"$bucketCol="))).booleanValue()
+      Commit.list(tablePath(table))
+        .exists(_.getFileName.toString.startsWith(s"$bucketCol="))).booleanValue()
 
   private def invalidate(table: String): Unit = bucketedCache.remove(table)
 
@@ -71,31 +69,36 @@ final class SilverStore(val spark: SparkSession, val root: String) {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], withBucket)
   }
 
+  /** [[Commit.recover]] for the store root and `table`'s dir: settles a
+    * crashed swap of the table or of one of its buckets and sweeps
+    * stale staging. Writer paths run it before they read or write (an
+    * unsettled bucket is invisible, and a merge would re-insert its
+    * keys under fresh surrogate ids) — never readers: a read-only store
+    * reaping a paused writer's staging would turn that writer's commit
+    * into data loss. */
+  def recover(table: String): Unit = {
+    Commit.recover(rootPath)
+    Commit.recover(tablePath(table))
+    invalidate(table)
+  }
+
   /** Stage a bucketed write: materialize `df` (which must carry
-    * `_bucket`) under `_tmp`, partitioned by bucket. Returns the temp
+    * `_bucket`) in staging, partitioned by bucket. Returns the staged
     * path for [[commitBuckets]] — the split lets the caller derive
     * facts from the STAGED data (e.g. the new max id) before anything
     * becomes visible. */
   def stageBuckets(table: String, df: DataFrame): Path = {
-    val tmp = new Path(root, s"_tmp/$table-${java.util.UUID.randomUUID}")
+    val tmp = Commit.stage(rootPath)
     df.write.mode("overwrite").partitionBy(bucketCol).parquet(tmp.toString)
     tmp
   }
 
   /** Swap ONLY the given `_bucket=NN` subdirectories of the staged
-    * write into the live table: the bucketed MERGE's commit. Untouched
-    * bucket directories are not listed, read, or rewritten — their
-    * files stay byte-identical.
-    *
-    * Each bucket swaps via rename-aside (old dir is moved aside, new
-    * renamed in, aside deleted; a failed rename-in restores the aside)
-    * so no IN-PROCESS failure mode leaves a bucket with its data
-    * deleted. A PROCESS CRASH between the aside-rename and the
-    * rename-in leaves the bucket's only copy in the dot-prefixed aside
-    * dir — invisible to parquet readers until [[repairBuckets]] (run at
-    * the start of every bucketed merge) restores it; with a
-    * single-writer merge discipline the window therefore closes before
-    * the next merge can re-insert the bucket's keys.
+    * write into the live table, one [[Commit.swap]] each: the bucketed
+    * MERGE's commit. Untouched bucket directories are not listed, read,
+    * or rewritten — their files stay byte-identical; a touched bucket
+    * with no staged dir (all its rows deleted upstream) is removed.
+    * The caller deletes `tmp` afterwards.
     * Atomicity is PER BUCKET: a concurrent reader can see bucket A new
     * while bucket B is still old. That is the reference's own
     * consistency unit — its per-row `INSERT ... ON CONFLICT`
@@ -103,174 +106,93 @@ final class SilverStore(val spark: SparkSession, val root: String) {
     * never promised a snapshot there either. Use [[overwrite]] when a
     * whole-table snapshot swap is required. */
   def commitBuckets(table: String, tmp: Path, buckets: Seq[Int]): Unit = {
-    val f = fs
     // the staged root must exist: an individual missing bucket dir
     // under it means "bucket intentionally emptied", but a missing
     // ROOT means the staging was lost (crashed writer, misfired
     // sweep) — proceeding would delete every touched bucket's data
-    if (!f.exists(tmp))
+    if (!Files.exists(tmp))
       throw new java.io.IOException(
         s"staged dir $tmp is gone — refusing to commit $table")
-    val live = tablePath(table)
-    f.mkdirs(live)
-    buckets.foreach { b =>
-      val src = new Path(tmp, s"$bucketCol=$b")
-      val dst = new Path(live, s"$bucketCol=$b")
-      val aside = new Path(live, s".$bucketCol=$b-old")
-      val hadOld = f.exists(dst)
-      if (hadOld && !f.rename(dst, aside))
-        throw new java.io.IOException(s"bucket aside-rename failed for $table/$b")
-      // a touched bucket can end up empty (all its rows deleted
-      // upstream); absent src then simply leaves the bucket removed
-      if (f.exists(src) && !f.rename(src, dst)) {
-        if (hadOld) f.rename(aside, dst) // restore — no data lost
-        throw new java.io.IOException(s"bucket swap failed for $table/$b")
-      }
-      if (hadOld) f.delete(aside, true)
-    }
-    f.delete(tmp, true)
+    buckets.foreach(b => Commit.swap(
+      tablePath(table).resolve(s"$bucketCol=$b"),
+      tmp.resolve(s"$bucketCol=$b")))
     invalidate(table)
-  }
-
-  /** Repair the [[commitBuckets]] crash window: a process death between
-    * the aside-rename and the rename-in strands the bucket's only copy
-    * in `.{_bucket=N}-old`. For each orphaned aside dir: live bucket
-    * missing → restore the aside (old data comes back; the interrupted
-    * merge re-runs later); live bucket present → the swap completed
-    * and only the aside-delete was lost → drop the aside. Idempotent;
-    * MergeOps.mergeBucketed calls it before every merge. */
-  def repairBuckets(table: String): Int = {
-    val live = tablePath(table)
-    val f = fs
-    if (!f.exists(live)) return 0
-    var repaired = 0
-    f.listStatus(live).foreach { st =>
-      val name = st.getPath.getName
-      if (name.startsWith(s".$bucketCol=") && name.endsWith("-old")) {
-        val dst = new Path(live, name.stripPrefix(".").stripSuffix("-old"))
-        if (!f.exists(dst)) {
-          if (!f.rename(st.getPath, dst))
-            throw new java.io.IOException(
-              s"aside restore failed for $table/$name")
-        } else f.delete(st.getPath, true)
-        repaired += 1
-        invalidate(table)
-      }
-    }
-    repaired
-  }
-
-  /** Discard a staged-but-uncommitted write (failure cleanup): live
-    * buckets are consistent per bucket, so the staged copy is never
-    * the only copy of anything. */
-  def discardStaged(tmp: Path): Unit =
-    try fs.delete(tmp, true) catch { case _: Exception => () }
-
-  /** Sweep stale entries under `root/_tmp`: a crash between staging
-    * and commit leaks the whole staged dataset there. Only entries
-    * older than `olderThanMs` go (a fresh entry may belong to an
-    * in-flight writer). Called from the WRITER path (mergeBucketed)
-    * under the store's single-writer discipline — NOT from the
-    * constructor: a read-only store reaping a paused writer's staging
-    * would turn that writer's commit into data loss (commitBuckets
-    * also guards by refusing a vanished staged root). */
-  def sweepTmp(olderThanMs: Long = 24L * 3600 * 1000): Int = {
-    val tmpRoot = new Path(root, "_tmp")
-    val f = fs
-    if (!f.exists(tmpRoot)) 0
-    else {
-      val cutoff = System.currentTimeMillis() - olderThanMs
-      val stale = f.listStatus(tmpRoot).filter(_.getModificationTime < cutoff)
-      stale.foreach(st => f.delete(st.getPath, true))
-      stale.length
-    }
   }
 
   /** Sidecar for bucketed tables: the surrogate-id high-water mark
     * (avoids a full-table id scan per merge batch) and the bucket
     * count the layout was created with (a later caller passing a
-    * different nBuckets must not shear the layout). Written atomically
-    * (temp + rename); the dot prefix keeps it invisible to parquet
-    * readers. Crash contract: the meta is written BEFORE the bucket
-    * commit with the staged max, so a crash between the two leaves the
-    * mark too HIGH — id gaps, never id collisions. */
-  private def metaPath(table: String) = new Path(tablePath(table), ".graft_meta")
+    * different nBuckets must not shear the layout). Written by
+    * [[Commit.replaceFile]]; the dot prefix keeps it invisible to
+    * parquet readers. Crash contract: the meta is written BEFORE the
+    * bucket commit with the staged max, so a crash between the two
+    * leaves the mark too HIGH — id gaps, never id collisions. */
+  private def metaPath(table: String) = tablePath(table).resolve(".graft_meta")
 
-  def writeMeta(table: String, maxId: Int, nBuckets: Int): Unit = {
-    val f = fs
-    f.mkdirs(tablePath(table))
-    val tmp = new Path(tablePath(table), s".graft_meta-${java.util.UUID.randomUUID}")
-    val out = f.create(tmp, true)
-    try out.write(s"$maxId,$nBuckets".getBytes("UTF-8")) finally out.close()
-    if (f.exists(metaPath(table))) f.delete(metaPath(table), false)
-    if (!f.rename(tmp, metaPath(table)))
-      throw new java.io.IOException(s"meta write failed for $table")
-  }
+  def writeMeta(table: String, maxId: Int, nBuckets: Int): Unit =
+    Commit.replaceFile(metaPath(table), s"$maxId,$nBuckets".getBytes("UTF-8"))
 
   /** (maxId, nBuckets); None when absent or unreadable — callers fall
     * back to a full scan + the default layout, never crash. */
   def readMeta(table: String): Option[(Int, Int)] =
     try {
-      if (!fs.exists(metaPath(table))) None
-      else {
-        val in = fs.open(metaPath(table))
-        val s = try new String(
-          org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-        finally in.close()
-        val Array(m, n) = s.trim.split(',')
-        Some((m.toInt, n.toInt))
-      }
+      val Array(m, n) = Files.readString(metaPath(table)).trim.split(',')
+      Some((m.toInt, n.toInt))
     } catch { case _: Exception => None }
 
-  /** Atomically replace the table with `df` (materializes to a temp
-    * dir first, so `df` may read from the table it replaces).
-    * `partitionCols` preserves a partitioned directory layout. */
+  /** Atomically replace the table with `df` (materialized to staging
+    * first, so `df` may read from the table it replaces), by one
+    * [[Commit.swap]]. `partitionCols` preserves a partitioned directory
+    * layout. */
   def overwrite(table: String, df: DataFrame,
                 partitionCols: Seq[String] = Nil): Unit = {
-    val tmp = new Path(root, s"_tmp/$table-${java.util.UUID.randomUUID}")
+    recover(table)
+    val tmp = Commit.stage(rootPath)
     val w = df.write.mode("overwrite")
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .parquet(tmp.toString)
-    val live = tablePath(table)
-    val f = fs
-    if (f.exists(live)) f.delete(live, true)
-    f.mkdirs(live.getParent)
-    if (!f.rename(tmp, live))
-      throw new java.io.IOException(s"atomic swap failed for $table")
+    Commit.swap(tablePath(table), tmp)
     invalidate(table)
   }
 
   /** Historized append (H4/H5): children tables only grow. */
-  def append(table: String, df: DataFrame): Unit =
+  def append(table: String, df: DataFrame): Unit = {
+    recover(table)
     df.write.mode("append").parquet(tablePath(table).toString)
+  }
 
   /** Append partitioned by `partitionCols` (e.g. `_load_date`): at
     * scale, historized tables are laid out so date-ranged reads prune
     * at the FileIndex — `read(table).filter(col("_load_date") === d)`
     * touches one partition directory, not the table. */
   def appendPartitioned(table: String, df: DataFrame,
-                        partitionCols: Seq[String]): Unit =
+                        partitionCols: Seq[String]): Unit = {
+    recover(table)
     df.write.mode("append").partitionBy(partitionCols: _*)
       .parquet(tablePath(table).toString)
+  }
 
   /** Compact an append-only table: per-file micro-batches accumulate
     * one small parquet file per append (the classic small-files
     * problem — at 10⁶ landed files the NAMENODE/listing cost dwarfs the
-    * data). Rewrites the table to ~`targetFileBytes` files via the same
-    * atomic snapshot swap as `overwrite`, so readers never see a
-    * partial compaction. Returns (files_before, files_after). */
+    * data). Rewrites the table to ~`targetFileBytes` files via
+    * [[overwrite]], so readers never see a partial compaction. Returns
+    * (files_before, files_after). */
   def compact(table: String, partitionCols: Seq[String] = Nil,
               targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
+    recover(table)
     val live = tablePath(table)
-    val f = fs
-    def parquetFiles(p: Path): Int = {
-      val it = f.listFiles(p, true)
-      var n = 0
-      while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) n += 1 }
-      n
+    def files(): Seq[Path] = {
+      val st = Files.walk(live)
+      try {
+        import scala.jdk.CollectionConverters._
+        st.iterator().asScala.filter(Files.isRegularFile(_)).toList
+      } finally st.close()
     }
-    val before = parquetFiles(live)
-    val totalBytes = f.getContentSummary(live).getLength
+    def parquetFiles(): Int =
+      files().count(_.getFileName.toString.endsWith(".parquet"))
+    val before = parquetFiles()
+    val totalBytes = files().map(Files.size).sum
     val parts = math.max(1, (totalBytes / targetFileBytes).toInt)
     import org.apache.spark.sql.functions._
     // bucketed tables keep their `_bucket=` layout through compaction
@@ -297,6 +219,6 @@ final class SilverStore(val spark: SparkSession, val root: String) {
     val savedMeta = readMeta(table) // snapshot swap drops the sidecar
     overwrite(table, compacted, partitionCols0)
     savedMeta.foreach { case (m, n) => writeMeta(table, m, n) }
-    (before, parquetFiles(live))
+    (before, parquetFiles())
   }
 }

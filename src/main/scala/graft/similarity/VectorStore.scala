@@ -4,7 +4,9 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.etl.Commit
 import graft.operators.TopK
+import graft.text.LabelStore
 import VectorFunctions.cosine
 
 /** Mutable IVF-flat ingest store — incremental maintenance for the ANN
@@ -38,12 +40,12 @@ import VectorFunctions.cosine
   * stays a pure function of the stored geometry); the census
   * [[listStats]] emits is the drift monitor, and [[retrain]] is the
   * answer it triggers: new centroids + the full corpus re-assigned,
-  * published as the next `v<N>` GENERATION under the store root via
-  * unique-tmp + atomic rename (the [[graft.etl.VersionedDir]] idiom —
-  * a reader never sees half a geometry swap; in-flight readers keep
-  * the generation they resolved). Every read/mutation entry point
-  * resolves the highest generation first, so fold→retrain→fold just
-  * works — the post-retrain fold assigns under the NEW geometry.
+  * published as the next `v<N>` GENERATION under the store root by
+  * [[graft.etl.Commit.claim]] — a reader never sees half a geometry
+  * swap; in-flight readers keep the generation they resolved. Every
+  * read/mutation entry point resolves the highest generation first, so
+  * fold→retrain→fold just works — the post-retrain fold assigns under
+  * the NEW geometry.
   *
   * A `_meta` sidecar (nCentroids, dim — written LAST, after the data
   * dirs land) rides every generation: [[fold]]/[[foldBatch]]/
@@ -68,43 +70,31 @@ object VectorStore {
     * store root itself (the base generation [[init]] writes). */
   private def genRoot(dir: String): String = {
     val root = java.nio.file.Paths.get(dir)
-    val v = graft.etl.VersionedDir.latestVersion(root)
+    val v = Commit.latestVersion(root)
     if (v > 0) root.resolve("v" + v).toString else dir
   }
 
   /** The (nCentroids, dim) this generation was published with; `None`
     * on a pre-sidecar store. */
   def metaOf(dir: String): Option[(Int, Int)] = {
-    val p = metaPath(genRoot(dir))
-    if (!Files.isRegularFile(p)) None
-    else {
-      val props = new java.util.Properties()
-      val in = Files.newInputStream(p)
-      try props.load(in) finally in.close()
-      for (n <- Option(props.getProperty("nCentroids"));
-           d <- Option(props.getProperty("dim")))
-        yield (n.trim.toInt, d.trim.toInt)
-    }
+    val props = Commit.readProps(metaPath(genRoot(dir)))
+    for (n <- props.get("nCentroids"); d <- props.get("dim"))
+      yield (n.trim.toInt, d.trim.toInt)
   }
 
   /** Written LAST, after the generation's data dirs land (the
     * [[graft.text.LabelStore.publish]] crash-ordering lesson): a
     * crash mid-publish leaves data without meta — treated as
     * pre-sidecar — never meta asserting a geometry the data lacks. */
-  private def writeMeta(dir: String, nCents: Int, dim: Int): Unit = {
-    Files.createDirectories(java.nio.file.Paths.get(dir))
-    val tmp = java.nio.file.Paths.get(dir,
-      s"_meta.tmp${System.nanoTime()}")
-    val out = Files.newOutputStream(tmp)
-    try {
-      val props = new java.util.Properties()
-      props.setProperty("nCentroids", nCents.toString)
-      props.setProperty("dim", dim.toString)
-      props.store(out, "graft VectorStore meta")
-    } finally out.close()
-    Files.move(tmp, metaPath(dir),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  private def writeMeta(dir: String, cents: Seq[(Long, Array[Float])]): Unit =
+    Commit.writeProps(metaPath(dir), "nCentroids" -> cents.size.toString,
+      "dim" -> cents.head._2.length.toString)
+
+  /** Settle interrupted swaps and sweep stale staging — the writer
+    * paths run this before they read. */
+  private[graft] def recover(storeDir: String): Unit = {
+    Commit.recover(java.nio.file.Paths.get(storeDir))
+    Commit.recover(java.nio.file.Paths.get(listsPath(genRoot(storeDir))))
   }
 
   /** Load the resolved generation's geometry and fail fast when the
@@ -142,7 +132,7 @@ object VectorStore {
     * as the store's fixed geometry, and `train` itself is assigned and
     * written as the initial inverted lists. */
   def init(s: SparkSession, train: DataFrame, storeDir: String): Unit = {
-    require(graft.etl.VersionedDir.latestVersion(
+    require(Commit.latestVersion(
         java.nio.file.Paths.get(storeDir)) == 0,
       s"store $storeDir already carries retrained generations — " +
         "init writes the BASE generation only; use retrain to re-seed")
@@ -154,7 +144,7 @@ object VectorStore {
     assign(train, cents)
       .write.mode("overwrite").partitionBy("_c")
       .parquet(listsPath(storeDir))
-    writeMeta(storeDir, cents.size, cents.head._2.length)
+    writeMeta(storeDir, cents)
   }
 
   /** The store's fixed geometry (bounded read — ≤ nCentroids rows),
@@ -167,14 +157,11 @@ object VectorStore {
     * trigger): new centroids from `train` (the same first-nCentroids
     * convention as [[init]] — a caller with a better codebook
     * pre-shapes `train`), the CURRENT generation's full vector set
-    * re-assigned under them, and both published atomically as the
-    * next `v<N>` generation (unique tmp inside the store root, then
-    * the [[graft.etl.VersionedDir]] claim loop — losers of a
-    * concurrent race take the next number). Readers and folds resolve
-    * the new generation on their next call; in-flight readers finish
-    * on the one they resolved, which stays on disk for exactly that
-    * reason (prune old `v<N>` dirs once drained — the LabelStore
-    * local-FS caveat applies to the move). Cost is honest: a retrain
+    * re-assigned under them, and both published as the next `v<N>`
+    * generation by [[Commit.claim]]. Readers and folds resolve the new
+    * generation on their next call; in-flight readers finish on the
+    * one they resolved, which stays on disk for exactly that reason
+    * (prune old `v<N>` dirs once drained). Cost is honest: a retrain
     * IS a corpus-scale rebuild (one scan + one partitioned write) —
     * what the generation machinery buys is the ATOMIC swap under
     * live traffic, not incrementality. Returns the claimed version.
@@ -200,8 +187,8 @@ object VectorStore {
     val corpus = lists(s, storeDir)
       .select(col("vec_id"), col("embedding"))
     val root = java.nio.file.Paths.get(storeDir)
-    Files.createDirectories(root)
-    val tmp = root.resolve("._tmp-" + java.util.UUID.randomUUID)
+    Commit.recover(root)
+    val tmp = Commit.stage(root)
     import s.implicits._
     cents.map { case (id, v) => (id, v.toSeq) }.toDF("vec_id", "embedding")
       .coalesce(1).write.mode("overwrite")
@@ -210,16 +197,16 @@ object VectorStore {
       .repartition(col("_c"))
       .write.mode("overwrite").partitionBy("_c")
       .parquet(listsPath(tmp.toString))
-    writeMeta(tmp.toString, cents.size, cents.head._2.length)
+    writeMeta(tmp.toString, cents)
     if (listFileSnapshot(scanRoot) != scanSnapshot) {
-      graft.text.Artifacts.deleteRecursively(tmp)
+      Commit.deleteRecursively(tmp)
       throw new IllegalStateException(
         s"VectorStore.retrain: generation $scanRoot was mutated by a " +
           "concurrent fold during the retrain scan — publishing would " +
           "silently drop the folded vectors. Quiesce writers and retry " +
           "(the retry's scan includes them).")
     }
-    graft.etl.VersionedDir.claim(root, tmp)
+    Commit.claim(root, tmp)
   }
 
   /** Fail fast on a batch/query frame whose embedding width differs
@@ -272,6 +259,7 @@ object VectorStore {
     * so admission cannot invalidate anything). */
   def fold(s: SparkSession, storeDir: String,
            batch: DataFrame): FoldStats = {
+    recover(storeDir)
     val root = genRoot(storeDir)
     val cents = checkedCentroids(s, root)
     val a = assign(batch, cents).persist()
@@ -292,7 +280,7 @@ object VectorStore {
     * that prefix from ALL list dirs (assignment under fixed centroids
     * is deterministic, so a replay targets exactly the dirs its
     * previous attempt did — the sweep over ≤ nCentroids dirs is
-    * belt-and-braces for a crashed partial write), then copies its
+    * belt-and-braces for a crashed partial write), then swaps its
     * staged parts in. Replay therefore REPLACES its own output
     * instead of appending beside it — the `batch=<id>` discipline of
     * [[graft.streaming.RollupStream.foldBatch]], pushed inside the
@@ -307,61 +295,12 @@ object VectorStore {
         s"foldBatch $batchId")
       // the replay sweep runs even for an empty batch: a previous
       // non-empty attempt of this id may have crashed mid-write
-      sweepBatch(root, batchId)
+      recover(storeDir)
+      LabelStore.sweepBatch(listsPath(root), "_c", batchId)
       if (n == 0) return FoldStats(0L, 0)
-      val tmp = Files.createTempDirectory("graft-vecfold")
-      try {
-        a.repartition(col("_c")).write.mode("overwrite")
-          .partitionBy("_c").parquet(tmp.resolve("st").toString)
-        val st = Files.list(tmp.resolve("st"))
-        val touched = try {
-          import scala.jdk.CollectionConverters._
-          st.iterator().asScala
-            .filter(_.getFileName.toString.startsWith("_c="))
-            .map { src =>
-              val dst = java.nio.file.Paths.get(
-                listsPath(root), src.getFileName.toString)
-              Files.createDirectories(dst)
-              // deterministic destination names (the writer's random
-              // uuid stripped): a replay lands the SAME file names, so
-              // "replaced, not appended" holds at the listing level too
-              val partIdx = "part-(\\d+)".r
-              val parts = Files.list(src)
-              try parts.iterator().asScala
-                .filter(_.getFileName.toString.startsWith("part-"))
-                .foreach { f =>
-                  val idx = partIdx.findFirstMatchIn(f.getFileName.toString)
-                    .map(_.group(1)).getOrElse("0")
-                  Files.copy(f,
-                    dst.resolve(s"seg-b$batchId-p$idx.parquet"),
-                    java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-                }
-              finally parts.close()
-              1
-            }.sum
-        } finally st.close()
-        FoldStats(n, touched)
-      } finally graft.text.Artifacts.deleteRecursively(tmp)
+      FoldStats(n, LabelStore.landBatch(storeDir, a, listsPath(root), "_c",
+        batchId))
     } finally a.unpersist(false)
-  }
-
-  /** Remove every file batch `batchId` previously landed (replay /
-    * crash healing — see [[foldBatch]]). */
-  private def sweepBatch(storeDir: String, batchId: Long): Unit = {
-    val root = java.nio.file.Paths.get(listsPath(storeDir))
-    if (!Files.isDirectory(root)) return
-    val dirs = Files.list(root)
-    try {
-      import scala.jdk.CollectionConverters._
-      dirs.iterator().asScala
-        .filter(_.getFileName.toString.startsWith("_c=")).foreach { d =>
-          val fs = Files.list(d)
-          try fs.iterator().asScala
-            .filter(_.getFileName.toString.startsWith(s"seg-b$batchId-"))
-            .foreach(Files.delete)
-          finally fs.close()
-        }
-    } finally dirs.close()
   }
 
   /** The inverted lists (vec_id, embedding, _c) — filter `_c` by the
@@ -414,6 +353,7 @@ object VectorStore {
     * [[graft.text.LabelStore.forget]] discipline on the vector half. */
   def forget(s: SparkSession, storeDir: String,
              ids: DataFrame): ForgetStats = {
+    recover(storeDir)
     val root = genRoot(storeDir)
     checkedCentroids(s, root) // geometry/meta agreement, fail fast
     val d = ids.select(col("vec_id")).distinct().persist()
@@ -430,10 +370,10 @@ object VectorStore {
       val removed = mine.count()
       val keep = all.filter(col("_c").isin(hit: _*))
         .join(broadcast(d), Seq("vec_id"), "left_anti")
-      val tmp = Files.createTempDirectory("graft-vecforget")
-      try graft.text.LabelStore.rewritePartitions(s, listsPath(root),
-        "_c", hit, keep, tmp.resolve("stage"))
-      finally graft.text.Artifacts.deleteRecursively(tmp)
+      val tmp = Commit.stage(java.nio.file.Paths.get(storeDir))
+      try LabelStore.rewritePartitions(s, listsPath(root),
+        "_c", hit, keep, tmp)
+      finally Commit.deleteRecursively(tmp)
       ForgetStats(removed, hit.size)
     } finally d.unpersist(false)
   }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.analytics.Attribution
-import graft.etl.VersionedDir
+import graft.etl.Commit
 
 /** Streaming multi-touch attribution — the stream twin of q197's
   * [[Attribution.fold]], completing the fold family's streaming
@@ -91,7 +91,7 @@ object AttributionStream {
     val s = batch.sparkSession
     val root = Paths.get(storeDir)
     Files.createDirectories(root)
-    VersionedDir.sweep(root, "_tmp-")
+    Commit.recover(root)
     val (touches, conv) = splitBatch(batch, channels, conversionType,
       convTie = true)
     val conversions = conv.withColumnRenamed("tie", "cid")
@@ -231,11 +231,11 @@ object AttributionStream {
     val uroot = Paths.get(userDir)
     val croot = Paths.get(sidecarDir)
     Files.createDirectories(uroot); Files.createDirectories(croot)
-    VersionedDir.sweep(uroot, "_tmp-"); VersionedDir.sweep(croot, "_tmp-")
+    Commit.recover(uroot); Commit.recover(croot)
     val touched = BucketedStateStore.touchedBuckets(
       batch, Seq("user"), buckets)
     val prevU = BucketedStateStore.prevVersion(uroot, id)
-    val prevC = VersionedDir.latestBefore(croot, id)
+    val prevC = Commit.latestBefore(croot, id)
     // the user store versions by SLOT (a compaction may own the
     // latest slot), the tiny sidecar by raw batch id — in-step means
     // both resolve to the same last batch
@@ -250,11 +250,10 @@ object AttributionStream {
     }
     val (nu, nc, release) = fold(userState, sidecar)
     try {
-      val tmp = croot.resolve("_tmp-" + java.util.UUID.randomUUID)
+      val tmp = Commit.stage(croot)
       nc.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val cdest = croot.resolve(s"v$id")
-      graft.text.Artifacts.deleteRecursively(cdest) // stale replay output
-      Files.move(tmp, cdest, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      // a replay replaces its own stale output
+      Commit.swap(croot.resolve(s"v$id"), tmp)
       BucketedStateStore.publish(nu, uroot, id, prevU, touched,
         Seq("user"), buckets)
     } finally release()
@@ -269,7 +268,7 @@ object AttributionStream {
   def pruneMarkov(frontierDir: String, cellsDir: String,
                   keep: Int = 2): Unit = {
     BucketedStateStore.prune(frontierDir, keep)
-    VersionedDir.prune(cellsDir, keep)
+    Commit.prune(Paths.get(cellsDir), keep)
   }
 
   /** The q199 Markov report from the latest maintained cell counts. */
@@ -290,7 +289,7 @@ object AttributionStream {
   private def latestSidecar(spark: SparkSession, dir: String,
                             what: String): DataFrame = {
     val root = Paths.get(dir)
-    val v = VersionedDir.versions(root).maxOption
+    val v = Commit.versions(root).maxOption
       .getOrElse(sys.error(s"no $what state under $dir"))
     spark.read.parquet(root.resolve(s"v$v").toString)
   }
@@ -348,6 +347,6 @@ object AttributionStream {
   def pruneDecay(horizonDir: String, totalsDir: String,
                  keep: Int = 2): Unit = {
     BucketedStateStore.prune(horizonDir, keep)
-    VersionedDir.prune(totalsDir, keep)
+    Commit.prune(Paths.get(totalsDir), keep)
   }
 }

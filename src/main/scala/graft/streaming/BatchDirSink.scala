@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-import graft.etl.VersionedDir
+import graft.etl.Commit
 
 /** The bounded-growth discipline for `foreachBatch` append sinks that
   * write one `batch=<id>` directory per trigger (the idempotent
@@ -20,11 +20,11 @@ import graft.etl.VersionedDir
   * with a stale replay of an already-compacted id EXCLUDED by the
   * watermark instead of double-served.
   *
-  * Crash safety is the [[graft.etl.VersionedDir]] idiom: the merged
-  * payload (rows + watermark sidecar) stages completely and lands by
-  * atomic claim; a crash before the claim changes nothing, a crash
-  * after it leaves stale batch dirs at-or-below the watermark that
-  * [[serve]] already excludes and the next [[compact]] sweeps.
+  * Crash safety is [[graft.etl.Commit]]'s: the merged payload (rows +
+  * watermark sidecar) stages completely and lands by its claim; a
+  * crash before the claim changes nothing, a crash after it leaves
+  * stale batch dirs at-or-below the watermark that [[serve]] already
+  * excludes and the next [[compact]] sweeps.
   *
   * Shared by the attribution credit sink
   * ([[AttributionStream.compactCredits]]) and the anomaly-flags sink
@@ -99,9 +99,8 @@ object BatchDirSink {
     val stale = dirs.filter(_._1 <= through) // already-compacted replays
     if (merge.nonEmpty || newThrough > through) {
       val root = Paths.get(dir, "_compacted")
-      Files.createDirectories(root)
-      VersionedDir.sweep(root, "._stage-")
-      val stage = root.resolve("._stage-" + java.util.UUID.randomUUID)
+      Commit.recover(root)
+      val stage = Commit.stage(root)
       val merged = (compacted.toSeq ++
         (if (merge.isEmpty) Nil
          else Seq(readBatchDirs(spark, dir, merge))))
@@ -113,13 +112,12 @@ object BatchDirSink {
         case None => Files.createDirectories(stage.resolve("rows"))
       }
       Files.writeString(stage.resolve("through"), newThrough.toString)
-      VersionedDir.claim(root, stage)
-      VersionedDir.prune(root.toString, 2)
+      Commit.claim(root, stage)
+      Commit.prune(root, 2)
     }
     // merged dirs and stale replay leftovers are now redundant — their
     // rows are served from the compacted store
-    (merge ++ stale).foreach(d =>
-      graft.text.Artifacts.deleteRecursively(Paths.get(d._2)))
+    (merge ++ stale).foreach(d => Commit.drop(Paths.get(d._2)))
     newThrough
   }
 
@@ -154,14 +152,14 @@ object BatchDirSink {
         val nulls = df.filter(col("batch").isNull).count()
         if (nulls == 0) return 0L
         val root = Paths.get(dir, "_compacted")
-        VersionedDir.sweep(root, "._stage-")
-        val stage = root.resolve("._stage-" + java.util.UUID.randomUUID)
+        Commit.recover(root)
+        val stage = Commit.stage(root)
         df.withColumn("batch",
             coalesce(col("batch"), lit(PreProvenanceBatch)))
           .write.mode("overwrite").parquet(stage.resolve("rows").toString)
         Files.writeString(stage.resolve("through"), through.toString)
-        VersionedDir.claim(root, stage)
-        VersionedDir.prune(root.toString, 2)
+        Commit.claim(root, stage)
+        Commit.prune(root, 2)
         nulls
     }
   }
@@ -179,7 +177,7 @@ object BatchDirSink {
   private def compactedState(spark: SparkSession, dir: String)
       : (Long, Option[DataFrame]) = {
     val root = Paths.get(dir, "_compacted")
-    VersionedDir.versions(root).maxOption match {
+    Commit.versions(root).maxOption match {
       case None => (-1L, None)
       case Some(v) =>
         val vdir = root.resolve(s"v$v")

@@ -6,8 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, hash, lit, pmod}
 import org.apache.spark.sql.types.{DataType, StructType}
 
-import graft.etl.VersionedDir
-import graft.text.Artifacts
+import graft.etl.Commit
 
 /** Hash-bucketed, manifest-layered versioned state store — the shared
   * publication layer for the streaming fold stores ([[RollupStream]],
@@ -80,7 +79,7 @@ object BucketedStateStore {
     * below the batch's own — the previous batch's fold or a compaction
     * of it, whichever is newer. */
   def prevVersion(root: Path, id: Long): Option[Long] =
-    VersionedDir.latestBefore(root, foldSlot(id))
+    Commit.latestBefore(root, foldSlot(id))
 
   /** What one fold's publication cost: `touched` buckets rewritten out
     * of `buckets` total, `bytesWritten` = staged parquet + sidecars —
@@ -124,7 +123,7 @@ object BucketedStateStore {
     val s = batch.sparkSession
     val root = Paths.get(storeDir)
     Files.createDirectories(root)
-    VersionedDir.sweep(root, "_tmp-")
+    Commit.recover(root)
     val touched = touchedBuckets(batch, keyCols, buckets)
     val prev = prevVersion(root, id)
     val next = prev match {
@@ -165,7 +164,7 @@ object BucketedStateStore {
 
   /** The newest version number; None for an empty store. */
   def latestVersion(root: Path): Option[Long] =
-    VersionedDir.versions(root).maxOption
+    Commit.versions(root).maxOption
 
   /** The stored state schema of `version` (the `_schema.json` sidecar
     * empty-slice reads use). Consumers: fold-time LAYOUT guards that
@@ -181,7 +180,7 @@ object BucketedStateStore {
   /** The complete state at the latest version; loud error when the
     * store has no version yet. */
   def readAll(s: SparkSession, root: Path, what: String): DataFrame = {
-    val v = VersionedDir.versions(root).maxOption
+    val v = Commit.versions(root).maxOption
       .getOrElse(sys.error(s"no $what state under $root"))
     readAllAt(s, root, v)
   }
@@ -200,10 +199,9 @@ object BucketedStateStore {
 
   /** Stage `nextSlice` bucket-partitioned, write the layered manifest
     * (touched → batch `id`'s slot, everything else → its previous
-    * owner), land `v<2·id>` by delete-stale + atomic move — a replay
-    * overwrites its own output from identical inputs, exactly the r16
-    * swap. `prev` is an internal version number as returned by
-    * [[prevVersion]]. */
+    * owner), land `v<2·id>` by [[graft.etl.Commit.swap]] — a replay
+    * replaces its own output, rebuilt from identical inputs. `prev` is
+    * an internal version number as returned by [[prevVersion]]. */
   def publish(nextSlice: DataFrame, root: Path, id: Long,
               prev: Option[Long], touched: Seq[Int],
               keyCols: Seq[String], buckets: Int,
@@ -219,7 +217,7 @@ object BucketedStateStore {
                         prevOwners: Map[Int, Long], touched: Seq[Int],
                         keyCols: Seq[String], buckets: Int,
                         bucketedFiles: Boolean = false): FoldStats = {
-    val tmp = root.resolve("_tmp-" + java.util.UUID.randomUUID)
+    val tmp = Commit.stage(root)
     val staged = nextSlice.withColumn("_sb", bucketCol(keyCols, buckets))
       .repartition(col("_sb"))
     if (bucketedFiles) {
@@ -252,9 +250,8 @@ object BucketedStateStore {
       prevOwners ++ touched.map(_ -> version),
       if (bucketedFiles) Some(keyCols) else None)
     val bytes = dirBytes(tmp)
-    val dest = root.resolve(s"v$version")
-    Artifacts.deleteRecursively(dest) // stale replay output
-    Files.move(tmp, dest, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    // a replay replaces its own stale output
+    Commit.swap(root.resolve(s"v$version"), tmp)
     // any landed version (new slot OR same-path replay) invalidates
     // this JVM's table-registration fast path for the root — the next
     // bucketed read re-registers and re-lists (REFRESH). The NAME is
@@ -270,12 +267,12 @@ object BucketedStateStore {
     * live until all its buckets are rewritten). */
   def prune(storeDir: String, keep: Int = 2): Unit = {
     val root = Paths.get(storeDir)
-    val vs = VersionedDir.versions(root).sorted(Ordering[Long].reverse)
+    val vs = Commit.versions(root).sorted(Ordering[Long].reverse)
     val kept = vs.take(keep)
     val live = kept.toSet ++ kept.flatMap(v =>
       readManifest(root.resolve(s"v$v"))._2.values)
     vs.drop(keep).filterNot(live)
-      .foreach(v => Artifacts.deleteRecursively(root.resolve(s"v$v")))
+      .foreach(v => Commit.drop(root.resolve(s"v$v")))
   }
 
   /** Rewrite the latest version's full state into a single
@@ -291,7 +288,7 @@ object BucketedStateStore {
   def compact(s: SparkSession, storeDir: String,
               keyCols: Seq[String]): Long = {
     val root = Paths.get(storeDir)
-    val latest = VersionedDir.versions(root).maxOption
+    val latest = Commit.versions(root).maxOption
       .getOrElse(sys.error(s"no state to compact under $root"))
     if (latest % 2 == 1) return latest // already a compaction
     // a bucketed-files store stays bucketed-files across compaction —
@@ -316,7 +313,7 @@ object BucketedStateStore {
                   transform: DataFrame => DataFrame,
                   bucketedFiles: Boolean): Long = {
     val root = Paths.get(storeDir)
-    val latest = VersionedDir.versions(root).maxOption
+    val latest = Commit.versions(root).maxOption
       .getOrElse(sys.error(s"no state to compact under $root"))
     val buckets = readManifest(root.resolve(s"v$latest"))._1
     val target = if (latest % 2 == 1) latest + 2 else latest + 1
@@ -445,7 +442,7 @@ object BucketedStateStore {
   private def latestBucketedTable(s: SparkSession, storeDir: String,
                                   what: String): (String, StructType) = {
     val root = Paths.get(storeDir)
-    val version = VersionedDir.versions(root).maxOption
+    val version = Commit.versions(root).maxOption
       .getOrElse(sys.error(s"no $what state under $root"))
     val vdir = root.resolve(s"v$version")
     val (buckets, owners) = readManifest(vdir)
@@ -542,7 +539,7 @@ object BucketedStateStore {
     * before touching the store. */
   def migrateScheme(storeDir: String): Int = {
     val root = Paths.get(storeDir)
-    val vs = VersionedDir.versions(root)
+    val vs = Commit.versions(root)
     require(vs.nonEmpty, s"no state versions under $root")
     val loaded = vs.map { v =>
       val vdir = root.resolve(s"v$v")
@@ -553,23 +550,18 @@ object BucketedStateStore {
           "store (or this version) was written by the pre-bucketed " +
           "full-rewrite layout; migration cannot make it slot-safe. " +
           "Rebuild the store from the checkpointed source.")
-      val props = new java.util.Properties()
-      val in = Files.newInputStream(mf)
-      try props.load(in) finally in.close()
-      require(props.getProperty("buckets") != null,
+      val props = Commit.readProps(mf)
+      require(props.contains("buckets"),
         s"version v$v under $root has a _manifest without a buckets " +
           "property — not a slot-layout store; rebuild it.")
-      val scheme = Option(props.getProperty("scheme"))
+      val scheme = props.get("scheme")
       require(scheme.forall(_ == layoutScheme),
         s"version v$v under $root is tagged scheme='${scheme.get}' — " +
           "refusing to restamp a foreign layout.")
-      (vdir, props, scheme.isEmpty)
+      (mf, props, scheme.isEmpty)
     }
-    loaded.filter(_._3).map { case (vdir, props, _) =>
-      props.setProperty("scheme", layoutScheme)
-      val out = Files.newOutputStream(vdir.resolve("_manifest"))
-      try props.store(out, "graft bucketed state manifest")
-      finally out.close()
+    loaded.filter(_._3).map { case (mf, props, _) =>
+      Commit.writeProps(mf, (props + ("scheme" -> layoutScheme)).toSeq: _*)
       1
     }.sum
   }

@@ -254,13 +254,13 @@ object EventStreams {
       .groupBy(col("event_type"), col("hr"))
       .agg(count(lit(1)).as("c"))
     val th = graft.analytics.EventQueries.robustThresholds(counts)
-    graft.etl.VersionedDir.publish(th, dir)
+    graft.etl.Commit.publish(th, dir)
   }
 
   /** Read the highest-version published threshold set. */
   def loadAnomalyThresholds(spark: org.apache.spark.sql.SparkSession,
                             dir: String): Seq[(String, Long, Long)] = {
-    val rows = graft.etl.VersionedDir.loadLatest(spark, dir)
+    val rows = graft.etl.Commit.loadLatest(spark, dir)
       .select(col("event_type"), col("med"), col("mad")).collect()
     require(rows.length <= 1024, "threshold set must stay bounded")
     rows.toSeq.map(r => (r.getString(0), r.getLong(1), r.getLong(2)))

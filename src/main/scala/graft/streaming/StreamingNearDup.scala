@@ -1,9 +1,12 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
+import java.nio.file.{Files, Path, Paths}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+
+import graft.etl.Commit
 
 /** Streaming MinHash-LSH near-duplicate suppression — the continuous
   * twin of q25/q73's batch near-dedup, for an always-on ingest where
@@ -112,18 +115,15 @@ object StreamingNearDup {
   // full listing and rewrites the file (legacy state dirs migrate on
   // first trigger).
 
-  private def manifestFile(stateDir: String) = new Path(stateDir, "_sb_manifest")
+  private def manifestFile(stateDir: String) = Paths.get(stateDir, "_sb_manifest")
 
   /** Parse the manifest if present: batchId → its `_sb` values. */
-  private[graft] def readManifest(spark: SparkSession,
+  private[graft] def readManifest(
       stateDir: String): Option[Map[Long, Seq[Int]]] = {
     val f = manifestFile(stateDir)
-    val fs = f.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(f)) None
+    if (!Files.exists(f)) None
     else try {
-      val in = fs.open(f)
-      val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      Some(text.linesIterator.filter(_.nonEmpty).map { line =>
+      Some(Files.readString(f).linesIterator.filter(_.nonEmpty).map { line =>
         val Array(b, sbs) = line.split(":", -1)
         b.toLong -> (if (sbs.isEmpty) Seq.empty[Int]
                      else sbs.split(",").toSeq.map(_.toInt))
@@ -131,40 +131,26 @@ object StreamingNearDup {
     } catch { case scala.util.control.NonFatal(_) => None } // corrupt → rebuild
   }
 
-  /** Atomically (tmp + rename) replace the manifest. Single-writer:
+  /** Replace the manifest ([[Commit.replaceFile]]). Single-writer:
     * only dedupBatch / compactState / migrateStateLayout call this. */
-  private def writeManifest(spark: SparkSession, stateDir: String,
-      entries: Map[Long, Seq[Int]]): Unit = {
-    val f = manifestFile(stateDir)
-    val fs = f.getFileSystem(spark.sessionState.newHadoopConf())
-    val tmp = new Path(stateDir, "._sb_manifest.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(entries.toSeq.sortBy(_._1).map { case (b, sbs) =>
-      s"$b:${sbs.sorted.mkString(",")}"
-    }.mkString("\n").getBytes("UTF-8")) finally out.close()
-    fs.delete(f, false)
-    if (!fs.rename(tmp, f))
-      throw new java.io.IOException(s"manifest write failed for $stateDir")
-  }
+  private def writeManifest(stateDir: String,
+      entries: Map[Long, Seq[Int]]): Unit =
+    Commit.replaceFile(manifestFile(stateDir),
+      entries.toSeq.sortBy(_._1).map { case (b, sbs) =>
+        s"$b:${sbs.sorted.mkString(",")}"
+      }.mkString("\n").getBytes("UTF-8"))
 
   /** One full listing of the state tree → fresh manifest. The healing
     * path for legacy/hand-modified state dirs and the rebuild step
     * after compaction or layout migration. */
-  private[graft] def rebuildManifest(spark: SparkSession,
+  private[graft] def rebuildManifest(
       stateDir: String): Map[Long, Seq[Int]] = {
-    val p = new Path(stateDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val entries: Map[Long, Seq[Int]] =
-      if (!fs.exists(p)) Map.empty
-      else fs.listStatus(p).collect {
-        case st if st.isDirectory && st.getPath.getName.startsWith("_batch=") =>
-          val id = st.getPath.getName.stripPrefix("_batch=").toLong
-          id -> fs.listStatus(st.getPath).collect {
-            case sb if sb.isDirectory && sb.getPath.getName.startsWith("_sb=") =>
-              sb.getPath.getName.stripPrefix("_sb=").toInt
-          }.toSeq
-      }.toMap
-    writeManifest(spark, stateDir, entries)
+    val entries: Map[Long, Seq[Int]] = batchDirs(stateDir).map { d =>
+      d.getFileName.toString.stripPrefix("_batch=").toLong ->
+        Commit.list(d).map(_.getFileName.toString)
+          .filter(_.startsWith("_sb=")).map(_.stripPrefix("_sb=").toInt)
+    }.toMap
+    writeManifest(stateDir, entries)
     entries
   }
 
@@ -189,7 +175,7 @@ object StreamingNearDup {
   // negatives = missed suppression), which is why absence triggers a
   // rebuild rather than starting empty over legacy state.
 
-  private def bloomFile(stateDir: String) = new Path(stateDir, "_bloom")
+  private def bloomFile(stateDir: String) = Paths.get(stateDir, "_bloom")
 
   /** 60-bit md5 key of a band bucket — identical expression on the
     * build (OR into the sketch) and probe (bit test) sides. */
@@ -219,14 +205,12 @@ object StreamingNearDup {
     }.reduce(_ && _)
   }
 
-  private[graft] def readBloom(spark: SparkSession,
+  private[graft] def readBloom(
       stateDir: String): Option[Array[Long]] = {
     val f = bloomFile(stateDir)
-    val fs = f.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(f)) None
+    if (!Files.exists(f)) None
     else try {
-      val in = fs.open(f)
-      val bytes = try in.readAllBytes() finally in.close()
+      val bytes = Files.readAllBytes(f)
       if (bytes.length != graft.plans.BloomAgg.words * 8) None // corrupt
       else {
         val out = new Array[Long](graft.plans.BloomAgg.words)
@@ -236,18 +220,10 @@ object StreamingNearDup {
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
-  private def writeBloom(spark: SparkSession, stateDir: String,
-      words: Array[Long]): Unit = {
-    val f = bloomFile(stateDir)
-    val fs = f.getFileSystem(spark.sessionState.newHadoopConf())
-    val tmp = new Path(stateDir, "._bloom.tmp")
+  private def writeBloom(stateDir: String, words: Array[Long]): Unit = {
     val bb = java.nio.ByteBuffer.allocate(words.length * 8)
     bb.asLongBuffer().put(words)
-    val out = fs.create(tmp, true)
-    try out.write(bb.array()) finally out.close()
-    fs.delete(f, false)
-    if (!fs.rename(tmp, f))
-      throw new java.io.IOException(s"bloom write failed for $stateDir")
+    Commit.replaceFile(bloomFile(stateDir), bb.array())
   }
 
   /** One full state scan → fresh bloom (absent/corrupt heal; legacy
@@ -255,15 +231,15 @@ object StreamingNearDup {
     * dirs via the manifest — the same discovery bound as the probe. */
   private[graft] def rebuildBloom(spark: SparkSession,
       stateDir: String): Array[Long] = {
-    val entries = readManifest(spark, stateDir)
-      .getOrElse(rebuildManifest(spark, stateDir))
+    val entries = readManifest(stateDir)
+      .getOrElse(rebuildManifest(stateDir))
     val paths = for ((b, sbs) <- entries.toSeq.sortBy(_._1); sb <- sbs.sorted)
       yield s"$stateDir/_batch=$b/_sb=$sb"
     val words =
       if (paths.isEmpty) new Array[Long](graft.plans.BloomAgg.words)
       else bloomWords(spark.read.option("basePath", stateDir)
         .parquet(paths: _*).select("band", "ha", "hb"))
-    writeBloom(spark, stateDir, words)
+    writeBloom(stateDir, words)
     words
   }
 
@@ -294,35 +270,23 @@ object StreamingNearDup {
                  stateDir: String, keptDir: String,
                  autoCompactDirs: Int = 0): Unit = {
     val spark = batch.sparkSession
-    repairState(spark, stateDir)
+    recover(stateDir)
     // the kept dir has the same compaction crash window (a manual
-    // compactKept dying between its two swap renames): heal it BEFORE
-    // this batch recreates the dir — once the dir is recreated, a
-    // later repair would read the aside as "swap completed" and
-    // DELETE it, silently dropping every previously kept row
-    repairState(spark, keptDir)
+    // compactKept dying mid-swap): settle it BEFORE this batch
+    // recreates the dir — once the dir is recreated, the aside would
+    // read as "swap completed" and be dropped with every kept row
+    recover(keptDir)
     migrateStateLayout(spark, stateDir)
-    if (autoCompactDirs > 0) {
-      val p = new Path(stateDir)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      val n = if (!fs.exists(p)) 0
-        else fs.listStatus(p).count(s => s.isDirectory &&
-          s.getPath.getName.startsWith("_batch="))
-      if (n > autoCompactDirs) compactState(spark, stateDir)
-    }
+    if (autoCompactDirs > 0 && batchDirs(stateDir).size > autoCompactDirs)
+      compactState(spark, stateDir)
     val buckets = bandBuckets(batch).cache()
     try {
-      val stateExists = {
-        val p = new Path(stateDir)
-        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-        fs.exists(p) && fs.listStatus(p).exists(s =>
-          s.isDirectory && s.getPath.getName.startsWith("_batch="))
-      }
+      val stateExists = batchDirs(stateDir).nonEmpty
       // the merged "seen" bloom (see the gate section above): absent
       // over existing state → one-time rebuild, never a partial start
       val seen: Option[Array[Long]] =
         if (!stateExists) None
-        else Some(readBloom(spark, stateDir)
+        else Some(readBloom(stateDir)
           .getOrElse(rebuildBloom(spark, stateDir)))
       // the gate: only buckets the bloom says MAY be registered probe
       // the state — a miss is proof of absence, and an all-new batch
@@ -396,9 +360,9 @@ object StreamingNearDup {
       // both idempotently); later triggers then list only named dirs
       val sbs = buckets.select(sbCol.as("_sb")).distinct()
         .collect().map(_.getInt(0)).toSeq
-      val entries = readManifest(spark, stateDir)
-        .getOrElse(rebuildManifest(spark, stateDir))
-      writeManifest(spark, stateDir, entries + (batchId -> sbs))
+      val entries = readManifest(stateDir)
+        .getOrElse(rebuildManifest(stateDir))
+      writeManifest(stateDir, entries + (batchId -> sbs))
       // fold this batch's bucket bits into the merged bloom LAST —
       // `seen` already holds the pre-batch merge (rebuilt when the
       // file was absent), so one elementwise OR suffices; a replay
@@ -408,7 +372,7 @@ object StreamingNearDup {
       val add = bloomWords(buckets.select("band", "ha", "hb"))
       var i = 0
       while (i < merged.length) { merged(i) |= add(i); i += 1 }
-      writeBloom(spark, stateDir, merged)
+      writeBloom(stateDir, merged)
     } finally buckets.unpersist()
   }
 
@@ -428,8 +392,8 @@ object StreamingNearDup {
       (b, sbs) <- entries.toSeq.sortBy(_._1) if b != batchId
       sb <- sbs.sorted if t(sb)
     } yield s"$stateDir/_batch=$b/_sb=$sb"
-    val named = manifestPaths(readManifest(spark, stateDir)
-      .getOrElse(rebuildManifest(spark, stateDir)))
+    val named = manifestPaths(readManifest(stateDir)
+      .getOrElse(rebuildManifest(stateDir)))
     // a manifest entry can dangle after out-of-band state cleanup (a
     // partially deleted batch dir, a retention sweep): feeding a
     // missing leaf to the reader fails the whole trigger with a
@@ -440,10 +404,8 @@ object StreamingNearDup {
     val paths =
       if (named.isEmpty) named
       else {
-        val fs = new Path(stateDir)
-          .getFileSystem(spark.sessionState.newHadoopConf())
-        if (named.forall(d => fs.exists(new Path(d)))) named
-        else manifestPaths(rebuildManifest(spark, stateDir))
+        if (named.forall(d => Files.exists(Paths.get(d)))) named
+        else manifestPaths(rebuildManifest(stateDir))
       }
     if (paths.isEmpty)
       // schema-correct empty frame: nothing registered in the touched
@@ -469,11 +431,10 @@ object StreamingNearDup {
     * folding them into -1 would make every replayed doc self-collide
     * and erase the batch's kept output.
     *
-    * Swap is rename-aside (state -> .old, tmp -> state, drop .old),
-    * and [[repairState]] heals the crash window between the two
-    * renames; dedupBatch calls it before every read. Run while the
-    * stream is STOPPED — it is the state's single writer then.
-    * Returns (dirs_before, rows_after). */
+    * The fold lands by one [[Commit.swap]] of the whole state dir
+    * (staged beside it); dedupBatch settles a crashed swap before every
+    * read. Run while the stream is STOPPED — it is the state's single
+    * writer then. Returns (dirs_before, rows_after). */
   def compactState(spark: SparkSession, stateDir: String): (Int, Long) = {
     migrateStateLayout(spark, stateDir)
     val res = compactBatchDirs(spark, stateDir,
@@ -483,7 +444,7 @@ object StreamingNearDup {
       partitionCols = Seq("_sb"))
     // the swap replaced the whole dir (manifest included): one listing
     // of the now-tiny tree (2 batch dirs) re-derives it
-    rebuildManifest(spark, stateDir)
+    rebuildManifest(stateDir)
     res
   }
 
@@ -491,59 +452,28 @@ object StreamingNearDup {
     * `_sb` bucketing (plain files directly under `_batch=N`): mixed
     * depths would fail partition discovery outright, and prunedState
     * would reference a column that does not exist. Each pre-`_sb`
-    * batch dir is rewritten bucketed and swapped in via rename-aside
-    * (aside is dot-prefixed, invisible to readers); the crash window
-    * between the two renames is healed here on the next call. Batch
-    * identity is preserved, so replay exclusion still works. NOT for
-    * kept dirs — their flat layout is current, not legacy. */
+    * batch dir is rewritten bucketed and swapped in by [[Commit.swap]].
+    * Batch identity is preserved, so replay exclusion still works. NOT
+    * for kept dirs — their flat layout is current, not legacy. */
   private[graft] def migrateStateLayout(spark: SparkSession,
                                         stateDir: String): Unit = {
-    val p = new Path(stateDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return
-    // heal a migration crash first: live batch dir missing, data only
-    // in its dot-prefixed aside
-    fs.listStatus(p).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("._batch=") && n.endsWith("-presb")) {
-        val live = new Path(p, n.stripPrefix(".").stripSuffix("-presb"))
-        if (!fs.exists(live)) {
-          if (!fs.rename(st.getPath, live))
-            throw new java.io.IOException(
-              s"pre-_sb aside restore failed for ${st.getPath}")
-        } else fs.delete(st.getPath, true)
-      }
+    val old = batchDirs(stateDir).filter { d =>
+      val kids = Commit.list(d).map(_.getFileName.toString)
+      kids.exists(k => !k.startsWith("_") && !k.startsWith(".") &&
+          Files.isRegularFile(d.resolve(k))) &&
+        !kids.exists(_.startsWith("_sb="))
     }
-    val old = fs.listStatus(p).filter { st =>
-      st.isDirectory && st.getPath.getName.startsWith("_batch=") && {
-        val kids = fs.listStatus(st.getPath)
-        kids.exists(k => k.isFile && !k.getPath.getName.startsWith("_") &&
-          !k.getPath.getName.startsWith(".")) &&
-          !kids.exists(k => k.isDirectory &&
-            k.getPath.getName.startsWith("_sb="))
-      }
-    }
-    old.foreach { st =>
-      val tmp = new Path(p.getParent,
-        p.getName + s"-migrate-${java.util.UUID.randomUUID}")
-      spark.read.parquet(st.getPath.toString)
+    old.foreach { d =>
+      val tmp = Commit.stage(Paths.get(stateDir))
+      spark.read.parquet(d.toString)
         .select("band", "ha", "hb")
         .withColumn("_sb", sbCol)
         .repartition(col("_sb"))
         .write.partitionBy("_sb").parquet(tmp.toString)
-      val aside = new Path(p, "." + st.getPath.getName + "-presb")
-      fs.delete(aside, true)
-      if (!fs.rename(st.getPath, aside))
-        throw new java.io.IOException(s"migration aside failed for ${st.getPath}")
-      if (!fs.rename(tmp, st.getPath)) {
-        fs.rename(aside, st.getPath)
-        fs.delete(tmp, true)
-        throw new java.io.IOException(s"migration swap failed for ${st.getPath}")
-      }
-      fs.delete(aside, true)
+      Commit.swap(d, tmp)
     }
     // migrated dirs have new _sb layouts the manifest doesn't know yet
-    if (old.nonEmpty) rebuildManifest(spark, stateDir)
+    if (old.nonEmpty) rebuildManifest(stateDir)
   }
 
   /** [[compactState]]'s twin for the KEPT output, which accumulates
@@ -557,71 +487,48 @@ object StreamingNearDup {
   private def compactBatchDirs(spark: SparkSession, dir: String,
       project: DataFrame => DataFrame,
       partitionCols: Seq[String] = Nil): (Int, Long) = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    repairState(spark, dir)
-    if (!fs.exists(p) || fs.listStatus(p).isEmpty) return (0, 0L)
-    val dirs = fs.listStatus(p).filter(_.isDirectory)
-    val batchIds = dirs.map(_.getPath.getName)
-      .collect { case n if n.startsWith("_batch=") =>
-        n.stripPrefix("_batch=").toLong }
-    if (batchIds.isEmpty) return (0, 0L)
-    val newest = batchIds.max
-    val tmp = new Path(p.getParent,
-      p.getName + s"-compact-${java.util.UUID.randomUUID}")
-    val folded = project(spark.read.parquet(dir)
-      .filter(col("_batch") =!= newest).drop("_batch"))
-    (if (partitionCols.nonEmpty)
-       folded.repartition(partitionCols.map(col): _*) // one file per dir
-     else folded)
-      .write.partitionBy(partitionCols: _*)
-      .parquet(new Path(tmp, "_batch=-1").toString)
-    // COPY (not move) the newest partition into the staged layout: a
-    // crash before the swap must leave the live state complete
-    if (!org.apache.hadoop.fs.FileUtil.copy(fs,
-        new Path(p, s"_batch=$newest"), fs,
-        new Path(tmp, s"_batch=$newest"), false,
-        spark.sessionState.newHadoopConf()))
-      throw new java.io.IOException(
-        s"could not carry newest batch over for $dir")
-    val rows = spark.read.parquet(tmp.toString).count()
-    val aside = new Path(p.getParent, p.getName + ".old")
-    fs.delete(aside, true)
-    if (!fs.rename(p, aside))
-      throw new java.io.IOException(s"compaction aside failed for $dir")
-    if (!fs.rename(tmp, p)) {
-      fs.rename(aside, p) // restore — no data lost
-      fs.delete(tmp, true)
-      throw new java.io.IOException(s"compaction swap failed for $dir")
-    }
-    fs.delete(aside, true)
-    (dirs.length, rows)
+    val p = Paths.get(dir).toAbsolutePath
+    recover(dir)
+    val dirs = batchDirs(dir)
+    if (dirs.isEmpty) return (0, 0L)
+    val newest = dirs.map(_.getFileName.toString.stripPrefix("_batch=")
+      .toLong).max
+    // the unit is the whole dir, so its staging lives beside it
+    val tmp = Commit.stage(p.getParent)
+    try {
+      val folded = project(spark.read.parquet(dir)
+        .filter(col("_batch") =!= newest).drop("_batch"))
+      (if (partitionCols.nonEmpty)
+         folded.repartition(partitionCols.map(col): _*) // one file per dir
+       else folded)
+        .write.partitionBy(partitionCols: _*)
+        .parquet(tmp.resolve("_batch=-1").toString)
+      // COPY (not move) the newest partition into the staged layout: a
+      // crash before the swap must leave the live state complete
+      val src = p.resolve(s"_batch=$newest")
+      val st = Files.walk(src)
+      try st.forEach(f =>
+        Files.copy(f, tmp.resolve(s"_batch=$newest")
+          .resolve(src.relativize(f).toString)))
+      finally st.close()
+      val rows = spark.read.parquet(tmp.toString).count()
+      Commit.swap(p, tmp)
+      (dirs.length, rows)
+    } finally Commit.deleteRecursively(tmp)
   }
 
-  /** Heal compactState's crash window: a death between the two swap
-    * renames leaves the state only in `<state>.old`. If the live dir
-    * is missing but the aside exists, restore it; if both exist the
-    * swap completed and the aside is dropped. Idempotent. */
-  def repairState(spark: SparkSession, stateDir: String): Unit = {
-    val p = new Path(stateDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val aside = new Path(p.getParent, p.getName + ".old")
-    if (fs.exists(aside)) {
-      if (!fs.exists(p)) {
-        if (!fs.rename(aside, p))
-          throw new java.io.IOException(s"state restore failed for $stateDir")
-      } else fs.delete(aside, true)
-    }
-    // a crashed compaction or layout migration also strands its staged
-    // copy — both only run from the state's single writer, so any
-    // -compact-* / -migrate-* dir seen here is stale garbage
-    if (fs.exists(p.getParent)) fs.listStatus(p.getParent).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith(p.getName + "-compact-") ||
-          n.startsWith(p.getName + "-migrate-"))
-        fs.delete(st.getPath, true)
-    }
+  /** Settle a crashed swap of the state/kept dir `dir` (its aside sits
+    * beside it) or of a batch dir inside it, and sweep stale staging. */
+  private[graft] def recover(dir: String): Unit = {
+    val p = Paths.get(dir).toAbsolutePath
+    Commit.recover(p.getParent)
+    Commit.recover(p)
   }
+
+  /** The `_batch=N` dirs under `dir`. */
+  private def batchDirs(dir: String): Seq[Path] =
+    Commit.list(Paths.get(dir)).filter(d => Files.isDirectory(d) &&
+      d.getFileName.toString.startsWith("_batch="))
 
   /** Drain everything pending from `docs` (a streaming frame with
     * doc_id/text) through the near-dup filter and stop. A long-lived

@@ -1,6 +1,8 @@
 package graft.text
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
+
+import graft.etl.Commit
 
 /** Shared recipe for materialized derived-data artifacts (the overlap
   * index, the minhash pair set, the duplicate-cluster labels): a
@@ -21,15 +23,11 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   *      group that leaves the footer intact — no engine-level check
   *      catches that without hashing every byte of a 100 TB input.
   *
-  *   2. '''Atomic build-once materialization.''' [[materialize]] builds
-  *      into a unique `._tmp-*` sibling and atomically renames it into
-  *      place, so a crashed build is invisible and a concurrent reader
-  *      either sees the complete artifact or builds its own. Losing a
-  *      rename race (the target appeared first) is SUCCESS — the
-  *      winner's artifact is byte-equivalent by construction. On Linux
-  *      that race surfaces as DirectoryNotEmptyException or a bare
-  *      FileSystemException, not only FileAlreadyExistsException, so
-  *      the catch spans FileSystemException and re-checks the target.
+  *   2. '''Atomic build-once materialization.''' [[materialize]]
+  *      publishes through [[graft.etl.Commit]]: a crashed build is
+  *      invisible, and a concurrent reader either sees the complete
+  *      artifact or builds its own. Losing the race is SUCCESS — the
+  *      winner's artifact is byte-equivalent by construction.
   *
   * On a cluster the artifact root would live next to the curated
   * dataset (derived data, rebuilt by deleting the dir); here it keys
@@ -88,37 +86,21 @@ object Artifacts {
   // same-JVM builders of the same artifact serialize here instead of
   // racing the filesystem (Verify runs 4 queries concurrently, and
   // e.g. q82 and q108 both demand the pair set); cross-process races
-  // are handled by the unique tmp + rename semantics below
+  // are handled by Commit.claimOnce
   private val locks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Ensure `target` exists: build into a unique tmp sibling via
-    * `build`, then atomically rename into place. No-op when the
-    * artifact already exists; losing a concurrent race uses the
-    * winner's artifact. */
+  /** Ensure `target` exists: build it into staging via `build`, then
+    * [[graft.etl.Commit.claimOnce]] it. No-op when the artifact already
+    * exists; losing a concurrent race keeps the winner's artifact. */
   def materialize(target: Path)(build: Path => Unit): Unit = {
     val lock = locks.computeIfAbsent(target.toString, _ => new Object)
     lock.synchronized {
       if (Files.isDirectory(target)) return
-      val tmp = Paths.get(
-        target.toString + "._tmp-" + java.util.UUID.randomUUID)
+      Commit.recover(target.getParent)
+      val tmp = Commit.stage(target.getParent)
       build(tmp)
-      Files.createDirectories(target.getParent)
-      try Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
-      catch {
-        case e: java.nio.file.FileSystemException =>
-          // AccessDenied / DirectoryNotEmpty / FileAlreadyExists /
-          // bare FileSystemException: all mean "could not claim the
-          // target" — fine iff a concurrent builder claimed it
-          deleteRecursively(tmp)
-          if (!Files.isDirectory(target)) throw e
-      }
+      Commit.claimOnce(target, tmp)
     }
   }
-
-  def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.deleteIfExists(f))
-    }
 }

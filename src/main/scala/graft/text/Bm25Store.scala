@@ -1,9 +1,11 @@
 package graft.text
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.etl.Commit
 
 /** Mutable BM25 posting store — incremental maintenance for the text-
   * retrieval index, completing the ingest-store triple beside
@@ -57,35 +59,19 @@ object Bm25Store {
   /** Posting-bucket count recorded at [[init]]; `None` pre-sidecar
     * (never the case for stores this object wrote — init always
     * records it). */
-  def metaOf(dir: String): Option[Int] = {
-    val p = metaPath(dir)
-    if (!Files.isRegularFile(p)) None
-    else {
-      val props = new java.util.Properties()
-      val in = Files.newInputStream(p)
-      try props.load(in) finally in.close()
-      Option(props.getProperty("buckets")).map(_.trim.toInt)
-    }
-  }
-
-  private def writeMeta(dir: String, buckets: Int): Unit = {
-    Files.createDirectories(Paths.get(dir))
-    val tmp = Paths.get(dir, s"_meta.tmp${System.nanoTime()}")
-    val out = Files.newOutputStream(tmp)
-    try {
-      val props = new java.util.Properties()
-      props.setProperty("buckets", buckets.toString)
-      props.store(out, "graft Bm25Store meta")
-    } finally out.close()
-    Files.move(tmp, metaPath(dir),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
+  def metaOf(dir: String): Option[Int] =
+    Commit.readProps(metaPath(dir)).get("buckets").map(_.trim.toInt)
 
   private def checkedBuckets(dir: String): Int =
     metaOf(dir).getOrElse(throw new IllegalStateException(
       s"Bm25Store at $dir carries no _meta sidecar — not a store " +
         "this object initialized"))
+
+  /** The writer paths' [[Commit.recover]]: settle interrupted bucket
+    * swaps and sweep stale staging before reading. */
+  private[graft] def recover(dir: String): Unit =
+    Seq(dir, postingsPath(dir), doclensPath(dir))
+      .foreach(p => Commit.recover(Paths.get(p)))
 
   /** Driver-side twin of the `_tb` partition expression (md5Hash60 %
     * buckets) — builds the partition-pruning literal from a collected
@@ -128,7 +114,7 @@ object Bm25Store {
       .parquet(postingsPath(storeDir))
     doclens.write.mode("overwrite").partitionBy("_db")
       .parquet(doclensPath(storeDir))
-    writeMeta(storeDir, buckets)
+    Commit.writeProps(metaPath(storeDir), "buckets" -> buckets.toString)
   }
 
   /** What a fold did. */
@@ -139,6 +125,7 @@ object Bm25Store {
     * `_db=` partitions — no existing file is read or rewritten. */
   def fold(s: SparkSession, storeDir: String, docs: DataFrame): FoldStats = {
     val buckets = checkedBuckets(storeDir)
+    recover(storeDir)
     val (postings, doclens) = indexRows(docs, buckets)
     val p = postings.persist()
     try {
@@ -159,7 +146,7 @@ object Bm25Store {
     * contract — the streaming ingest path
     * ([[graft.streaming.Bm25Ingest]]): every file this batch lands in
     * either table carries a `seg-b<id>-` name prefix, and the fold
-    * first sweeps that prefix from ALL partition dirs, then copies its
+    * first sweeps that prefix from ALL partition dirs, then swaps its
     * staged parts in — a replay REPLACES its own output instead of
     * appending beside it (the [[graft.similarity.VectorStore.foldBatch]]
     * discipline, applied to both the `_tb` postings and the `_db`
@@ -168,75 +155,24 @@ object Bm25Store {
                 batchId: Long): FoldStats = {
     val buckets = checkedBuckets(storeDir)
     val (postings, doclens) = indexRows(docs, buckets)
-    // sweep BOTH tables even for an empty batch: a previous non-empty
-    // attempt of this id may have crashed mid-write
-    sweepBatch(postingsPath(storeDir), "_tb", batchId)
-    sweepBatch(doclensPath(storeDir), "_db", batchId)
+    // sweep BOTH tables even for an empty batch: a previous
+    // non-empty attempt of this id may have crashed mid-write
+    recover(storeDir)
+    LabelStore.sweepBatch(postingsPath(storeDir), "_tb", batchId)
+    LabelStore.sweepBatch(doclensPath(storeDir), "_db", batchId)
     val p = postings.persist()
+    val dlf = doclens.persist()
     try {
-      val nPost = stagedAppend(s, p, postingsPath(storeDir), "_tb", batchId)
-      val nDocs = stagedAppend(s, doclens, doclensPath(storeDir), "_db",
-        batchId)
+      val nPost = p.count()
+      val nDocs = dlf.count()
+      if (nPost > 0)
+        LabelStore.landBatch(storeDir, p, postingsPath(storeDir), "_tb",
+          batchId)
+      if (nDocs > 0)
+        LabelStore.landBatch(storeDir, dlf, doclensPath(storeDir), "_db",
+          batchId)
       FoldStats(nDocs, nPost)
-    } finally p.unpersist(false)
-  }
-
-  /** Stage `rows` partitioned by `partCol`, then copy each part file
-    * into the live partition dir under a deterministic
-    * `seg-b<id>-p<idx>` name (replays land the same names). Returns
-    * the row count. */
-  private def stagedAppend(s: SparkSession, rows: DataFrame,
-                           tablePath: String, partCol: String,
-                           batchId: Long): Long = {
-    val n = rows.count()
-    if (n == 0) return 0L
-    val tmp = Files.createTempDirectory("graft-bm25fold")
-    try {
-      rows.repartition(col(partCol)).write.mode("overwrite")
-        .partitionBy(partCol).parquet(tmp.resolve("st").toString)
-      val st = Files.list(tmp.resolve("st"))
-      try {
-        import scala.jdk.CollectionConverters._
-        st.iterator().asScala
-          .filter(_.getFileName.toString.startsWith(s"$partCol="))
-          .foreach { src =>
-            val dst = Paths.get(tablePath, src.getFileName.toString)
-            Files.createDirectories(dst)
-            val partIdx = "part-(\\d+)".r
-            val parts = Files.list(src)
-            try parts.iterator().asScala
-              .filter(_.getFileName.toString.startsWith("part-"))
-              .foreach { f =>
-                val idx = partIdx.findFirstMatchIn(f.getFileName.toString)
-                  .map(_.group(1)).getOrElse("0")
-                Files.copy(f, dst.resolve(s"seg-b$batchId-p$idx.parquet"),
-                  java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-              }
-            finally parts.close()
-          }
-      } finally st.close()
-      n
-    } finally Artifacts.deleteRecursively(tmp)
-  }
-
-  /** Remove every file batch `batchId` previously landed in
-    * `tablePath` (replay / crash healing — see [[foldBatch]]). */
-  private def sweepBatch(tablePath: String, partCol: String,
-                         batchId: Long): Unit = {
-    val root = Paths.get(tablePath)
-    if (!Files.isDirectory(root)) return
-    val dirs = Files.list(root)
-    try {
-      import scala.jdk.CollectionConverters._
-      dirs.iterator().asScala
-        .filter(_.getFileName.toString.startsWith(s"$partCol=")).foreach { d =>
-          val fs = Files.list(d)
-          try fs.iterator().asScala
-            .filter(_.getFileName.toString.startsWith(s"seg-b$batchId-"))
-            .foreach(Files.delete)
-          finally fs.close()
-        }
-    } finally dirs.close()
+    } finally { p.unpersist(false); dlf.unpersist(false) }
   }
 
   /** The raw postings (t, doc_id, tf, dl, _tb). */
@@ -283,6 +219,7 @@ object Bm25Store {
     * ids' `_db` buckets. Stats self-heal (they derive from doclens). */
   def forget(s: SparkSession, storeDir: String, ids: DataFrame): ForgetStats = {
     val buckets = checkedBuckets(storeDir)
+    recover(storeDir)
     val d = ids.select(col("doc_id")).distinct().persist()
     try {
       // partition values read back with an inferred integral type —
@@ -305,13 +242,13 @@ object Bm25Store {
       val dbHit = longsOf(dHit.select(col("_db")).distinct())
       val keepD = dlAll.filter(col("_db").isin(dbHit: _*))
         .join(broadcast(d), Seq("doc_id"), "left_anti")
-      val tmp = Files.createTempDirectory("graft-bm25forget")
+      val tmp = Commit.stage(Paths.get(storeDir))
       try {
         LabelStore.rewritePartitions(s, postingsPath(storeDir),
           "_tb", hit, keepP, tmp.resolve("p"))
         LabelStore.rewritePartitions(s, doclensPath(storeDir),
           "_db", dbHit, keepD, tmp.resolve("d"))
-      } finally Artifacts.deleteRecursively(tmp)
+      } finally Commit.deleteRecursively(tmp)
       ForgetStats(removed, hit.size)
     } finally d.unpersist(false)
   }

@@ -388,7 +388,7 @@ object DedupIndexes {
   * Artifact note: the content-keyed [[Artifacts]] store is immutable
   * per dataset fingerprint (a changed dataset is a different key), so
   * a production deployment lands updated structures as
-  * [[graft.etl.VersionedDir]] publications per ingest batch. */
+  * [[graft.etl.Commit]] publications per ingest batch. */
 object IncrementalDedup {
   import org.apache.spark.sql.functions._
 

@@ -5,6 +5,8 @@ import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.etl.Commit
+
 /** Hash-partitioned, incrementally-foldable publication store for the
   * dedup LABEL and PAIR structures — the write half of the
   * incremental-dedup story finished (r13).
@@ -68,15 +70,13 @@ import org.apache.spark.sql.functions._
   *     the touched-rep set (≤ |batch pair endpoints| — batch-scale,
   *     the same class as the probe's bucket collect).
   *
-  * Publication semantics: every write stages next to the table and
-  * lands by directory swap (delete-then-move — a bucket whose content
-  * merges away is REMOVED, the case dynamic partition overwrite
-  * silently gets wrong) or by moving uniquely-named part files into
-  * `_delta/`. The sequence is per-directory, not transactional; a
-  * production deployment would wrap the same partition math in a
-  * manifest/versioned publication ([[graft.etl.VersionedDir]]'s
-  * discipline) — the INCREMENTAL-IO math, which is what the 100 TB
-  * argument needs, is identical.
+  * Publication follows [[graft.etl.Commit]]: every write stages in
+  * the store root and lands by per-bucket swap (a bucket whose
+  * content merges away is REMOVED, the case dynamic partition
+  * overwrite silently gets wrong), by swapping in uniquely-named
+  * segment files under `_delta/`, or by swapping a re-segmented
+  * `_delta/` whole. Atomicity is per bucket, file or delta dir, not
+  * per fold.
   *
   * Correctness is pinned three ways (LabelStoreSpec): the folded
   * store is row-identical to [[IncrementalDedup.updatedLabels]]'s
@@ -106,11 +106,10 @@ object LabelStore {
   /** The generation all reads and mutations act on: the highest `v<N>`
     * subdir once a RE-publish has claimed one, else the store root
     * itself (the base layout the FIRST publish writes — pre-generation
-    * stores keep working unchanged). The [[graft.etl.VersionedDir]]
-    * claim idiom, as [[graft.similarity.VectorStore]] uses for
-    * retrain. */
+    * stores keep working unchanged). [[Commit.claim]], as
+    * [[graft.similarity.VectorStore]] uses for retrain. */
   private def genRoot(dir: String): String = {
-    val v = graft.etl.VersionedDir.latestVersion(Paths.get(dir))
+    val v = Commit.latestVersion(Paths.get(dir))
     if (v > 0) s"$dir/v$v" else dir
   }
 
@@ -144,37 +143,19 @@ object LabelStore {
           "publish, then retry against the new generation.")
   }
 
-  /** Delete orphaned `._stage-*` re-publish staging dirs (a crash
-    * between the staged write and the atomic claim leaks one). */
-  private def sweepStage(root: Path): Unit =
-    graft.etl.VersionedDir.sweep(root, "._stage-")
+  /** The writer paths' [[Commit.recover]] over the store root, the
+    * resolved generation and its three tables. */
+  private[graft] def recover(storeDir: String): Unit = {
+    val dir = genRoot(storeDir)
+    Seq(storeDir, dir, byRepPath(dir), byDocPath(dir), pairsPath(dir))
+      .distinct.foreach(p => Commit.recover(Paths.get(p)))
+  }
 
   /** The bucket count this store was published with, from the `_meta`
     * sidecar ([[publish]] writes it). `None` on a pre-sidecar store. */
-  def bucketsOf(storeDir: String): Option[Int] = {
-    val p = metaPath(genRoot(storeDir))
-    if (!Files.isRegularFile(p)) None
-    else {
-      val props = new java.util.Properties()
-      val in = Files.newInputStream(p)
-      try props.load(in) finally in.close()
-      Option(props.getProperty("buckets")).map(_.trim.toInt)
-    }
-  }
-
-  private def writeMeta(dir: String, buckets: Int): Unit = {
-    Files.createDirectories(Paths.get(dir))
-    val tmp = Paths.get(dir, s"_meta.tmp${System.nanoTime()}")
-    val out = Files.newOutputStream(tmp)
-    try {
-      val props = new java.util.Properties()
-      props.setProperty("buckets", buckets.toString)
-      props.store(out, "graft LabelStore meta")
-    } finally out.close()
-    Files.move(tmp, metaPath(dir),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
+  def bucketsOf(storeDir: String): Option[Int] =
+    Commit.readProps(metaPath(genRoot(storeDir))).get("buckets")
+      .map(_.trim.toInt)
 
   /** Fail fast when the caller's bucket count disagrees with the
     * store's recorded one — a silent mismatch corrupts invisibly
@@ -188,21 +169,6 @@ object LabelStore {
           s"the caller passed buckets=$buckets — bucket-keyed partition " +
           "pruning would silently read the wrong dirs")
     }
-
-  /** Operational phase timing, off unless `-Dgraft.labelstore.debug`
-    * (or env `GRAFT_LABELSTORE_DEBUG` — sbt forks the run JVM) — the
-    * fold is an orchestration of ~a dozen bounded jobs, and when its
-    * wall time surprises, the question is always WHICH one. */
-  private def timed[T](phase: String)(f: => T): T = {
-    if (!sys.props.contains("graft.labelstore.debug") &&
-        !sys.env.contains("GRAFT_LABELSTORE_DEBUG")) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[labelstore] $phase%-14s ${(System.nanoTime() - t0) / 1e9}%6.2fs")
-      r
-    }
-  }
 
   private val labelSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("doc_id",
@@ -250,7 +216,7 @@ object LabelStore {
       schema: org.apache.spark.sql.types.StructType): DataFrame = {
     val p = Paths.get(deltaPath(tablePath))
     if (!Files.isDirectory(p)) emptyFrame(s, schema)
-    else s.read.parquet(p.toString)
+    else s.read.schema(schema).parquet(p.toString)
   }
 
   /** Publication: `labels` (doc_id, rep) and `pairs` (da, db) written
@@ -267,11 +233,9 @@ object LabelStore {
     * that already holds data NEVER overwrites in place — a crash
     * mid-overwrite would leave mixed-modulus tables that pre-sidecar
     * trust then reads with silent mis-pruning. It stages the complete
-    * new layout (three tables + `_meta`) under `._stage-<uuid>` and
-    * claims the next `v<N>` generation with one atomic rename (the
-    * [[graft.etl.VersionedDir]] / `VectorStore.retrain` idiom): a
-    * crash before the claim changes nothing readers can see, and every
-    * entry point resolves the highest complete generation. Old
+    * new layout (three tables + `_meta`) and claims the next `v<N>`
+    * generation ([[Commit.claim]], as `VectorStore.retrain` does):
+    * every entry point resolves the highest complete generation. Old
     * generations stay on disk for in-flight readers; [[pruneGenerations]]
     * drops them once drained. */
   def publish(labels: DataFrame, pairs: DataFrame, dir: String,
@@ -283,11 +247,10 @@ object LabelStore {
       Files.isRegularFile(metaPath(current))
     if (!hasData) publishInto(labels, pairs, dir, buckets)
     else {
-      Files.createDirectories(root)
-      sweepStage(root)
-      val stage = root.resolve("._stage-" + java.util.UUID.randomUUID)
+      Commit.recover(root)
+      val stage = Commit.stage(root)
       publishInto(labels, pairs, stage.toString, buckets)
-      graft.etl.VersionedDir.claim(root, stage)
+      Commit.claim(root, stage)
       ()
     }
   }
@@ -297,7 +260,7 @@ object LabelStore {
     * the root-level BASE layout of a since-superseded store is left in
     * place — it is generation "v0" and harmless). */
   def pruneGenerations(dir: String, keep: Int = 2): Unit =
-    graft.etl.VersionedDir.prune(dir, keep)
+    Commit.prune(Paths.get(dir), keep)
 
   private def publishInto(labels: DataFrame, pairs: DataFrame,
                           dst: String, buckets: Int): Unit = {
@@ -317,7 +280,7 @@ object LabelStore {
       .write.mode("overwrite").partitionBy("_cb").parquet(pairsPath(dst))
     // LAST, after all three data tables: a crash above leaves a
     // sidecar-less stage/base that is never claimed / trusted wholesale
-    writeMeta(dst, buckets)
+    Commit.writeProps(metaPath(dst), "buckets" -> buckets.toString)
   }
 
   /** The converged (doc_id, rep) labels — the [[ClusterIndex]]
@@ -357,6 +320,7 @@ object LabelStore {
   def fold(s: SparkSession, storeDir: String, buckets: Int,
            newPairs: DataFrame): FoldStats = {
     require(buckets >= 1)
+    recover(storeDir)
     val dir = genRoot(storeDir)
     checkBuckets(dir, buckets)
     val b = lit(buckets.toLong)
@@ -375,13 +339,12 @@ object LabelStore {
       // batch-scale) both prune the rep-keyed reads AND stay STABLE
       // while those tables' directories are swapped underneath (a
       // lazy frame re-reading byDoc mid-swap would race its own fold)
-      val touchedRepVals = timed("touchedReps") {
+      val touchedRepVals =
         readBuckets(s, byDocPath(dir), "_db", epBuckets, labelSchema)
           .drop("_db")
           .unionByName(readDelta(s, byDocPath(dir), labelSchema))
           .join(broadcast(endpoints), Seq("doc_id"))
           .select(col("rep")).distinct().collect().map(_.getLong(0)).toSeq
-      }
       val trBuckets = touchedRepVals.map(r =>
         ((r % buckets) + buckets) % buckets).distinct
       val touchedReps = {
@@ -406,15 +369,13 @@ object LabelStore {
       // re-converge ONLY (affected ∪ new); materialize the sub-labels
       // AND the additions outside the propagation's CPS scope and
       // BEFORE any directory mutation (they read store paths)
-      val tmp = Files.createTempDirectory("graft-labelfold")
+      val tmp = Commit.stage(Paths.get(storeDir))
       try {
         val subPath = tmp.resolve("sub").toString
-        timed("reconverge") {
-          CurationQueries.withDupClusterLabels(s,
-            affected.unionByName(np)) { sub =>
-            sub.select(col("doc_id"), col("rep"))
-              .write.mode("overwrite").parquet(subPath)
-          }
+        CurationQueries.withDupClusterLabels(s,
+          affected.unionByName(np)) { sub =>
+          sub.select(col("doc_id"), col("rep"))
+            .write.mode("overwrite").parquet(subPath)
         }
         val sub = s.read.parquet(subPath)
         // THE DELTA: rows the fold actually changes. A fold only ever
@@ -423,22 +384,19 @@ object LabelStore {
         // every row that must land. A batch that merely extends
         // components (no merge) makes this batch-scale.
         val additionsPath = tmp.resolve("additions").toString
-        timed("delta") {
-          sub.join(oldTouched, Seq("doc_id", "rep"), "left_anti")
-            .write.mode("overwrite").parquet(additionsPath)
-        }
+        sub.join(oldTouched, Seq("doc_id", "rep"), "left_anti")
+          .write.mode("overwrite").parquet(additionsPath)
         val additions = s.read.parquet(additionsPath)
         // old reps whose component MERGED into a new rep: their rows
         // (and their pairs) are the REMOVALS — the only thing that
         // forces base-bucket rewrites. The old rep doc is itself a
         // member, so its sub row names the new rep. Bounded by
         // |touchedReps| — batch-scale.
-        val changedOldReps = timed("changedReps") {
+        val changedOldReps =
           sub.join(broadcast(touchedReps
               .withColumnRenamed("rep", "doc_id")), Seq("doc_id"))
             .filter(col("rep") =!= col("doc_id"))
             .select(col("doc_id")).collect().map(_.getLong(0)).toSeq
-        }
         val changedReps = {
           import s.implicits._
           s.createDataset(changedOldReps).toDF("rep")
@@ -449,15 +407,13 @@ object LabelStore {
         // byDoc removals = old rows of docs whose label changed —
         // exactly additions ∩ oldTouched (a doc's rep changes only
         // when its whole old component merges). Merge-scale.
-        val updatedDocBuckets =
-          if (!hasMerges) Seq.empty[Long]
-          else timed("updatedDocs") {
+        val updatedDocBuckets = if (!hasMerges) Seq.empty[Long]
+          else
             additions.select(col("doc_id"))
               .join(oldTouched.select(col("doc_id")), Seq("doc_id"),
                 "left_semi")
               .select(pmod(col("doc_id"), b).as("v"))
               .distinct().collect().map(_.getLong(0)).toSeq
-          }
 
         // ── stage everything BEFORE mutating any directory ──
         // pairs to MOVE (their component merged): base changed
@@ -470,18 +426,13 @@ object LabelStore {
         val newTagged = movedPairs.unionByName(np)
           .join(sub.select(col("doc_id").as("da"), col("rep")), Seq("da"))
           .select(col("da"), col("db"), col("rep"))
-        val pairApp = timed("stage:pairs") {
-          stageFlat(s, newTagged, tmp.resolve("appPairs"))
-        }
+        val pairApp = stageFlat(s, newTagged, tmp.resolve("appPairs"))
         // the byRep and byDoc deltas carry IDENTICAL rows — stage
         // once, land twice (bytes honestly counted per table)
-        val labelApp = timed("stage:labels") {
-          stageFlat(s, additions, tmp.resolve("appLabels"))
-        }
+        val labelApp = stageFlat(s, additions, tmp.resolve("appLabels"))
         // delta re-segments: only merges remove rows from deltas
-        val deltaKeeps =
-          if (!hasMerges) Nil
-          else timed("stage:deltas") {
+        val deltaKeeps = if (!hasMerges) Nil
+          else
             Seq(
               (byRepPath(dir), stageFlat(s,
                 readDelta(s, byRepPath(dir), labelSchema)
@@ -496,7 +447,6 @@ object LabelStore {
                 readDelta(s, pairsPath(dir), pairSchema)
                   .join(broadcast(changedReps), Seq("rep"), "left_anti"),
                 tmp.resolve("dkPairs"), countRows = false)))
-          }
 
         // ── base-bucket rewrites: merged-away rows out (merge-scale;
         // the common merge-free fold swaps NOTHING) ──
@@ -505,52 +455,35 @@ object LabelStore {
             changedBuckets, labelSchema).drop("_cb")
           .join(broadcast(changedReps), Seq("rep"), "left_anti")
           .withColumn("_cb", pmod(col("rep"), b))
-        val repSwapBytes = timed("swap:rep") {
+        val repSwapBytes =
           rewritePartitions(s, byRepPath(dir), "_cb", changedBuckets,
             keepRep, tmp.resolve("stageRep"))
-        }
         val keepDoc = readBuckets(s, byDocPath(dir), "_db",
             updatedDocBuckets, labelSchema).drop("_db")
           .join(additions.select(col("doc_id")), Seq("doc_id"),
             "left_anti")
           .withColumn("_db", pmod(col("doc_id"), b))
-        val docSwapBytes = timed("swap:doc") {
+        val docSwapBytes =
           rewritePartitions(s, byDocPath(dir), "_db", updatedDocBuckets,
             keepDoc, tmp.resolve("stageDoc"))
-        }
         val keepPairs = readBuckets(s, pairsPath(dir), "_cb",
             changedBuckets, pairSchema).drop("_cb")
           .join(broadcast(changedReps), Seq("rep"), "left_anti")
           .withColumn("_cb", pmod(col("rep"), b))
-        val pairSwapBytes = timed("swap:pairs") {
+        val pairSwapBytes =
           rewritePartitions(s, pairsPath(dir), "_cb", changedBuckets,
             keepPairs, tmp.resolve("stagePairs"))
-        }
 
         // ── land the deltas: re-segment (merges), then append ──
-        val deltaBytes = timed("land:delta") {
-          deltaKeeps.map { case (table, (bytes, _)) =>
-            Artifacts.deleteRecursively(Paths.get(deltaPath(table)))
-            bytes
-          }.sum
-        }
-        if (hasMerges) {
-          moveParts(tmp.resolve("dkRep"), deltaPath(byRepPath(dir)))
-          moveParts(tmp.resolve("dkDoc"), deltaPath(byDocPath(dir)))
-          moveParts(tmp.resolve("dkPairs"), deltaPath(pairsPath(dir)))
-        }
-        val appendBytes = timed("land:append") {
-          copyParts(tmp.resolve("appLabels"), deltaPath(byRepPath(dir))) +
-            copyParts(tmp.resolve("appLabels"), deltaPath(byDocPath(dir))) +
-            copyParts(tmp.resolve("appPairs"), deltaPath(pairsPath(dir)))
-        }
+        val deltaBytes = deltaKeeps.map(_._2._1).sum
+        val appendBytes = landDeltas(dir, tmp, resegment = hasMerges)
 
         FoldStats(nNew, touchedRepVals.size.toLong,
           labelApp._2, pairApp._2,
           changedBuckets.size, updatedDocBuckets.size,
           repSwapBytes + docSwapBytes + pairSwapBytes +
             deltaBytes + appendBytes)
-      } finally Artifacts.deleteRecursively(tmp)
+      } finally Commit.deleteRecursively(tmp)
     } finally np.unpersist(false)
   }
 
@@ -590,6 +523,7 @@ object LabelStore {
   def forget(s: SparkSession, storeDir: String, buckets: Int,
              docs: DataFrame): ForgetStats = {
     require(buckets >= 1)
+    recover(storeDir)
     val dir = genRoot(storeDir)
     checkBuckets(dir, buckets)
     val b = lit(buckets.toLong)
@@ -603,10 +537,9 @@ object LabelStore {
           labelSchema).drop("_db")
         .unionByName(readDelta(s, byDocPath(dir), labelSchema))
         .join(broadcast(d), Seq("doc_id"))
-      val touchedRepVals = timed("touchedReps") {
+      val touchedRepVals =
         dLabels.select(col("rep")).distinct()
           .collect().map(_.getLong(0)).toSeq
-      }
       if (touchedRepVals.isEmpty)
         return ForgetStats(nReq, 0L, 0L, 0L, 0L)
       val trBuckets = touchedRepVals.map(r =>
@@ -615,7 +548,7 @@ object LabelStore {
         import s.implicits._
         s.createDataset(touchedRepVals).toDF("rep")
       }
-      val tmp = Files.createTempDirectory("graft-labelforget")
+      val tmp = Commit.stage(Paths.get(storeDir))
       try {
         // ── stage phase: every store read lands in tmp before any
         // directory mutates ──
@@ -649,11 +582,9 @@ object LabelStore {
           .parquet(tmp.resolve("oldTouched").toString)
         val nLabeled = dLabels.count()
         val subPath = tmp.resolve("sub").toString
-        timed("reconverge") {
-          CurationQueries.withDupClusterLabels(s, rem) { sub =>
-            sub.select(col("doc_id"), col("rep"))
-              .write.mode("overwrite").parquet(subPath)
-          }
+        CurationQueries.withDupClusterLabels(s, rem) { sub =>
+          sub.select(col("doc_id"), col("rep"))
+            .write.mode("overwrite").parquet(subPath)
         }
         val sub = s.read.schema(labelSchema).parquet(subPath)
         val nComponents = sub.select(col("rep")).distinct().count()
@@ -663,14 +594,10 @@ object LabelStore {
         val newTagged = rem
           .join(sub.select(col("doc_id").as("da"), col("rep")), Seq("da"))
           .select(col("da"), col("db"), col("rep"))
-        timed("stage:labels") {
-          stageFlat(s, sub, tmp.resolve("appLabels"), countRows = false)
-        }
-        timed("stage:pairs") {
-          stageFlat(s, newTagged, tmp.resolve("appPairs"),
-            countRows = false)
-        }
-        val deltaKeeps = timed("stage:deltas") {
+        stageFlat(s, sub, tmp.resolve("appLabels"), countRows = false)
+        stageFlat(s, newTagged, tmp.resolve("appPairs"),
+          countRows = false)
+        val deltaKeeps =
           Seq(
             (byRepPath(dir), stageFlat(s,
               readDelta(s, byRepPath(dir), labelSchema)
@@ -685,7 +612,6 @@ object LabelStore {
               readDelta(s, pairsPath(dir), pairSchema)
                 .join(broadcast(touchedReps), Seq("rep"), "left_anti"),
               tmp.resolve("dkPairs"), countRows = false)))
-        }
 
         // ── mutate phase: base-bucket swaps (each rewritePartitions
         // call stages its own output before swapping), delta
@@ -695,44 +621,29 @@ object LabelStore {
             labelSchema).drop("_cb")
           .join(broadcast(touchedReps), Seq("rep"), "left_anti")
           .withColumn("_cb", pmod(col("rep"), b))
-        val repBytes = timed("swap:rep") {
+        val repBytes =
           rewritePartitions(s, byRepPath(dir), "_cb", trBuckets,
             keepRep, tmp.resolve("stageRep"))
-        }
         val keepDoc = readBuckets(s, byDocPath(dir), "_db",
             memberDocBuckets, labelSchema).drop("_db")
           .join(oldT.select(col("doc_id")), Seq("doc_id"), "left_anti")
           .withColumn("_db", pmod(col("doc_id"), b))
-        val docBytes = timed("swap:doc") {
+        val docBytes =
           rewritePartitions(s, byDocPath(dir), "_db", memberDocBuckets,
             keepDoc, tmp.resolve("stageDoc"))
-        }
         val keepPairs = readBuckets(s, pairsPath(dir), "_cb", trBuckets,
             pairSchema).drop("_cb")
           .join(broadcast(touchedReps), Seq("rep"), "left_anti")
           .withColumn("_cb", pmod(col("rep"), b))
-        val pairBytes = timed("swap:pairs") {
+        val pairBytes =
           rewritePartitions(s, pairsPath(dir), "_cb", trBuckets,
             keepPairs, tmp.resolve("stagePairs"))
-        }
-        val deltaBytes = timed("land:delta") {
-          deltaKeeps.map { case (table, (bytes, _)) =>
-            Artifacts.deleteRecursively(Paths.get(deltaPath(table)))
-            bytes
-          }.sum
-        }
-        moveParts(tmp.resolve("dkRep"), deltaPath(byRepPath(dir)))
-        moveParts(tmp.resolve("dkDoc"), deltaPath(byDocPath(dir)))
-        moveParts(tmp.resolve("dkPairs"), deltaPath(pairsPath(dir)))
-        val appendBytes = timed("land:append") {
-          copyParts(tmp.resolve("appLabels"), deltaPath(byRepPath(dir))) +
-            copyParts(tmp.resolve("appLabels"), deltaPath(byDocPath(dir))) +
-            copyParts(tmp.resolve("appPairs"), deltaPath(pairsPath(dir)))
-        }
+        val deltaBytes = deltaKeeps.map(_._2._1).sum
+        val appendBytes = landDeltas(dir, tmp, resegment = true)
         ForgetStats(nReq, nLabeled, touchedRepVals.size.toLong,
           nComponents,
           repBytes + docBytes + pairBytes + deltaBytes + appendBytes)
-      } finally Artifacts.deleteRecursively(tmp)
+      } finally Commit.deleteRecursively(tmp)
     } finally d.unpersist(false)
   }
 
@@ -747,47 +658,32 @@ object LabelStore {
       if (countRows) s.read.parquet(staging.toString).count() else -1L)
   }
 
-  /** Move the staged segment's part files into `dst` (unique Spark
-    * part names — no collisions). */
-  private def moveParts(staging: Path, dst: String): Unit = {
-    if (!Files.isDirectory(staging)) return
-    Files.createDirectories(Paths.get(dst))
-    val fs = Files.list(staging)
-    try {
-      import scala.jdk.CollectionConverters._
-      fs.iterator().asScala
-        .filter(f => f.getFileName.toString.startsWith("part-"))
-        .foreach(f => Files.move(f,
-          Paths.get(dst, f.getFileName.toString)))
-    } finally fs.close()
-  }
-
-  /** Copy (not move — the same staged segment lands in two tables)
-    * the part files into `dst`; returns bytes copied. The target name
-    * is salted with the destination's segment count so the byRep and
-    * byDoc copies of one fold never collide with each other or with
-    * earlier folds. */
-  private def copyParts(staging: Path, dst: String): Long = {
-    if (!Files.isDirectory(staging)) return 0L
-    Files.createDirectories(Paths.get(dst))
-    val salt = {
-      val ls = Files.list(Paths.get(dst))
-      try ls.count() finally ls.close()
-    }
-    var bytes = 0L
-    val fs = Files.list(staging)
-    try {
-      import scala.jdk.CollectionConverters._
-      fs.iterator().asScala
-        .filter(f => f.getFileName.toString.startsWith("part-"))
-        .foreach { f =>
-          val t = Paths.get(dst, s"seg$salt-${f.getFileName.toString}")
+  /** Land a fold's staged segments (`appLabels` into byRep and byDoc,
+    * `appPairs` into pairs) in each table's `_delta/`, copied under
+    * fresh `seg-<uuid>-` names (one segment lands in two tables).
+    * Without `resegment` each copy joins `_delta/` as a new file; with
+    * it, the copies join the staged re-segment of the old delta
+    * (`dkRep`/`dkDoc`/`dkPairs`) and that dir replaces `_delta/` whole.
+    * Returns the bytes copied. */
+  private def landDeltas(dir: String, tmp: Path, resegment: Boolean): Long =
+    Seq((byRepPath(dir), "appLabels", "dkRep"),
+      (byDocPath(dir), "appLabels", "dkDoc"),
+      (pairsPath(dir), "appPairs", "dkPairs")).map { case (table, app, dk) =>
+      val into = tmp.resolve(if (resegment) dk else "copies")
+      Files.createDirectories(into)
+      val copies = Commit.list(tmp.resolve(app))
+        .filter(_.getFileName.toString.startsWith("part-")).map { f =>
+          val t = into.resolve(
+            s"seg-${java.util.UUID.randomUUID}-${f.getFileName}")
           Files.copy(f, t)
-          bytes += Files.size(t)
+          t
         }
-    } finally fs.close()
-    bytes
-  }
+      val bytes = copies.map(Files.size).sum
+      val delta = Paths.get(deltaPath(table))
+      if (resegment) Commit.swap(delta, into)
+      else copies.foreach(t => Commit.swap(delta.resolve(t.getFileName), t))
+      bytes
+    }.sum
 
   /** Fold the delta segments back into the base bucket layout, one
     * file per partition — the amortization run the append trade
@@ -796,13 +692,14 @@ object LabelStore {
     * per fold. */
   def compact(s: SparkSession, storeDir: String, buckets: Int): Unit = {
     require(buckets >= 1)
+    recover(storeDir)
     val dir = genRoot(storeDir)
     checkBuckets(dir, buckets)
     Seq((byRepPath(dir), "_cb", "rep", labelSchema),
       (byDocPath(dir), "_db", "doc_id", labelSchema),
       (pairsPath(dir), "_cb", "rep", pairSchema))
       .foreach { case (path, partCol, keyCol, schema) =>
-        val tmp = Files.createTempDirectory("graft-labelcompact")
+        val tmp = Commit.stage(Paths.get(storeDir))
         try {
           // explicit schema (labels()/pairs()' own discipline): a
           // store whose base buckets were all forgotten away holds
@@ -813,22 +710,21 @@ object LabelStore {
             .withColumn(partCol, pmod(col(keyCol), lit(buckets.toLong)))
             .repartition(col(partCol))
             .write.mode("overwrite").partitionBy(partCol)
-            .parquet(tmp.resolve("t").toString)
-          val live = Paths.get(path)
+            .parquet(tmp.toString)
           checkGeneration(storeDir, dir)
-          Artifacts.deleteRecursively(live)
-          Files.createDirectories(live.getParent)
-          Files.move(tmp.resolve("t"), live)
-        } finally Artifacts.deleteRecursively(tmp)
+          Commit.swap(Paths.get(path), tmp)
+        } finally Commit.deleteRecursively(tmp)
       }
   }
 
   /** Stage `out` (whose `partCol` values must all lie in `bucketSet`)
-    * next to the table, then swap exactly the `bucketSet` partition
-    * dirs: delete-then-move, so a bucket with no staged rows (its
-    * whole content merged away) is REMOVED, not left stale. Returns
-    * the bytes written. Empty `bucketSet` short-circuits (the common
-    * merge-free fold never swaps at all). */
+    * at `staging` (a [[Commit.stage]] path of the store), then
+    * [[Commit.swap]] exactly the `bucketSet` partition dirs: a bucket
+    * with no staged rows (its whole content merged away) is REMOVED,
+    * not left stale. Returns the bytes written. Empty `bucketSet`
+    * short-circuits (the common merge-free fold never swaps at all).
+    * Shared by [[Bm25Store.forget]], [[graft.similarity.VectorStore
+    * .forget]] and [[graft.Curation.forgetBatch]]. */
   private[graft] def rewritePartitions(s: SparkSession, tablePath: String,
                                 partCol: String, bucketSet: Seq[Long],
                                 out: DataFrame, staging: Path): Long = {
@@ -836,18 +732,51 @@ object LabelStore {
     out.repartition(col(partCol))
       .write.mode("overwrite").partitionBy(partCol)
       .parquet(staging.toString)
-    var bytes = 0L
-    bucketSet.foreach { v =>
-      val dst = Paths.get(tablePath, s"$partCol=$v")
+    bucketSet.map { v =>
       val src = staging.resolve(s"$partCol=$v")
-      Artifacts.deleteRecursively(dst)
-      if (Files.exists(src)) {
-        bytes += dirBytes(src)
-        Files.move(src, dst)
-      }
-    }
-    bytes
+      val bytes = if (Files.exists(src)) dirBytes(src) else 0L
+      Commit.swap(Paths.get(tablePath, s"$partCol=$v"), src)
+      bytes
+    }.sum
   }
+
+  /** Land `rows` in `tablePath`'s `partCol=` dirs as files named
+    * `seg-b<batchId>-p<task>.parquet`: staged under `storeDir`, then
+    * each file [[Commit.swap]]ped in — a replay of the batch lands the
+    * same names. Returns the number of partition dirs touched. Shared
+    * by [[Bm25Store.foldBatch]] and [[graft.similarity.VectorStore
+    * .foldBatch]]. */
+  private[graft] def landBatch(storeDir: String, rows: DataFrame,
+                               tablePath: String, partCol: String,
+                               batchId: Long): Int = {
+    val tmp = Commit.stage(Paths.get(storeDir))
+    try {
+      rows.repartition(col(partCol)).write.mode("overwrite")
+        .partitionBy(partCol).parquet(tmp.toString)
+      val partIdx = "part-(\\d+)".r
+      Commit.list(tmp).filter(_.getFileName.toString.startsWith(s"$partCol="))
+        .map { src =>
+          val dst = Paths.get(tablePath, src.getFileName.toString)
+          Commit.list(src).filter(_.getFileName.toString.startsWith("part-"))
+            .foreach { f =>
+              val idx = partIdx.findFirstMatchIn(f.getFileName.toString)
+                .map(_.group(1)).getOrElse("0")
+              Commit.swap(dst.resolve(s"seg-b$batchId-p$idx.parquet"), f)
+            }
+          1
+        }.sum
+    } finally Commit.deleteRecursively(tmp)
+  }
+
+  /** Remove every file batch `batchId` landed by [[landBatch]] (replay
+    * and crash healing: the replay lands its files afresh). */
+  private[graft] def sweepBatch(tablePath: String, partCol: String,
+                                batchId: Long): Unit =
+    Commit.list(Paths.get(tablePath))
+      .filter(_.getFileName.toString.startsWith(s"$partCol="))
+      .flatMap(Commit.list)
+      .filter(_.getFileName.toString.startsWith(s"seg-b$batchId-"))
+      .foreach(Files.delete)
 
   /** Total file bytes under a directory. */
   private[graft] def dirBytes(p: Path): Long = {

@@ -27,10 +27,9 @@ import TextFunctions.shingles
   *
   * On a cluster the artifact directory would live next to the curated
   * dataset (it is derived data, rebuilt by deleting the dir); here it
-  * keys on the dataset path under java.io.tmpdir. Writes go to a
-  * `._tmp` sibling then atomically rename, so a crashed build is
-  * invisible (the SilverStore `_tmp` discipline) and a concurrent
-  * reader either sees the complete index or rebuilds.
+  * keys on the dataset path under java.io.tmpdir. Writes publish
+  * through [[graft.etl.Commit]], so a crashed build is invisible and a
+  * concurrent reader either sees the complete index or rebuilds.
   */
 object OverlapIndex {
 

@@ -61,7 +61,7 @@ object Bm25StoreBench {
         Bm25Store.scored(spark, dir, q0).count())
       println(f"[bm25bench] $m%3d | $tInit%7.2f | $tFold%6.2f | " +
         f"${st.postingsAdded}%15d | $tSearch%8.2f | $hits%d")
-      graft.text.Artifacts.deleteRecursively(java.nio.file.Paths.get(dir))
+      graft.etl.Commit.deleteRecursively(java.nio.file.Paths.get(dir))
     }
     spark.stop()
   }

@@ -25,6 +25,6 @@ object DedupBuildBench {
       }
     }
     s.stop()
-    Artifacts.deleteRecursively(root)
+    graft.etl.Commit.deleteRecursively(root)
   }
 }

@@ -111,7 +111,7 @@ object DeltaServeBench {
       println(f"$c%8d ${c * k}%9d $edges%10d $buckets%5d " +
         f"$tDelta%7.2fs $tFull%7.2fs ${tFull / tDelta}%9.1fx $mode%6s")
     }
-    graft.text.Artifacts.deleteRecursively(tmp)
+    graft.etl.Commit.deleteRecursively(tmp)
     s.stop()
   }
 }

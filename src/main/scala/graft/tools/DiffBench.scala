@@ -146,7 +146,7 @@ object DiffBench {
         f"changed=${stats.changed}%-5d added=${stats.added}%-4d " +
         f"removed=${stats.removed}%d")
     }
-    graft.text.Artifacts.deleteRecursively(tmp)
+    graft.etl.Commit.deleteRecursively(tmp)
     s.stop()
   }
 }

@@ -254,6 +254,6 @@ object FoldBench {
       }
     }
     s.stop()
-    graft.text.Artifacts.deleteRecursively(tmp)
+    graft.etl.Commit.deleteRecursively(tmp)
   }
 }

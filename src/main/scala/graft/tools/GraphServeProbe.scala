@@ -31,7 +31,7 @@ object GraphServeProbe {
     sys.props("graft.artifacts.dir") = tmp.toString
     try {
       if (mode == "timed") timed(spark, sf) else diff(spark, sf)
-    } finally graft.text.Artifacts.deleteRecursively(tmp)
+    } finally graft.etl.Commit.deleteRecursively(tmp)
     spark.stop()
   }
 

@@ -172,7 +172,7 @@ object IncrementalBench {
         var stats: LabelStore.FoldStats = null
         for (_ <- 1 to reps) {
           val run = tmp.resolve("store_run")
-          Artifacts.deleteRecursively(run)
+          graft.etl.Commit.deleteRecursively(run)
           copyDir(store0, run)
           val t0 = System.nanoTime()
           stats = LabelStore.fold(s, run.toString, storeBuckets, np)
@@ -201,7 +201,7 @@ object IncrementalBench {
       var fstats: LabelStore.ForgetStats = null
       for (_ <- 1 to reps) {
         val run = tmp.resolve("store_run")
-        Artifacts.deleteRecursively(run)
+        graft.etl.Commit.deleteRecursively(run)
         copyDir(store0, run)
         val t0 = System.nanoTime()
         fstats = LabelStore.forget(s, run.toString, storeBuckets, dForget)
@@ -217,6 +217,6 @@ object IncrementalBench {
         f"bscan=$tScan%6.2fs hit_bb=$nHitB%d")
     }
     s.stop()
-    graft.text.Artifacts.deleteRecursively(tmp)
+    graft.etl.Commit.deleteRecursively(tmp)
   }
 }

@@ -3,11 +3,11 @@ package graft.tools
 /** Query timing harness for scale experiments:
   * `runMain graft.tools.QueryBench <q1[,q2,…]> <sfDir> [runs]`.
   * Run 1 is cold (file listing + page cache), later runs warm —
-  * both numbers matter when reading a scale ratio. Materializes via
-  * `count()` — the SAME method Bench times with, so numbers from the
-  * two tools are comparable (collect() would additionally execute the
-  * top-level sort and ship every row to the driver). A comma list
-  * shares one JVM/session across queries (each still cold/warm
+  * both numbers matter when reading a scale ratio. Times the noop
+  * sink — the SAME action Bench times, so numbers from the two tools
+  * are comparable (every column of every row is evaluated, then
+  * discarded; count() would let the optimizer prune subtrees). A comma
+  * list shares one JVM/session across queries (each still cold/warm
   * per-query); a query whose name is a prefix selects all matches. */
 object QueryBench {
   def main(a: Array[String]): Unit = {
@@ -26,8 +26,9 @@ object QueryBench {
     }
     for (q <- names; i <- 1 to runs) {
       val t0 = System.nanoTime()
-      val n = graft.SparkEntry.queries(q)(spark, d).count()
-      println(f"[querybench] $q run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
+      graft.SparkEntry.queries(q)(spark, d)
+        .write.format("noop").mode("overwrite").save()
+      println(f"[querybench] $q run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
     spark.stop()
   }

@@ -138,7 +138,7 @@ class CurationFacadeSpec extends SparkSpec {
         case Some(v) => sys.props("graft.artifacts.dir") = v
         case None    => sys.props.remove("graft.artifacts.dir")
       }
-      graft.text.Artifacts.deleteRecursively(root)
+      graft.etl.Commit.deleteRecursively(root)
     }
   }
 
@@ -177,7 +177,7 @@ class CurationFacadeSpec extends SparkSpec {
         case Some(v) => sys.props("graft.artifacts.dir") = v
         case None    => sys.props.remove("graft.artifacts.dir")
       }
-      graft.text.Artifacts.deleteRecursively(root)
+      graft.etl.Commit.deleteRecursively(root)
     }
   }
 
@@ -244,7 +244,7 @@ class CurationFacadeSpec extends SparkSpec {
         case Some(v) => sys.props("graft.artifacts.dir") = v
         case None => sys.props -= "graft.artifacts.dir"
       }
-      graft.text.Artifacts.deleteRecursively(root)
+      graft.etl.Commit.deleteRecursively(root)
     }
   }
 
@@ -289,7 +289,7 @@ class CurationFacadeSpec extends SparkSpec {
         case Some(v) => sys.props("graft.artifacts.dir") = v
         case None => sys.props -= "graft.artifacts.dir"
       }
-      graft.text.Artifacts.deleteRecursively(root)
+      graft.etl.Commit.deleteRecursively(root)
     }
   }
 
@@ -338,7 +338,7 @@ class CurationFacadeSpec extends SparkSpec {
         case Some(v) => sys.props("graft.artifacts.dir") = v
         case None => sys.props -= "graft.artifacts.dir"
       }
-      graft.text.Artifacts.deleteRecursively(root)
+      graft.etl.Commit.deleteRecursively(root)
     }
   }
 
@@ -402,7 +402,7 @@ class CurationFacadeSpec extends SparkSpec {
         case Some(v) => sys.props("graft.artifacts.dir") = v
         case None => sys.props -= "graft.artifacts.dir"
       }
-      graft.text.Artifacts.deleteRecursively(root)
+      graft.etl.Commit.deleteRecursively(root)
     }
   }
 
@@ -488,7 +488,7 @@ class CurationFacadeSpec extends SparkSpec {
         case Some(v) => sys.props("graft.artifacts.dir") = v
         case None    => sys.props.remove("graft.artifacts.dir")
       }
-      graft.text.Artifacts.deleteRecursively(root)
+      graft.etl.Commit.deleteRecursively(root)
     }
   }
 
@@ -547,7 +547,7 @@ class CurationFacadeSpec extends SparkSpec {
     // the band store admitted both batches (next batch probes them)
     assert(spark.read.parquet(s"$store/bands").count()
       == bandsOf(docs).count())
-    graft.text.Artifacts.deleteRecursively(
+    graft.etl.Commit.deleteRecursively(
       java.nio.file.Paths.get(store))
   }
 
@@ -581,7 +581,7 @@ class CurationFacadeSpec extends SparkSpec {
         case Some(v) => sys.props("graft.artifacts.dir") = v
         case None => sys.props -= "graft.artifacts.dir"
       }
-      graft.text.Artifacts.deleteRecursively(root)
+      graft.etl.Commit.deleteRecursively(root)
     }
   }
 
@@ -647,7 +647,7 @@ class CurationFacadeSpec extends SparkSpec {
       .incrementalSurvivors(spark, st, remaining)
       .select(col("doc_id")).collect().map(_.getLong(0)).toSet
     assert(survivors(storeA) == survivors(storeB))
-    Seq(storeA, storeB).foreach(p => graft.text.Artifacts
+    Seq(storeA, storeB).foreach(p => graft.etl.Commit
       .deleteRecursively(java.nio.file.Paths.get(p)))
   }
 }

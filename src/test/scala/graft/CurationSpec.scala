@@ -719,7 +719,7 @@ class CurationSpec extends SparkSpec {
         case Some(v) => sys.props("graft.artifacts.dir") = v
         case None    => sys.props.remove("graft.artifacts.dir")
       }
-      graft.text.Artifacts.deleteRecursively(root)
+      graft.etl.Commit.deleteRecursively(root)
     }
   }
 
@@ -752,7 +752,7 @@ class CurationSpec extends SparkSpec {
         case Some(v) => sys.props("graft.artifacts.dir") = v
         case None    => sys.props.remove("graft.artifacts.dir")
       }
-      graft.text.Artifacts.deleteRecursively(root)
+      graft.etl.Commit.deleteRecursively(root)
     }
   }
 
@@ -819,7 +819,8 @@ class CurationSpec extends SparkSpec {
         try s.iterator().asScala.toList
           .filter(p => java.nio.file.Files.isDirectory(p) &&
             p.getParent != root && p != root)
-          .map(_.getFileName.toString).sorted
+          .map(_.getFileName.toString)
+          .filterNot(_.startsWith(".")).sorted // hidden: Commit staging
         finally s.close()
       }
       // q82 (the build path) materializes the PAIR artifact
@@ -869,7 +870,7 @@ class CurationSpec extends SparkSpec {
           case Some(v) => sys.props("graft.artifacts.dir") = v
           case None    => sys.props.remove("graft.artifacts.dir")
         }
-        Artifacts.deleteRecursively(root)
+        graft.etl.Commit.deleteRecursively(root)
       }
     }
     // combined build in a fresh root, then every read surface

@@ -468,16 +468,16 @@ class EtlSpec extends SparkSpec {
     val ids0 = store.read("t", schema).select("k", "id").collect()
       .map(r => r.getString(0) -> r.getInt(1)).toMap
 
-    // simulate a crash between aside-rename and rename-in: the live
-    // bucket dir exists only as its dot-prefixed aside
+    // simulate a crash between Commit.swap's aside-rename and its
+    // rename-in: the live bucket dir exists only as its aside
     val tdir = new java.io.File(store.root, "t")
     val bucket = tdir.listFiles().find(_.getName.startsWith("_bucket=")).get
-    val aside = new java.io.File(tdir, "." + bucket.getName + "-old")
+    val aside = new java.io.File(tdir, "." + bucket.getName + ".aside")
     assert(bucket.renameTo(aside))
     val visible = store.read("t", schema).count()
     assert(visible < 40, "orphaned bucket rows must be invisible pre-repair")
 
-    // the next merge heals FIRST, so the orphaned keys are seen again:
+    // the next merge recovers FIRST, so the orphaned keys are seen again:
     // full row count restored, updated key keeps its surrogate id,
     // nothing re-inserted under a fresh id
     MergeOps.mergeBucketed(store, "t", schema, src("k3" -> "v3x"),
@@ -492,9 +492,9 @@ class EtlSpec extends SparkSpec {
     // completed-swap shape: aside left behind NEXT TO a live bucket
     // (crash after rename-in, before aside delete) is just dropped
     val b2 = tdir.listFiles().find(_.getName.startsWith("_bucket=")).get
-    val stray = new java.io.File(tdir, "." + b2.getName + "-old")
+    val stray = new java.io.File(tdir, "." + b2.getName + ".aside")
     assert(stray.mkdir())
-    assert(store.repairBuckets("t") === 1)
+    store.recover("t")
     assert(!stray.exists())
     assert(store.read("t", schema).count() === 40)
   }
@@ -519,16 +519,17 @@ class EtlSpec extends SparkSpec {
     assert(ns === ns.sorted)
   }
 
-  test("stale staged copies under _tmp are swept by the writer path, not by readers") {
+  test("stale staged copies under .stage are swept by the writer path, not by readers") {
     import org.apache.spark.sql.types._
     import spark.implicits._
     val root = mkTmp("silver-sweep")
     val store = new SilverStore(spark, root)
-    val stale = new java.io.File(root, "_tmp/t-stale")
-    val fresh = new java.io.File(root, "_tmp/t-fresh")
+    val stale = new java.io.File(root, s"${Commit.StageDir}/t-stale")
+    val fresh = new java.io.File(root, s"${Commit.StageDir}/t-fresh")
     assert(stale.mkdirs() && fresh.mkdirs())
     Files.writeString(Paths.get(stale.getPath, "part-0.parquet"), "x")
-    assert(stale.setLastModified(System.currentTimeMillis() - 25L * 3600 * 1000))
+    assert(stale.setLastModified(
+      System.currentTimeMillis() - Commit.StaleStageMs - 3600L * 1000))
 
     // constructing or reading must NOT sweep: a read-only store reaping
     // a paused writer's staging would turn that writer's commit into

@@ -197,19 +197,21 @@ class LabelStoreSpec extends SparkSpec {
     LabelStore.fold(spark, dir, 8, Seq((2L, 50L)).toDF("da", "db"))
     assert(LabelStore.labels(spark, dir).filter(col("doc_id") === 50L)
       .count() === 1L)
-    // crashed re-publish simulation: an unclaimed ._stage-* dir with
+    // crashed re-publish simulation: an unclaimed staging dir with
     // partial data is INVISIBLE to readers (the old generation stays
-    // the resolved one) and the next publish sweeps it
-    val stage = Paths.get(dir, "._stage-deadbeef")
-    Files.createDirectories(stage.resolve("byRep"))
+    // the resolved one), and once stale the next publish sweeps it
     val before = LabelStore.labels(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val stage = Paths.get(dir, graft.etl.Commit.StageDir, "deadbeef")
+    Files.createDirectories(stage.resolve("byRep"))
+    Files.setLastModifiedTime(stage, java.nio.file.attribute.FileTime
+      .fromMillis(System.currentTimeMillis() - 2 * graft.etl.Commit.StaleStageMs))
     assert(LabelStore.bucketsOf(dir).contains(8))
     assert(LabelStore.labels(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet === before)
     LabelStore.publish(Seq((9L, 9L)).toDF("doc_id", "rep"),
       Seq.empty[(Long, Long)].toDF("da", "db"), dir, 8)
-    assert(!Files.exists(stage), "next publish must sweep crashed stages")
+    assert(!Files.exists(stage), "next publish must sweep stale stages")
     assert(LabelStore.labels(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet ===
       Set(9L -> 9L))

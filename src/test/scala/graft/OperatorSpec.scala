@@ -1107,7 +1107,7 @@ class OperatorSpec extends SparkSpec {
         case Some(v) => sys.props("graft.artifacts.dir") = v
         case None => sys.props -= "graft.artifacts.dir"
       }
-      graft.text.Artifacts.deleteRecursively(root)
+      graft.etl.Commit.deleteRecursively(root)
     }
   }
 
@@ -1141,7 +1141,7 @@ class OperatorSpec extends SparkSpec {
         case Some(v) => sys.props("graft.artifacts.dir") = v
         case None => sys.props -= "graft.artifacts.dir"
       }
-      graft.text.Artifacts.deleteRecursively(root)
+      graft.etl.Commit.deleteRecursively(root)
     }
   }
 
@@ -1165,7 +1165,7 @@ class OperatorSpec extends SparkSpec {
         case Some(v) => sys.props("graft.artifacts.dir") = v
         case None => sys.props -= "graft.artifacts.dir"
       }
-      graft.text.Artifacts.deleteRecursively(root)
+      graft.etl.Commit.deleteRecursively(root)
     }
   }
 
@@ -1205,7 +1205,7 @@ class OperatorSpec extends SparkSpec {
       EdgeFold.fold(edgesOf(li.filter(isSliver)), 2L, twoStep, buckets)
       assert(weights(twoStep) === two,
         "a replayed batch must leave the maintained edges identical")
-    } finally graft.text.Artifacts.deleteRecursively(tmp)
+    } finally graft.etl.Commit.deleteRecursively(tmp)
   }
 
   test("RankHistory delta-serve: sliver-neighborhood recompute equals " +
@@ -1258,7 +1258,7 @@ class OperatorSpec extends SparkSpec {
       }
       assert(err2.getMessage.contains("node set changed"),
         s"a new node must force a history republish: ${err2.getMessage}")
-    } finally graft.text.Artifacts.deleteRecursively(tmp)
+    } finally graft.etl.Commit.deleteRecursively(tmp)
   }
 
   test("RankHistory delta-serve: sparse graph takes the DELTA path " +
@@ -1299,7 +1299,7 @@ class OperatorSpec extends SparkSpec {
         changed, saturationFrac = 0.0)(_.collect().map(_.toSeq).toSet)
       assert(RankHistory.lastServeMode === "full")
       assert(fb === full, "the fallback path must serve the same ranks")
-    } finally graft.text.Artifacts.deleteRecursively(tmp)
+    } finally graft.etl.Commit.deleteRecursively(tmp)
   }
 
   test("EdgeFold refuses a pre-degree (src, dst, w) store loudly; " +
@@ -1355,7 +1355,7 @@ class OperatorSpec extends SparkSpec {
         java.nio.file.Paths.get(dir)).get
       assert(EdgeFold.migrateDegrees(spark, dir) === before,
         "migrating a degreed store must be a no-op")
-    } finally graft.text.Artifacts.deleteRecursively(tmp)
+    } finally graft.etl.Commit.deleteRecursively(tmp)
   }
 
   test("RankHistory delta-serve aborts loudly on an asymmetric-weight " +
@@ -1389,7 +1389,7 @@ class OperatorSpec extends SparkSpec {
       }
       assert(err.getMessage.contains("weight-symmetric"),
         s"asymmetric graph must abort the delta serve: ${err.getMessage}")
-    } finally graft.text.Artifacts.deleteRecursively(tmp)
+    } finally graft.etl.Commit.deleteRecursively(tmp)
   }
 
   test("RankHistory.publish is versioned: a republish keeps a readable " +
@@ -1436,12 +1436,12 @@ class OperatorSpec extends SparkSpec {
       // directly under historyDir) still serves: flatten v3 in place
       val flat = tmp.resolve("flat-history")
       java.nio.file.Files.move(hist.resolve("v3"), flat)
-      graft.text.Artifacts.deleteRecursively(hist)
+      graft.etl.Commit.deleteRecursively(hist)
       val legacy = RankHistory.withDeltaServedRanks(spark, store,
         flat.toString, spark.range(0).selectExpr("id as src"))(
         _.collect().map(_.toSeq).toSet)
       assert(legacy === full, "the flat pre-versioned layout must serve")
-    } finally graft.text.Artifacts.deleteRecursively(tmp)
+    } finally graft.etl.Commit.deleteRecursively(tmp)
   }
 
   test("salted join: identical result to the plain join, spread over salts") {

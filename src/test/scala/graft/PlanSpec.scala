@@ -18,6 +18,14 @@ class PlanSpec extends SparkSpec {
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
   }
 
+  test("PlanDump dumps the AQE-final plan of the query it executed") {
+    val p = graft.tools.PlanDump.finalPlan(
+      SparkEntry.queries("q50_approx_agg")(spark, sf))
+    assert(p.contains("AdaptiveSparkPlan"), p.take(800))
+    assert(p.contains("isFinalPlan=true"), p.take(800))
+    assert(!p.contains("isFinalPlan=false"), p.take(800))
+  }
+
   test("q02 filter+project: predicates pushed to parquet, columns pruned") {
     val p = plan("q02_filter_project")
     assert(p.contains("PushedFilters"), p.take(800))
@@ -196,7 +204,7 @@ class PlanSpec extends SparkSpec {
         case Some(v) => sys.props("graft.artifacts.dir") = v
         case None => sys.props -= "graft.artifacts.dir"
       }
-      graft.text.Artifacts.deleteRecursively(root)
+      graft.etl.Commit.deleteRecursively(root)
     }
   }
 
@@ -277,7 +285,7 @@ class PlanSpec extends SparkSpec {
         spark, store)(pinIterations(_, 2))
       graft.analytics.ExtendedQueries.withMaintainedPprRanks(
         spark, store)(pinIterations(_, 2))
-    } finally graft.text.Artifacts.deleteRecursively(tmpd)
+    } finally graft.etl.Commit.deleteRecursively(tmpd)
   }
 
   test("q210 delta-serve: the cached |E| relation is never re-exchanged " +
@@ -334,7 +342,7 @@ class PlanSpec extends SparkSpec {
         assert(plan.collect { case s: InMemoryTableScanExec => s }.nonEmpty,
           "the delta serve must read the cached maintained edges")
       }
-    } finally graft.text.Artifacts.deleteRecursively(tmpd)
+    } finally graft.etl.Commit.deleteRecursively(tmpd)
   }
 
   test("q210 hop reads are partition-PRUNED bucket slices: IO ∝ frontier " +
@@ -379,7 +387,7 @@ class PlanSpec extends SparkSpec {
       val jp = j.queryExecution.executedPlan.toString
       assert(jp.contains("Bucketed: true"),
         s"the pruned slice must join as a bucketed scan:\n${jp.take(1500)}")
-    } finally graft.text.Artifacts.deleteRecursively(tmpd)
+    } finally graft.etl.Commit.deleteRecursively(tmpd)
   }
 
   test("q138 cohort retention: one scan, dedup and first-day window ride one exchange") {

@@ -633,7 +633,7 @@ class StreamingSpec extends SparkSpec {
     StreamingNearDup.dedupBatch(
       (1L to 5L).map(i => i -> sentence(i.toInt)).toDF("doc_id", "text"),
       0L, state, kept)
-    val seeded = StreamingNearDup.readBloom(spark, state)
+    val seeded = StreamingNearDup.readBloom(state)
     assert(seeded.exists(_.exists(_ != 0L)), "merged bloom must exist after batch 0")
     // a cross-batch dup must be suppressed THROUGH the gate (its
     // buckets hit the bloom and fall through to the exact probe);
@@ -646,7 +646,7 @@ class StreamingSpec extends SparkSpec {
       "gate must pass registered-bucket hits to the exact check")
     // self-heal: deleting _bloom and rebuilding from the state tree
     // reproduces the incrementally merged words bit-for-bit
-    val before = StreamingNearDup.readBloom(spark, state).get
+    val before = StreamingNearDup.readBloom(state).get
     assert(new java.io.File(state, "_bloom").delete())
     val rebuilt = StreamingNearDup.rebuildBloom(spark, state)
     assert(rebuilt.toSeq === before.toSeq,
@@ -745,11 +745,11 @@ class StreamingSpec extends SparkSpec {
       .map(_.getLong(0)).sorted.toSeq === (100L to 105L),
       "compacted state must still suppress, kept rows must survive folds")
     // a manual compactKept crash between its two swap renames leaves
-    // the output only in kept.old; the NEXT TRIGGER must heal it
-    // before recreating the dir, or a later repair reads the aside as
-    // a completed swap and deletes every previously kept row
-    val keptDirF = new java.io.File(kept)
-    assert(keptDirF.renameTo(new java.io.File(kept + ".old")))
+    // the output only in its Commit aside; the NEXT TRIGGER must settle
+    // it before recreating the dir, or the aside would later read as a
+    // completed swap and be dropped with every previously kept row
+    val keptP = java.nio.file.Paths.get(kept)
+    java.nio.file.Files.move(keptP, graft.etl.Commit.asideOf(keptP))
     StreamingNearDup.dedupBatch(
       Seq(300L -> sentence(300)).toDF("doc_id", "text"),
       7L, state, kept, autoCompactDirs = 2)
@@ -829,7 +829,8 @@ class StreamingSpec extends SparkSpec {
     val (dirsBefore, _) = StreamingNearDup.compactState(spark, state)
     assert(dirsBefore >= 2, "test needs multiple per-batch state dirs")
     val dirNames = new java.io.File(state).listFiles()
-      .filter(_.isDirectory).map(_.getName).sorted
+      .filter(f => f.isDirectory && !f.getName.startsWith("."))
+      .map(_.getName).sorted
     assert(dirNames.length === 2 && dirNames.head === "_batch=-1",
       s"compacted + carried newest expected, got ${dirNames.toSeq}")
     StreamingNearDup.dedupBatch(
@@ -841,10 +842,10 @@ class StreamingSpec extends SparkSpec {
       "suppression must survive state compaction")
 
     // crash window between the two swap renames: state exists only as
-    // <state>.old — the next batch heals it before reading
-    val stDir = new java.io.File(state)
-    val asideDir = new java.io.File(state + ".old")
-    assert(stDir.renameTo(asideDir))
+    // its Commit aside — the next batch settles it before reading
+    val asideDir = graft.etl.Commit.asideOf(
+      java.nio.file.Paths.get(state)).toFile
+    assert(new java.io.File(state).renameTo(asideDir))
     StreamingNearDup.dedupBatch(
       Seq(51L -> sentence(4), 52L -> sentence(52)).toDF("doc_id", "text"),
       9L, state, kept)
@@ -859,7 +860,7 @@ class StreamingSpec extends SparkSpec {
     val (keptDirsBefore, keptRows) = StreamingNearDup.compactKept(spark, kept)
     assert(keptDirsBefore >= 3 && keptRows === 13)
     assert(new java.io.File(kept).listFiles()
-      .count(_.isDirectory) === 2)
+      .count(f => f.isDirectory && !f.getName.startsWith(".")) === 2)
     assert(spark.read.parquet(kept).select("doc_id")
       .collect().map(_.getLong(0)).sorted.toSeq === kept4.toSeq,
       "compaction must not change the kept rows")
@@ -1212,7 +1213,7 @@ class StreamingSpec extends SparkSpec {
     // from the same below-id state, overwrites its own version —
     // store row-identical, sums NOT doubled
     val root = java.nio.file.Paths.get(store)
-    val vmax = graft.etl.VersionedDir.versions(root).max
+    val vmax = graft.etl.Commit.versions(root).max
     val lastId = vmax >> 1 // fold slots are 2·id
     def stateRows() = graft.streaming.BucketedStateStore
       .readAllAt(spark, root, vmax).collect().map(_.toSeq).toSet
@@ -1641,7 +1642,7 @@ class StreamingSpec extends SparkSpec {
     // trigger forever; pruneMarkov drops superseded versions on both
     // stores without changing the served report
     AttributionStream.pruneMarkov(fdir, cdir)
-    val cellVs = graft.etl.VersionedDir.versions(
+    val cellVs = graft.etl.Commit.versions(
       java.nio.file.Paths.get(cdir)).sorted
     assert(cellVs === Seq(1L, 2L),
       s"pruneMarkov must keep the newest two cell versions, $cellVs")
@@ -1833,7 +1834,8 @@ class StreamingSpec extends SparkSpec {
     val dirs = java.nio.file.Files.list(root).iterator()
     val names = {
       import scala.jdk.CollectionConverters._
-      dirs.asScala.map(_.getFileName.toString).toSet
+      dirs.asScala.map(_.getFileName.toString)
+        .filterNot(_.startsWith(".")).toSet // hidden: Commit staging
     }
     assert(names === Set("batch=3", "_compacted"),
       s"sink must stay bounded at one live dir + compacted store: $names")
@@ -2031,7 +2033,7 @@ class StreamingSpec extends SparkSpec {
     }
     assert(err2.getMessage.contains("Rebuild"),
       s"pre-slot layout must still demand a rebuild: ${err2.getMessage}")
-    graft.text.Artifacts.deleteRecursively(legacy)
+    graft.etl.Commit.deleteRecursively(legacy)
   }
 
   test("bucketed-files state: the composed bucketed-table read equals " +
@@ -2129,7 +2131,7 @@ class StreamingSpec extends SparkSpec {
     }
     assert(err2.getMessage.contains("scheme"),
       s"unmarked manifest must name the scheme gap: ${err2.getMessage}")
-    graft.text.Artifacts.deleteRecursively(dir)
+    graft.etl.Commit.deleteRecursively(dir)
   }
 
 }

@@ -1047,7 +1047,7 @@ class TextSimilaritySpec extends SparkSpec {
         case Some(v) => sys.props("graft.artifacts.dir") = v
         case None    => sys.props.remove("graft.artifacts.dir")
       }
-      graft.text.Artifacts.deleteRecursively(root)
+      graft.etl.Commit.deleteRecursively(root)
     }
   }
 
@@ -1087,7 +1087,7 @@ class TextSimilaritySpec extends SparkSpec {
         case Some(v) => sys.props("graft.artifacts.dir") = v
         case None    => sys.props.remove("graft.artifacts.dir")
       }
-      graft.text.Artifacts.deleteRecursively(root)
+      graft.etl.Commit.deleteRecursively(root)
     }
   }
 
@@ -1222,7 +1222,7 @@ class TextSimilaritySpec extends SparkSpec {
       assert(pruned == flat,
         s"pruned probe drift: ${pruned.size} vs ${flat.size}")
       assert(flat.nonEmpty, "fixture batch must introduce pairs")
-    } finally graft.text.Artifacts.deleteRecursively(tmp)
+    } finally graft.etl.Commit.deleteRecursively(tmp)
   }
 
   test("BandIndex.loadPartitioned: row-identical to the flat store") {
@@ -1244,7 +1244,7 @@ class TextSimilaritySpec extends SparkSpec {
         case Some(v) => sys.props("graft.artifacts.dir") = v
         case None    => sys.props.remove("graft.artifacts.dir")
       }
-      graft.text.Artifacts.deleteRecursively(root)
+      graft.etl.Commit.deleteRecursively(root)
     }
   }
 }

@@ -140,6 +140,6 @@ class ZOrderSpec extends SparkSpec {
       s"time-sorted layout should materialize every row, got $tRows")
     assert(zRows < n / 2,
       s"z-ordered layout should skip most row groups, got $zRows of $n")
-    graft.text.Artifacts.deleteRecursively(root)
+    graft.etl.Commit.deleteRecursively(root)
   }
 }
