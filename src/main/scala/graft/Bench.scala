@@ -5,33 +5,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // dirty-heap containment (r17): q180's pair-expansion sorts used
-      // to grow Tungsten pages and pointer arrays past 1 GiB in SINGLE
-      // allocations — after three full passes of the bench set, heap
-      // fragmentation made those allocations fail even with free
-      // memory (the r16 shared-JVM OOM; q180 had to report from its
-      // own JVM). Capping the page size and forcing sorter spill at
-      // 16 M elements bounds every single allocation to ~128 MB, so
-      // the trailing q180 phase survives the dirty heap at a small
-      // spill-IO cost on the very biggest sorts.
-      .config("spark.buffer.pageSize",
-        sys.env.getOrElse("SPARK_GRAFT_PAGE_SIZE", "16m"))
-      .config("spark.shuffle.spill.numElementsForceSpillThreshold",
-        (16 * 1024 * 1024).toString)
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // ad-hoc conf overlay for measurement experiments (the
-    // GraftSession.create convention): SPARK_GRAFT_CONF="k=v;k2=v2".
-    // The driver never sets it, so the contract run is unchanged.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';')
-      .filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k.trim, v.trim)
-      })
     // Headline queries only (QuerySpec.bench) — one representative per
     // operator family; correctness of the full surface is Verify's job.
     // SPARK_GRAFT_BENCH_ONLY (comma list of names/prefixes) narrows the

@@ -32,15 +32,13 @@ object GraftSession {
       // parquet-mr maps to no Spark type; read those as Long (ns since
       // epoch). Harmless for µs-typed files (Tables.tsUs handles both).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // dirty-heap containment (r17, the Bench settings): bound every
-      // single Tungsten allocation (pages; sorter pointer arrays via
-      // forced spill at 16 M elements) to ~128 MB so output-quadratic
-      // operators (q180) survive a long-lived, fragmented JVM heap
-      // instead of OOMing on a 1 GiB single allocation.
-      // SPARK_GRAFT_PAGE_SIZE overrides for measurement (static conf —
-      // SPARK_GRAFT_CONF cannot reach it after session start).
-      .config("spark.buffer.pageSize",
-        sys.env.getOrElse("SPARK_GRAFT_PAGE_SIZE", "16m"))
+      // dirty-heap containment (r17): bound every single Tungsten
+      // allocation (pages; sorter pointer arrays via forced spill at
+      // 16 M elements) to ~128 MB so output-quadratic operators (q180)
+      // survive a long-lived, fragmented JVM heap — three full Bench
+      // passes used to make q180's 1 GiB single allocations fail even
+      // with free memory.
+      .config("spark.buffer.pageSize", "16m")
       .config("spark.shuffle.spill.numElementsForceSpillThreshold",
         (16 * 1024 * 1024).toString)
       .config("spark.ui.enabled", "false")
@@ -60,8 +58,7 @@ object GraftSession {
     spark
   }
 
-  /** Apply graft defaults to an externally-created session (e.g. the
-    * driver's Verify/Bench sessions). */
+  /** Apply graft defaults to an externally-created session. */
   def configure(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.ansi.enabled", "false")
     spark.conf.set("spark.sql.session.timeZone", "UTC")

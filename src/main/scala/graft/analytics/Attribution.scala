@@ -732,7 +732,7 @@ object Attribution {
     * Jacobi expression chain was ~26 stacked projection layers · ~13
     * aliases each that Catalyst re-analyzed and partially inlined on
     * every run (~0.5 s optimizer + ~1.5 s under AQE at ANY data size,
-    * measured via PhaseProbe; pure per-query overhead, growing with
+    * measured in r20; pure per-query overhead, growing with
     * |channels|³·rounds, never with data). The collect triggers
     * [[strayGuard]] exactly as the expression path did, and the local
     * arithmetic is bit-identical: Spark's `div` is Long division

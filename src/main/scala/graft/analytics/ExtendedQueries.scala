@@ -2144,11 +2144,6 @@ object ExtendedQueries {
     * (lineitem, orders) content fingerprint. Corpus-slice folds touch
     * every bucket, so only the last version's layer is live — the
     * build prunes the earlier two. Returns the state dir. */
-  /** [[maintainedEdgeStore]] for the measurement tools (RankPlanDump). */
-  private[graft] def maintainedEdgeStoreFor(s: SparkSession,
-                                            d: String): String =
-    maintainedEdgeStore(s, d)
-
   private def maintainedEdgeStore(s: SparkSession, d: String): String = {
     val store = graft.text.Artifacts.dirMulti(d,
       "edgefold_b64_i3_v2", Seq("lineitem.parquet", "orders.parquet"))

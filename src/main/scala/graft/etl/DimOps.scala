@@ -1,7 +1,6 @@
 package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -12,15 +11,10 @@ import org.apache.spark.sql.types._
   * (`services/vehiculo.ts:161-176`).
   *
   * Per batch (not per row, unlike the reference): distinct new key
-  * tuples -> anti-join against the existing dim -> assign surrogate ids
-  * `maxExistingId + row_number(order by keys)` -> union.
-  *
-  * Determinism/scale: id assignment uses a global-order window, which
-  * plans as a single-partition sort. That is correct AND cheap here
-  * because it runs on `new distinct values` only — dimension deltas are
-  * tiny by definition (the fact table never passes through this path).
-  * Single-writer per dimension is a stated constraint, same as the
-  * reference's one-event-per-invocation serialization (SURVEY §7 risk 1).
+  * tuples -> anti-join against the existing dim -> surrogate ids in key
+  * order ([[SurrogateId]]) -> union. The id window runs on the new
+  * distinct values only — dimension deltas are tiny by definition (the
+  * fact table never passes through this path).
   */
 object DimOps {
 
@@ -46,13 +40,9 @@ object DimOps {
       .distinct()
       .join(existing.select(keyColumns: _*), keyCols, "left_anti")
 
-    val maxId: Int = existing.agg(coalesce(max(col(idCol)), lit(0)))
-      .collect()(0).getInt(0)
-
-    val w = Window.orderBy(keyColumns: _*)
     val now = current_timestamp()
-    val created = distinctNew
-      .withColumn(idCol, (row_number().over(w) + lit(maxId)).cast(IntegerType))
+    val created = SurrogateId.assign(distinctNew, idCol,
+        SurrogateId.maxOf(existing, idCol), keyColumns)
       .withColumn("date_created", now)
       .withColumn("date_updated", now)
       .select(existing.columns.map(col).toIndexedSeq: _*)

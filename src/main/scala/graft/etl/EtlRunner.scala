@@ -38,24 +38,27 @@ object EtlRunner {
     }
   }
 
-  /** Batch-process a landing directory: empresa files first (FK
-    * dependency, SURVEY §7 build order), then conductor/vehiculo, each
-    * in filename order — mirroring the reference's effective ordering
+  /** Landing order: empresa files first (FK dependency, SURVEY §7
+    * build order), then conductor/vehiculo, then unroutable files, each
+    * in file-name order — mirroring the reference's effective ordering
     * when files land in sequence. */
+  def landingOrder(paths: Seq[String]): Seq[String] = paths.sortBy { p =>
+    val name = p.split('/').last
+    (classify(name) match {
+      case Some(EmpresaFile) => 0
+      case Some(_)           => 1
+      case None              => 2
+    }, name)
+  }
+
+  /** Batch-process a landing directory in [[landingOrder]]. */
   def processDirectory(store: SilverStore, dir: String,
                        loadDate: Option[String] = None): Map[String, EtlResult] = {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(store.spark.sessionState.newHadoopConf())
     val files = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .filter(_.isFile).map(_.getPath.toString).sorted
-    val ordered = files.sortBy { p =>
-      classify(p.split('/').last) match {
-        case Some(EmpresaFile) => (0, p)
-        case Some(_)           => (1, p)
-        case None              => (2, p)
-      }
-    }
-    ordered.flatMap { p =>
+      .filter(_.isFile).map(_.getPath.toString).toSeq
+    landingOrder(files).flatMap { p =>
       processFile(store, p, loadDate).map(r => p.split('/').last -> r)
     }.toMap
   }

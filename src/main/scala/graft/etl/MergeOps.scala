@@ -29,8 +29,9 @@ object MergeOps {
     *   `services/vehiculo.ts:209` — and `date_created`) stay from
     *   target; `date_updated` bumps only when any updated column
     *   actually changed (H8 trigger semantics, `model.sql:2-11`).
-    * - unmatched source rows: inserted with fresh surrogate ids
-    *   `maxId + row_number` (replaces SERIAL + RETURNING).
+    * - unmatched source rows: inserted with fresh surrogate ids after
+    *   `baseId`, the table's max id ([[SurrogateId]]; the caller knows
+    *   it — a bucket-pruned `target` cannot see the whole table).
     * - unmatched target rows: kept as-is.
     *
     * `source` must be unique on `keys` (apply [[lastWins]] first) and
@@ -42,9 +43,8 @@ object MergeOps {
     * inserted delta only — never on the full table.
     */
   def merge(target: DataFrame, source: DataFrame, keys: Seq[String],
-            idCol: String, updateCols: Seq[String],
-            insertOnlyCols: Seq[String] = Nil,
-            knownMaxId: Option[Int] = None): DataFrame = {
+            idCol: String, baseId: Int, updateCols: Seq[String],
+            insertOnlyCols: Seq[String] = Nil): DataFrame = {
     val now = current_timestamp()
     val allCols = target.columns.toSeq
     val srcCols = keys ++ updateCols ++ insertOnlyCols
@@ -78,23 +78,19 @@ object MergeOps {
     }
     val kept = joined.filter(tgtPresent).select(keptCols: _*)
 
-    // Source-only rows: fresh ids over the (small) inserted delta.
-    // knownMaxId lets a caller that sees only a SLICE of the table
-    // (mergeBucketed's pruned target) pass the true global max.
-    val maxId: Int = knownMaxId.getOrElse(
-      target.agg(coalesce(max(col(idCol)), lit(0))).collect()(0).getInt(0))
-    val insertW = Window.orderBy(keys.map(col): _*)
+    // Source-only rows: fresh ids over the (small) inserted delta; the
+    // id column is a typed null until SurrogateId fills it in place.
     val insertCols: Seq[Column] = allCols.map {
       case k if keys.contains(k) => col(k)
-      case `idCol` =>
-        (row_number().over(insertW) + lit(maxId)).cast(IntegerType).as(idCol)
       case "date_created" => now.as("date_created")
       case "date_updated" => now.as("date_updated")
       case c if updateCols.contains(c) || insertOnlyCols.contains(c) =>
         col(s"_s_$c").as(c)
       case c => lit(null).cast(target.schema(c).dataType).as(c)
     }
-    val inserted = joined.filter(!tgtPresent).select(insertCols: _*)
+    val inserted = SurrogateId.assign(
+      joined.filter(!tgtPresent).select(insertCols: _*), idCol, baseId,
+      keys.map(col))
 
     kept.unionByName(inserted)
   }
@@ -155,6 +151,11 @@ object MergeOps {
     else Integer.highestOneBit(capped) * 2
   }
 
+  /** A row's bucket, the layout of every bucketed table:
+    * [[mergeBucketed]] writes by it, [[deleteBucketed]] prunes by it. */
+  private def bucketOf(keys: Seq[String], n: Int): Column =
+    pmod(xxhash64(keys.map(col): _*), lit(n)).cast(IntegerType)
+
   def mergeBucketed(store: SilverStore, table: String,
                     schema: org.apache.spark.sql.types.StructType,
                     source: DataFrame, keys: Seq[String], idCol: String,
@@ -163,10 +164,6 @@ object MergeOps {
                     nBuckets: Int = 32): Unit = {
     require(nBuckets >= 1)
     val bcol = store.bucketCol
-    def bucketOf(n: Int) =
-      pmod(xxhash64(keys.map(col): _*), lit(n)).cast(IntegerType)
-    def fullMax(df: DataFrame): Int =
-      df.agg(coalesce(max(col(idCol)), lit(0))).collect()(0).getInt(0)
 
     // settle crashed swaps BEFORE reading the target: an unsettled
     // bucket's rows are invisible, and this merge would re-insert its
@@ -187,11 +184,13 @@ object MergeOps {
       //   One full rewrite re-establishes a known layout + sidecar.
       // Both read the whole table regardless of layout (read() drops
       // _bucket), so the merge itself is layout-agnostic.
-      val merged = merge(store.read(table, schema), source, keys, idCol,
-        updateCols, insertOnlyCols)
-      store.overwrite(table, merged.withColumn(bcol, bucketOf(nBuckets)),
-        Seq(bcol))
-      store.writeMeta(table, fullMax(store.read(table, schema)), nBuckets)
+      val target = store.read(table, schema)
+      val merged = merge(target, source, keys, idCol,
+        SurrogateId.maxOf(target, idCol), updateCols, insertOnlyCols)
+      store.overwrite(table,
+        merged.withColumn(bcol, bucketOf(keys, nBuckets)), Seq(bcol))
+      store.writeMeta(table,
+        SurrogateId.maxOf(store.read(table, schema), idCol), nBuckets)
       return
     }
 
@@ -204,26 +203,27 @@ object MergeOps {
 
     val touched: Seq[Int] =
       if (!store.exists(table)) (0 until nb)
-      else source.select(bucketOf(nb).as(bcol)).distinct()
+      else source.select(bucketOf(keys, nb).as(bcol)).distinct()
         .collect().map(_.getInt(0)).toSeq.sorted
     val targetSub = store.readBucketed(table, schema)
       .filter(col(bcol).isin(touched: _*)).drop(bcol)
-    val merged = merge(targetSub, source, keys, idCol, updateCols,
-      insertOnlyCols, knownMaxId = Some(maxId0))
+    val merged = merge(targetSub, source, keys, idCol, maxId0, updateCols,
+      insertOnlyCols)
 
     // stage -> meta -> commit: the new high-water mark is derived from
     // the STAGED delta (a scan of touched-bucket bytes only) and made
     // durable before any bucket becomes visible, so a crash at any
     // point can only leave the mark high (id gaps), never low
     // (id collisions)
-    val tmp = store.stageBuckets(table, merged.withColumn(bcol, bucketOf(nb)))
+    val tmp = store.stageBuckets(table,
+      merged.withColumn(bcol, bucketOf(keys, nb)))
     try {
-      val stagedMax = fullMax(
+      val stagedMax = SurrogateId.maxOf(
         store.spark.read.schema(
           org.apache.spark.sql.types.StructType(schema.fields :+
             org.apache.spark.sql.types.StructField(bcol,
               org.apache.spark.sql.types.IntegerType, nullable = true)))
-          .parquet(tmp.toString))
+          .parquet(tmp.toString), idCol)
       store.writeMeta(table, math.max(maxId0, stagedMax), nb)
       store.commitBuckets(table, tmp, touched)
     } finally Commit.deleteRecursively(tmp)
@@ -272,10 +272,8 @@ object MergeOps {
         s"$table — migrate flat tables through mergeBucketed first")
     val nb = meta.get._2
     val bcol = store.bucketCol
-    val bucketOf =
-      pmod(xxhash64(keys.map(col): _*), lit(nb)).cast(IntegerType)
     val req = deleteKeys.select(keys.map(col): _*).distinct()
-    val touched = req.select(bucketOf.as(bcol)).distinct()
+    val touched = req.select(bucketOf(keys, nb).as(bcol)).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
     if (touched.isEmpty) return DeleteStats(Nil, 0L)
     val sub = store.readBucketed(table, schema)
@@ -286,7 +284,7 @@ object MergeOps {
     // the stat to a re-read of what was just written
     val deleted = sub.count() - kept.count()
     if (deleted == 0L) return DeleteStats(touched, 0L)
-    val tmp = store.stageBuckets(table, kept.withColumn(bcol, bucketOf))
+    val tmp = store.stageBuckets(table, kept.withColumn(bcol, bucketOf(keys, nb)))
     try store.commitBuckets(table, tmp, touched)
     finally Commit.deleteRecursively(tmp)
     DeleteStats(touched, deleted)

@@ -1,8 +1,8 @@
 package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.functions.{GraftFunctions => F}
 
 /** Result counters per processed file batch — the Spark equivalent of
@@ -14,25 +14,10 @@ final case class EtlResult(rowCount: Long, processed: Long, errors: Long,
                            rejects: DataFrame)
 
 private[etl] object PipelineUtil {
-  /** Assign append surrogate ids: `maxExisting + row_number` ordered by
-    * `orderCols` — deterministic replacement for SERIAL + RETURNING.
-    * The window is global but runs on the batch delta only. */
-  def withSurrogateId(df: DataFrame, idCol: String, maxId: Int,
-                      orderCols: Seq[Column]): DataFrame =
-    df.withColumn(idCol,
-      (row_number().over(Window.orderBy(orderCols: _*)) + lit(maxId))
-        .cast("int"))
-
-  def maxIdOf(store: SilverStore, table: String,
-              schema: org.apache.spark.sql.types.StructType,
-              idCol: String): Int =
-    store.read(table, schema).agg(coalesce(max(col(idCol)), lit(0)))
-      .collect()(0).getInt(0)
-
   /** Conform to a Silver schema: select columns in order, cast, stamp
     * audit timestamps. */
   def conformTo(df: DataFrame,
-                schema: org.apache.spark.sql.types.StructType): DataFrame = {
+                schema: StructType): DataFrame = {
     val now = current_timestamp()
     df.select(schema.fields.map { f =>
       f.name match {
@@ -43,25 +28,60 @@ private[etl] object PipelineUtil {
     }.toIndexedSeq: _*)
   }
 
-  /** D3 run counters in ONE aggregation job over the flagged frame
-    * (count(col) counts non-nulls) — separate `bronze.count()` +
-    * `rejects.count()` would re-execute the scan+validate subtree
-    * twice. */
-  def counts(flagged: DataFrame): (Long, Long, Long) = {
-    val row = flagged.agg(count(lit(1)), count(col("error_reason"))).head
-    val total = row.getLong(0)
-    val errs = row.getLong(1)
-    (total, total - errs, errs)
+  /** Validate-and-split one Bronze file (H6/H7: per-row transactions +
+    * error capture), load its accepted rows with `load`, and finish the
+    * file: run counters and quarantine. `reason` names a row's first
+    * failed check (null = accepted). The flagged rows are persisted once
+    * — they feed the load, the counters and the quarantine instead of
+    * three scan+validate re-executions — and released however `load`
+    * ends. */
+  def land(store: SilverStore, entity: String, bronze: DataFrame,
+           conformed: DataFrame, reason: Column)
+          (load: DataFrame => Unit): EtlResult = {
+    val flagged = conformed.withColumn("error_reason", reason).persist()
+    try {
+      val rejects = flagged.filter(col("error_reason").isNotNull)
+        .select((bronze.columns.map(col) :+ col("error_reason")).toIndexedSeq: _*)
+      load(flagged.filter(col("error_reason").isNull))
+      // D3 run counters in ONE aggregation job (count(col) counts non-nulls)
+      val row = flagged.agg(count(lit(1)), count(col("error_reason"))).head
+      val (total, errors) = (row.getLong(0), row.getLong(1))
+      // append-only quarantine — the reference's per-row error log
+      // (`services/empresa.ts:110-116`) — partitioned by `_load_date`
+      // so one day's rejects prune to one partition directory
+      if (errors > 0)
+        store.appendPartitioned(s"quarantine_$entity", rejects, Seq("_load_date"))
+      EtlResult(total, total - errors, errors, rejects)
+    } finally flagged.unpersist()
   }
 
-  /** H6/H7: persist rejects to an append-only quarantine table (the
-    * Spark-native generalization of the reference's per-row error log,
-    * `services/empresa.ts:110-116`) — all Bronze columns as landed,
-    * plus `error_reason` and the file/row provenance. Partitioned by
-    * `_load_date` so "show me yesterday's rejects" prunes to one
-    * partition directory. */
-  def quarantine(store: SilverStore, entity: String, rejects: DataFrame): Unit =
-    store.appendPartitioned(s"quarantine_$entity", rejects, Seq("_load_date"))
+  /** "RETURNING id" (SURVEY §7): `rows` joined on `rowKey` to the id
+    * their natural key `key` has in `table` after the upsert. */
+  def withIds(store: SilverStore, table: String,
+              schema: StructType, key: String,
+              rows: DataFrame, rowKey: String): DataFrame =
+    rows.join(broadcast(store.read(table, schema)
+        .select(col(schema.fieldNames.head), col(key).as("_id_key"))),
+      col(rowKey) === col("_id_key")).drop("_id_key")
+
+  /** H4/H5 historized append: `rows` take ids continuing `table`'s max
+    * in `order` and are appended conformed to `schema`, whose first
+    * field is the id (every Silver schema leads with its SERIAL).
+    * `shape` runs only when there are rows (a dimension sync the rows
+    * need must not run for none). Returns the id-stamped rows for the
+    * table's own children; None when there were no rows. */
+  def appendChild(store: SilverStore, table: String,
+                  schema: StructType,
+                  rows: DataFrame, order: Seq[Column],
+                  shape: DataFrame => DataFrame = identity): Option[DataFrame] =
+    if (rows.isEmpty) None
+    else {
+      val idCol = schema.fieldNames.head
+      val withId = SurrogateId.assign(shape(rows), idCol,
+        SurrogateId.maxOf(store.read(table, schema), idCol), order)
+      store.append(table, conformTo(withId, schema))
+      Some(withId)
+    }
 }
 
 /** Companies ETL (`services/empresa.ts:1-131`, SURVEY §2 B1/B4/D1/H1).
@@ -87,40 +107,30 @@ object EmpresaPipeline {
       .when(col("carrier_rut").isNull,
         concat(lit("RUT inválido: '"), coalesce(col("carrier_tin"), lit("")), lit("'")))
       .when(col("carrier_bp_c").isNull, "carrier_bp vacío")
-    val flagged = conformed.withColumn("error_reason", reason)
-      // one materialization feeds counts, quarantine, and the merge
-      // source instead of three scan+validate re-executions
-      .persist()
-    val rejects = flagged.filter(col("error_reason").isNotNull)
-      .select((bronze.columns.map(col) :+ col("error_reason")).toIndexedSeq: _*)
-    val accepted = flagged.filter(col("error_reason").isNull)
 
-    // D1 get-or-create tipo_empresa (`empresa.ts:73-90`)
-    val tipoDim = DimOps.sync(store, "tipo_empresa", "carrier_type_id",
-      Seq("carrier_type"),
-      accepted.select(col("carrier_type_c").as("carrier_type")))
+    land(store, "empresa", bronze, conformed, reason) { accepted =>
+      // D1 get-or-create tipo_empresa (`empresa.ts:73-90`)
+      val tipoDim = DimOps.sync(store, "tipo_empresa", "carrier_type_id",
+        Seq("carrier_type"),
+        accepted.select(col("carrier_type_c").as("carrier_type")))
 
-    // D4 last-wins + H1 merge (`empresa.ts:92-106`)
-    val source = MergeOps.lastWins(accepted, Seq("carrier_bp_c"))
-      .join(broadcast(tipoDim.select(col("carrier_type_id"),
-          col("carrier_type").as("_dim_ct"))),
-        col("carrier_type_c") === col("_dim_ct"), "left")
-      .select(
-        col("carrier_bp_c").as("carrier_bp"),
-        col("carrier_name_c").as("carrier_name"),
-        col("carrier_rut"),
-        col("carrier_type_id"))
+      // D4 last-wins + H1 merge (`empresa.ts:92-106`)
+      val source = MergeOps.lastWins(accepted, Seq("carrier_bp_c"))
+        .join(broadcast(tipoDim.select(col("carrier_type_id"),
+            col("carrier_type").as("_dim_ct"))),
+          col("carrier_type_c") === col("_dim_ct"), "left")
+        .select(
+          col("carrier_bp_c").as("carrier_bp"),
+          col("carrier_name_c").as("carrier_name"),
+          col("carrier_rut"),
+          col("carrier_type_id"))
 
-    // bucketed MERGE: scans + rewrites only buckets with source keys,
-    // not the whole table (MergeOps.mergeBucketed)
-    MergeOps.mergeBucketed(store, "empresa", SilverSchemas.empresa, source,
-      Seq("carrier_bp"), "carrier_id",
-      Seq("carrier_name", "carrier_rut", "carrier_type_id"))
-
-    val (total, processed, errors) = counts(flagged)
-    if (errors > 0) quarantine(store, "empresa", rejects)
-    flagged.unpersist()
-    EtlResult(total, processed, errors, rejects)
+      // bucketed MERGE: scans + rewrites only buckets with source keys,
+      // not the whole table (MergeOps.mergeBucketed)
+      MergeOps.mergeBucketed(store, "empresa", SilverSchemas.empresa, source,
+        Seq("carrier_bp"), "carrier_id",
+        Seq("carrier_name", "carrier_rut", "carrier_type_id"))
+    }
   }
 }
 
@@ -149,51 +159,38 @@ object ConductorPipeline {
         concat(lit("Empresa con carrier_bp '"), coalesce(col("carrier_bp_c"), lit("")),
           lit("' no encontrada.")))
       .when(col("driver_role_c").isNull, "'driver_role' está vacío.")
-    val flagged = conformed.withColumn("error_reason", reason)
-      // one materialization feeds counts, quarantine, and the merge
-      // source instead of three scan+validate re-executions
-      .persist()
-    val rejects = flagged.filter(col("error_reason").isNotNull)
-      .select((bronze.columns.map(col) :+ col("error_reason")).toIndexedSeq: _*)
-    val accepted = flagged.filter(col("error_reason").isNull)
-      .withColumn("conductor_nombre", F.clean_text(col("driver_name")))
-      .withColumn("conductor_fecha_nacimiento", F.safe_to_date(col("birth_date")))
-      .withColumn("conductor_telefono", F.clean_text(col("phone_number")))
-      .withColumn("conductor_email", F.clean_text(col("email")))
 
-    // D1 conductor_rol (`conductor.ts:108-115`)
-    val rolDim = DimOps.sync(store, "conductor_rol", "conductor_rol_id",
-      Seq("conductor_rol"),
-      accepted.select(col("driver_role_c").as("conductor_rol")))
+    land(store, "conductor", bronze, conformed, reason) { valid =>
+      val accepted = valid
+        .withColumn("conductor_nombre", F.clean_text(col("driver_name")))
+        .withColumn("conductor_fecha_nacimiento", F.safe_to_date(col("birth_date")))
+        .withColumn("conductor_telefono", F.clean_text(col("phone_number")))
+        .withColumn("conductor_email", F.clean_text(col("email")))
 
-    // H2 merge on conductor_rut (`conductor.ts:117-143`)
-    val source = MergeOps.lastWins(accepted, Seq("conductor_rut"))
-      .join(broadcast(rolDim.select(col("conductor_rol_id"),
-          col("conductor_rol").as("_dim_rol"))),
-        col("driver_role_c") === col("_dim_rol"), "left")
-      .select(col("conductor_rut"), col("carrier_id"), col("conductor_rol_id"),
-        col("conductor_nombre"), col("conductor_fecha_nacimiento"),
-        col("conductor_telefono"), col("conductor_email"))
+      // D1 conductor_rol (`conductor.ts:108-115`)
+      val rolDim = DimOps.sync(store, "conductor_rol", "conductor_rol_id",
+        Seq("conductor_rol"),
+        accepted.select(col("driver_role_c").as("conductor_rol")))
 
-    MergeOps.mergeBucketed(store, "conductor", SilverSchemas.conductor, source,
-      Seq("conductor_rut"), "conductor_id",
-      Seq("carrier_id", "conductor_rol_id", "conductor_nombre",
-        "conductor_fecha_nacimiento", "conductor_telefono", "conductor_email"))
+      // H2 merge on conductor_rut (`conductor.ts:117-143`)
+      val source = MergeOps.lastWins(accepted, Seq("conductor_rut"))
+        .join(broadcast(rolDim.select(col("conductor_rol_id"),
+            col("conductor_rol").as("_dim_rol"))),
+          col("driver_role_c") === col("_dim_rol"), "left")
+        .select(col("conductor_rut"), col("carrier_id"), col("conductor_rol_id"),
+          col("conductor_nombre"), col("conductor_fecha_nacimiento"),
+          col("conductor_telefono"), col("conductor_email"))
 
-    // RETURNING conductor_id -> join-back on natural key (SURVEY §7)
-    val conductorIds = store.read("conductor", SilverSchemas.conductor)
-      .select(col("conductor_id"), col("conductor_rut").as("_ck"))
-    val withId = accepted
-      .join(broadcast(conductorIds), col("conductor_rut") === col("_ck"))
-      .drop("_ck")
+      MergeOps.mergeBucketed(store, "conductor", SilverSchemas.conductor, source,
+        Seq("conductor_rut"), "conductor_id",
+        Seq("carrier_id", "conductor_rol_id", "conductor_nombre",
+          "conductor_fecha_nacimiento", "conductor_telefono", "conductor_email"))
 
-    appendHojaVida(store, withId)
-    appendLicencia(store, withId)
-
-    val (total, processed, errors) = counts(flagged)
-    if (errors > 0) quarantine(store, "conductor", rejects)
-    flagged.unpersist()
-    EtlResult(total, processed, errors, rejects)
+      val withId = withIds(store, "conductor", SilverSchemas.conductor,
+        "conductor_rut", accepted, "conductor_rut")
+      appendHojaVida(store, withId)
+      appendLicencia(store, withId)
+    }
   }
 
   /** H4 historized hoja_vida + G1-G3 children. Reference appends one
@@ -204,58 +201,41 @@ object ConductorPipeline {
       .filter(col("hoja_de_vida_data").isNotNull)
       .withColumn("_hv", from_json(col("hoja_de_vida_data"), PayloadSchemas.hojaVida))
       .filter(col("_hv.certificado").isNotNull)
-
-    if (parsed.isEmpty) return
-
-    val maxHv = maxIdOf(store, "hoja_vida", SilverSchemas.hojaVida, "hoja_vida_id")
-    val hv = withSurrogateId(parsed, "hoja_vida_id", maxHv,
-      Seq(col("conductor_rut"), col("_row_id")))
       .withColumn("folio", F.clean_json_text(col("_hv.certificado.folio")))
       .withColumn("codigo_verificacion", F.clean_json_text(col("_hv.certificado.codigoVerificacion")))
       .withColumn("fecha_emision", F.safe_to_date(col("_hv.certificado.fechaEmision")))
       .withColumn("comuna", F.clean_json_text(col("_hv.persona.comuna")))
       .withColumn("domicilio", F.clean_json_text(col("_hv.persona.domicilio")))
-    store.append("hoja_vida", conformTo(hv, SilverSchemas.hojaVida))
 
-    // G1+G2: both arrays land in hoja_vida_restriccion, restricciones
-    // first (`conductor.ts:168-189`)
-    val childCols = Seq(col("hoja_vida_id"), col("_src"), col("_pos"),
-      col("fecha_anotacion"), col("restriccion"))
-    val rest = hv.select(col("hoja_vida_id"), lit(0).as("_src"),
-        posexplode(col("_hv.persona.restriccionesLicencia")).as(Seq("_pos", "_e")))
-      .withColumn("fecha_anotacion", F.safe_to_date(col("_e.fechaAnotacion")))
-      .withColumn("restriccion", F.clean_json_text(col("_e.bloqueRestriccionLicencia")))
-      .select(childCols: _*)
-    val dur = hv.select(col("hoja_vida_id"), lit(1).as("_src"),
-        posexplode(col("_hv.persona.duracionesRestringidas")).as(Seq("_pos", "_e")))
-      .withColumn("fecha_anotacion", F.safe_to_date(col("_e.fechaAnotacion")))
-      .withColumn("restriccion", F.clean_json_text(col("_e.bloqueDuracionRestringida")))
-      .select(childCols: _*)
-    val restAll = rest.unionByName(dur)
-    if (!restAll.isEmpty) {
-      val maxR = maxIdOf(store, "hoja_vida_restriccion",
-        SilverSchemas.hojaVidaRestriccion, "hoja_vida_restriccion_id")
-      val out = withSurrogateId(restAll, "hoja_vida_restriccion_id", maxR,
-        Seq(col("hoja_vida_id"), col("_src"), col("_pos")))
-      store.append("hoja_vida_restriccion",
-        conformTo(out, SilverSchemas.hojaVidaRestriccion))
-    }
+    appendChild(store, "hoja_vida", SilverSchemas.hojaVida, parsed,
+        Seq(col("conductor_rut"), col("_row_id"))).foreach { hv =>
+      // G1+G2: both arrays land in hoja_vida_restriccion, restricciones
+      // first (`conductor.ts:168-189`)
+      val childCols = Seq(col("hoja_vida_id"), col("_src"), col("_pos"),
+        col("fecha_anotacion"), col("restriccion"))
+      val rest = hv.select(col("hoja_vida_id"), lit(0).as("_src"),
+          posexplode(col("_hv.persona.restriccionesLicencia")).as(Seq("_pos", "_e")))
+        .withColumn("fecha_anotacion", F.safe_to_date(col("_e.fechaAnotacion")))
+        .withColumn("restriccion", F.clean_json_text(col("_e.bloqueRestriccionLicencia")))
+        .select(childCols: _*)
+      val dur = hv.select(col("hoja_vida_id"), lit(1).as("_src"),
+          posexplode(col("_hv.persona.duracionesRestringidas")).as(Seq("_pos", "_e")))
+        .withColumn("fecha_anotacion", F.safe_to_date(col("_e.fechaAnotacion")))
+        .withColumn("restriccion", F.clean_json_text(col("_e.bloqueDuracionRestringida")))
+        .select(childCols: _*)
+      appendChild(store, "hoja_vida_restriccion", SilverSchemas.hojaVidaRestriccion,
+        rest.unionByName(dur), Seq(col("hoja_vida_id"), col("_src"), col("_pos")))
 
-    // G3: infracciones (`conductor.ts:192-208`)
-    val infr = hv.select(col("hoja_vida_id"),
-        posexplode(col("_hv.persona.infraccionesRegistradas")).as(Seq("_pos", "_e")))
-      .withColumn("proceso", F.clean_json_text(col("_e.procesoNumero")))
-      .withColumn("tribunal", F.clean_json_text(col("_e.tribunal")))
-      .withColumn("fecha_denuncia", F.safe_to_date(col("_e.fechaDenuncia")))
-      .withColumn("infraccion", F.clean_json_text(col("_e.infraccion")))
-      .withColumn("resolucion", F.clean_json_text(col("_e.resolucion")))
-    if (!infr.isEmpty) {
-      val maxI = maxIdOf(store, "hoja_vida_infraccion",
-        SilverSchemas.hojaVidaInfraccion, "hoja_vida_infraccion_id")
-      val out = withSurrogateId(infr, "hoja_vida_infraccion_id", maxI,
-        Seq(col("hoja_vida_id"), col("_pos")))
-      store.append("hoja_vida_infraccion",
-        conformTo(out, SilverSchemas.hojaVidaInfraccion))
+      // G3: infracciones (`conductor.ts:192-208`)
+      val infr = hv.select(col("hoja_vida_id"),
+          posexplode(col("_hv.persona.infraccionesRegistradas")).as(Seq("_pos", "_e")))
+        .withColumn("proceso", F.clean_json_text(col("_e.procesoNumero")))
+        .withColumn("tribunal", F.clean_json_text(col("_e.tribunal")))
+        .withColumn("fecha_denuncia", F.safe_to_date(col("_e.fechaDenuncia")))
+        .withColumn("infraccion", F.clean_json_text(col("_e.infraccion")))
+        .withColumn("resolucion", F.clean_json_text(col("_e.resolucion")))
+      appendChild(store, "hoja_vida_infraccion", SilverSchemas.hojaVidaInfraccion,
+        infr, Seq(col("hoja_vida_id"), col("_pos")))
     }
   }
 
@@ -267,31 +247,23 @@ object ConductorPipeline {
         col("licencia_reverso_data").isNotNull)
       .withColumn("_lf", from_json(col("licencia_frontal_data"), PayloadSchemas.licenciaFrontal))
       .withColumn("_lr", from_json(col("licencia_reverso_data"), PayloadSchemas.licenciaReverso))
-
-    if (parsed.isEmpty) return
-
-    val maxL = maxIdOf(store, "licencia", SilverSchemas.licencia, "licencia_id")
-    val lic = withSurrogateId(parsed, "licencia_id", maxL,
-      Seq(col("conductor_rut"), col("_row_id")))
       .withColumn("municipalidad", F.clean_json_text(col("_lf.municipalidad")))
       .withColumn("fecha_de_control", F.safe_to_date(col("_lf.fecha_de_control")))
       .withColumn("fecha_ultimo_control", F.safe_to_date(col("_lf.fecha_ultimo_control")))
       .withColumn("codigo", F.clean_json_text(col("_lr.codigo")))
-    store.append("licencia", conformTo(lic, SilverSchemas.licencia))
 
-    // G4: explode clase -> get-or-create clase_licencia -> bridge
-    val clase = lic.select(col("licencia_id"),
-      posexplode(col("_lf.clase")).as(Seq("_pos", "clase_licencia")))
-    if (!clase.isEmpty) {
-      val claseDim = DimOps.sync(store, "clase_licencia", "clase_licencia_id",
-        Seq("clase_licencia"), clase.select("clase_licencia"))
-      val maxB = maxIdOf(store, "licencia_clase", SilverSchemas.licenciaClase,
-        "licencia_clase_id")
-      val bridge = withSurrogateId(
-        clase.join(broadcast(claseDim.select("clase_licencia_id", "clase_licencia")),
-          Seq("clase_licencia"), "left"),
-        "licencia_clase_id", maxB, Seq(col("licencia_id"), col("_pos")))
-      store.append("licencia_clase", conformTo(bridge, SilverSchemas.licenciaClase))
+    appendChild(store, "licencia", SilverSchemas.licencia, parsed,
+        Seq(col("conductor_rut"), col("_row_id"))).foreach { lic =>
+      // G4: explode clase -> get-or-create clase_licencia -> bridge
+      val clase = lic.select(col("licencia_id"),
+        posexplode(col("_lf.clase")).as(Seq("_pos", "clase_licencia")))
+      appendChild(store, "licencia_clase", SilverSchemas.licenciaClase, clase,
+        Seq(col("licencia_id"), col("_pos")), shape = { c =>
+          val claseDim = DimOps.sync(store, "clase_licencia", "clase_licencia_id",
+            Seq("clase_licencia"), c.select("clase_licencia"))
+          c.join(broadcast(claseDim.select("clase_licencia_id", "clase_licencia")),
+            Seq("clase_licencia"), "left")
+        })
     }
   }
 }

@@ -63,98 +63,83 @@ object VehiculoPipeline {
       .when(col("vehicle_designation_c").isNull, "vehicle_designation vacío")
       .when(col("vehicle_brand_c").isNull, "vehicle_make vacío")
       .when(col("vehicle_model_c").isNull, "vehicle_model vacío")
-    val flagged = conformed.withColumn("error_reason", reason)
-      // one materialization feeds counts, quarantine, and the merge
-      // source instead of three scan+validate re-executions
-      .persist()
-    val rejects = flagged.filter(col("error_reason").isNotNull)
-      .select((bronze.columns.map(col) :+ col("error_reason")).toIndexedSeq: _*)
-    val accepted = flagged.filter(col("error_reason").isNull)
+    land(store, "vehiculo", bronze, conformed, reason) { accepted =>
+      // D1 dims (`vehiculo.ts:134-159`)
+      val tipoDim = DimOps.sync(store, "tipo_vehiculo", "vehicle_type_id",
+        Seq("vehicle_type"), accepted.select(col("vehicle_type_c").as("vehicle_type")))
+      val desigDim = DimOps.sync(store, "tipo_designacion", "vehicle_designation_id",
+        Seq("vehicle_designation"),
+        accepted.select(col("vehicle_designation_c").as("vehicle_designation")))
+      val marcaDim = DimOps.sync(store, "vehiculo_marca", "vehicle_brand_id",
+        Seq("vehicle_brand"), accepted.select(col("vehicle_brand_c").as("vehicle_brand")))
 
-    // D1 dims (`vehiculo.ts:134-159`)
-    val tipoDim = DimOps.sync(store, "tipo_vehiculo", "vehicle_type_id",
-      Seq("vehicle_type"), accepted.select(col("vehicle_type_c").as("vehicle_type")))
-    val desigDim = DimOps.sync(store, "tipo_designacion", "vehicle_designation_id",
-      Seq("vehicle_designation"),
-      accepted.select(col("vehicle_designation_c").as("vehicle_designation")))
-    val marcaDim = DimOps.sync(store, "vehiculo_marca", "vehicle_brand_id",
-      Seq("vehicle_brand"), accepted.select(col("vehicle_brand_c").as("vehicle_brand")))
+      // D2 composite modelo dim: key (vehicle_model, vehicle_brand_id)
+      // via the brand lookup (C3/C4, `vehiculo.ts:161-176`)
+      val withBrand = accepted
+        .join(broadcast(marcaDim.select(col("vehicle_brand_id"),
+            col("vehicle_brand").as("_dim_brand"))),
+          col("vehicle_brand_c") === col("_dim_brand"), "left")
+      val modeloDim = DimOps.sync(store, "vehiculo_modelo", "vehicle_model_id",
+        Seq("vehicle_model", "vehicle_brand_id"),
+        withBrand.select(col("vehicle_model_c").as("vehicle_model"),
+          col("vehicle_brand_id")),
+        schema = SilverSchemas.vehiculoModelo)
 
-    // D2 composite modelo dim: key (vehicle_model, vehicle_brand_id)
-    // via the brand lookup (C3/C4, `vehiculo.ts:161-176`)
-    val withBrand = accepted
-      .join(broadcast(marcaDim.select(col("vehicle_brand_id"),
-          col("vehicle_brand").as("_dim_brand"))),
-        col("vehicle_brand_c") === col("_dim_brand"), "left")
-    val modeloDim = DimOps.sync(store, "vehiculo_modelo", "vehicle_model_id",
-      Seq("vehicle_model", "vehicle_brand_id"),
-      withBrand.select(col("vehicle_model_c").as("vehicle_model"),
-        col("vehicle_brand_id")),
-      schema = SilverSchemas.vehiculoModelo)
+      // B3 typed projection (F4-F6 coercions, `vehiculo.ts:178-234`).
+      // carrier_id is insert-only (H3): within a batch the FIRST row per
+      // plate does the insert in the reference, so its carrier wins even
+      // though every other column takes the last row's value.
+      val firstCarrier = first(col("carrier_id")).over(
+        org.apache.spark.sql.expressions.Window
+          .partitionBy(col("plate_c")).orderBy(col("_row_id")))
+      val source = MergeOps.lastWins(
+          withBrand.withColumn("carrier_id_first", firstCarrier), Seq("plate_c"))
+        .withColumn("carrier_id", col("carrier_id_first"))
+        .join(broadcast(tipoDim.select(col("vehicle_type_id"),
+            col("vehicle_type").as("_dim_vt"))),
+          col("vehicle_type_c") === col("_dim_vt"), "left")
+        .join(broadcast(desigDim.select(col("vehicle_designation_id"),
+            col("vehicle_designation").as("_dim_vd"))),
+          col("vehicle_designation_c") === col("_dim_vd"), "left")
+        .join(broadcast(modeloDim.select(col("vehicle_model_id"),
+            col("vehicle_model").as("_dim_vm"), col("vehicle_brand_id").as("_dim_vmb"))),
+          col("vehicle_model_c") === col("_dim_vm") &&
+            col("vehicle_brand_id") === col("_dim_vmb"), "left")
+        .select(
+          col("plate_c").as("registration_plate"),
+          col("carrier_id"),
+          toInt(col("year_of_manufacture")).as("year_of_manufacture"),
+          F.string_to_bool(col("gps")).as("gps"),
+          F.clean_json_text(col("engine_number")).as("engine_number"),
+          F.clean_json_text(col("chassis_number")).as("chassis_number"),
+          F.clean_json_text(col("vin")).as("vin"),
+          toInt(col("odometer_km")).as("odometer_km"),
+          F.clean_json_text(col("cortina")).as("cortina"),
+          F.safe_to_date(col("instalacion_cortina")).as("instalacion_cortina"),
+          F.string_to_bool(col("parrilla")).as("parrilla"),
+          toDouble(col("peso")).as("peso"),
+          toDouble(col("largo")).as("largo"),
+          toDouble(col("ancho")).as("ancho"),
+          toDouble(col("alto")).as("alto"),
+          F.clean_json_text(col("mop_clasification")).as("mop_clasification"),
+          toInt(col("nominal_pallet")).as("nominal_pallet"),
+          col("vehicle_type_id"), col("vehicle_designation_id"),
+          col("vehicle_model_id"))
 
-    // B3 typed projection (F4-F6 coercions, `vehiculo.ts:178-234`).
-    // carrier_id is insert-only (H3): within a batch the FIRST row per
-    // plate does the insert in the reference, so its carrier wins even
-    // though every other column takes the last row's value.
-    val firstCarrier = first(col("carrier_id")).over(
-      org.apache.spark.sql.expressions.Window
-        .partitionBy(col("plate_c")).orderBy(col("_row_id")))
-    val source = MergeOps.lastWins(
-        withBrand.withColumn("carrier_id_first", firstCarrier), Seq("plate_c"))
-      .withColumn("carrier_id", col("carrier_id_first"))
-      .join(broadcast(tipoDim.select(col("vehicle_type_id"),
-          col("vehicle_type").as("_dim_vt"))),
-        col("vehicle_type_c") === col("_dim_vt"), "left")
-      .join(broadcast(desigDim.select(col("vehicle_designation_id"),
-          col("vehicle_designation").as("_dim_vd"))),
-        col("vehicle_designation_c") === col("_dim_vd"), "left")
-      .join(broadcast(modeloDim.select(col("vehicle_model_id"),
-          col("vehicle_model").as("_dim_vm"), col("vehicle_brand_id").as("_dim_vmb"))),
-        col("vehicle_model_c") === col("_dim_vm") &&
-          col("vehicle_brand_id") === col("_dim_vmb"), "left")
-      .select(
-        col("plate_c").as("registration_plate"),
-        col("carrier_id"),
-        toInt(col("year_of_manufacture")).as("year_of_manufacture"),
-        F.string_to_bool(col("gps")).as("gps"),
-        F.clean_json_text(col("engine_number")).as("engine_number"),
-        F.clean_json_text(col("chassis_number")).as("chassis_number"),
-        F.clean_json_text(col("vin")).as("vin"),
-        toInt(col("odometer_km")).as("odometer_km"),
-        F.clean_json_text(col("cortina")).as("cortina"),
-        F.safe_to_date(col("instalacion_cortina")).as("instalacion_cortina"),
-        F.string_to_bool(col("parrilla")).as("parrilla"),
-        toDouble(col("peso")).as("peso"),
-        toDouble(col("largo")).as("largo"),
-        toDouble(col("ancho")).as("ancho"),
-        toDouble(col("alto")).as("alto"),
-        F.clean_json_text(col("mop_clasification")).as("mop_clasification"),
-        toInt(col("nominal_pallet")).as("nominal_pallet"),
-        col("vehicle_type_id"), col("vehicle_designation_id"),
-        col("vehicle_model_id"))
+      // H3 merge — carrier_id set on insert, never updated; bucketed so
+      // only buckets containing this batch's plates are scanned/rewritten
+      MergeOps.mergeBucketed(store, "vehiculo", SilverSchemas.vehiculo, source,
+        Seq("registration_plate"), "vehicle_id",
+        updateCols = Seq("year_of_manufacture", "gps", "engine_number",
+          "chassis_number", "vin", "odometer_km", "cortina",
+          "instalacion_cortina", "parrilla", "peso", "largo", "ancho", "alto",
+          "mop_clasification", "nominal_pallet", "vehicle_type_id",
+          "vehicle_designation_id", "vehicle_model_id"),
+        insertOnlyCols = Seq("carrier_id"))
 
-    // H3 merge — carrier_id set on insert, never updated; bucketed so
-    // only buckets containing this batch's plates are scanned/rewritten
-    MergeOps.mergeBucketed(store, "vehiculo", SilverSchemas.vehiculo, source,
-      Seq("registration_plate"), "vehicle_id",
-      updateCols = Seq("year_of_manufacture", "gps", "engine_number",
-        "chassis_number", "vin", "odometer_km", "cortina",
-        "instalacion_cortina", "parrilla", "peso", "largo", "ancho", "alto",
-        "mop_clasification", "nominal_pallet", "vehicle_type_id",
-        "vehicle_designation_id", "vehicle_model_id"),
-      insertOnlyCols = Seq("carrier_id"))
-
-    // vehicle_id join-back for children (replaces RETURNING)
-    val vehicleIds = store.read("vehiculo", SilverSchemas.vehiculo)
-      .select(col("vehicle_id"), col("registration_plate").as("_vk"))
-    val withVid = accepted.join(broadcast(vehicleIds), col("plate_c") === col("_vk"))
-
-    appendChildren(store, withVid)
-
-    val (total, processed, errors) = counts(flagged)
-    if (errors > 0) quarantine(store, "vehiculo", rejects)
-    flagged.unpersist()
-    EtlResult(total, processed, errors, rejects)
+      appendChildren(store, withIds(store, "vehiculo", SilverSchemas.vehiculo,
+        "registration_plate", accepted, "plate_c"))
+    }
   }
 
   /** H5 historized children (`vehiculo.ts:239-318`). */
@@ -162,28 +147,23 @@ object VehiculoPipeline {
     val ord = Seq(col("vehicle_id"), col("_row_id"))
 
     // revision_tecnica: unconditional per accepted row
-    if (!withVid.isEmpty) {
-      val maxRt = maxIdOf(store, "revision_tecnica",
-        SilverSchemas.revisionTecnica, "revision_tecnica_id")
-      val statusCols = Seq("emissions_crt_status", "identification_status",
-        "visual_status", "lights_status", "alignment_status", "brakes_status",
-        "clearances_status", "emissions_status", "opacity_status",
-        "steering_angle_status", "noise_status", "suspension_status")
-      val rt0 = withVid
-        .withColumn("fecha_revision_tecnica_d", F.safe_to_date(col("fecha_revision_tecnica")))
-        .withColumn("fecha_vencimiento_revision_tecnica_d",
-          F.safe_to_date(col("fecha_vencimiento_revision_tecnica")))
-      val rt = statusCols.foldLeft(rt0) { (df, c) =>
-          df.withColumn(s"${c}_b", F.status_to_bool(col(c)))
-        }
-        .drop("fecha_revision_tecnica" +: "fecha_vencimiento_revision_tecnica" +: statusCols: _*)
-        .withColumnsRenamed(
-          (statusCols.map(c => s"${c}_b" -> c) ++ Seq(
-            "fecha_revision_tecnica_d" -> "fecha_revision_tecnica",
-            "fecha_vencimiento_revision_tecnica_d" -> "fecha_vencimiento_revision_tecnica")).toMap)
-      val out = withSurrogateId(rt, "revision_tecnica_id", maxRt, ord)
-      store.append("revision_tecnica", conformTo(out, SilverSchemas.revisionTecnica))
-    }
+    val statusCols = Seq("emissions_crt_status", "identification_status",
+      "visual_status", "lights_status", "alignment_status", "brakes_status",
+      "clearances_status", "emissions_status", "opacity_status",
+      "steering_angle_status", "noise_status", "suspension_status")
+    val rt0 = withVid
+      .withColumn("fecha_revision_tecnica_d", F.safe_to_date(col("fecha_revision_tecnica")))
+      .withColumn("fecha_vencimiento_revision_tecnica_d",
+        F.safe_to_date(col("fecha_vencimiento_revision_tecnica")))
+    val rt = statusCols.foldLeft(rt0) { (df, c) =>
+        df.withColumn(s"${c}_b", F.status_to_bool(col(c)))
+      }
+      .drop("fecha_revision_tecnica" +: "fecha_vencimiento_revision_tecnica" +: statusCols: _*)
+      .withColumnsRenamed(
+        (statusCols.map(c => s"${c}_b" -> c) ++ Seq(
+          "fecha_revision_tecnica_d" -> "fecha_revision_tecnica",
+          "fecha_vencimiento_revision_tecnica_d" -> "fecha_vencimiento_revision_tecnica")).toMap)
+    appendChild(store, "revision_tecnica", SilverSchemas.revisionTecnica, rt, ord)
 
     // permiso_circulacion (payload-gated)
     val pc = withVid.filter(col("permiso_circulacion_data").isNotNull)
@@ -192,13 +172,7 @@ object VehiculoPipeline {
       .withColumn("municipalidad", F.clean_json_text(col("_p.municipalidad")))
       .withColumn("fecha_emision", F.safe_to_date(col("_p.fecha_emision")))
       .withColumn("fecha_vencimiento", F.safe_to_date(col("_p.fecha_vencimiento")))
-    if (!pc.isEmpty) {
-      val maxP = maxIdOf(store, "permiso_circulacion",
-        SilverSchemas.permisoCirculacion, "permiso_circulacion_id")
-      store.append("permiso_circulacion", conformTo(
-        withSurrogateId(pc, "permiso_circulacion_id", maxP, ord),
-        SilverSchemas.permisoCirculacion))
-    }
+    appendChild(store, "permiso_circulacion", SilverSchemas.permisoCirculacion, pc, ord)
 
     // soap (payload-gated; numero_poliza 0 -> null per JS `|| null`)
     val so = withVid.filter(col("soap_data").isNotNull)
@@ -207,11 +181,7 @@ object VehiculoPipeline {
         when(col("_p.numero_poliza") === 0, lit(null)).otherwise(col("_p.numero_poliza")))
       .withColumn("institucion_aseguradora", F.clean_json_text(col("_p.institucion_aseguradora")))
       .withColumn("fecha_vencimiento_poliza", F.safe_to_date(col("_p.fecha_vencimiento_poliza")))
-    if (!so.isEmpty) {
-      val maxS = maxIdOf(store, "soap", SilverSchemas.soap, "soap_id")
-      store.append("soap", conformTo(
-        withSurrogateId(so, "soap_id", maxS, ord), SilverSchemas.soap))
-    }
+    appendChild(store, "soap", SilverSchemas.soap, so, ord)
 
     // certificado_anotaciones_vigentes (payload-gated, nested struct)
     val cav = withVid.filter(col("certificado_anotaciones_vigentes_data").isNotNull)
@@ -224,12 +194,6 @@ object VehiculoPipeline {
       .withColumn("nombre_propietario", F.clean_json_text(col("_p.datos_propietario_actual.nombre")))
       .withColumn("rut_propietario", F.clean_json_text(col("_p.datos_propietario_actual.rut")))
       .withColumn("fecha_adquisicion", F.safe_to_date(col("_p.datos_propietario_actual.fecha_adquisicion")))
-    if (!cav.isEmpty) {
-      val maxC = maxIdOf(store, "certificado_anotaciones_vigentes",
-        SilverSchemas.cav, "certificado_anotaciones_vigentes_id")
-      store.append("certificado_anotaciones_vigentes", conformTo(
-        withSurrogateId(cav, "certificado_anotaciones_vigentes_id", maxC, ord),
-        SilverSchemas.cav))
-    }
+    appendChild(store, "certificado_anotaciones_vigentes", SilverSchemas.cav, cav, ord)
   }
 }

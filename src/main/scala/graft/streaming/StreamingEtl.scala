@@ -3,16 +3,16 @@ package graft.streaming
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.functions.col
 
-import graft.etl.{BronzeReader, EtlRunner, SilverStore}
+import graft.etl.{EtlRunner, SilverStore}
 
 /** The reference's event-driven ETL, end to end, as one streaming
   * query: GCS `object.finalize` → Cloud Function becomes file-source
   * micro-batches → per-file routing → the SAME batch pipelines
   * (`EtlRunner.processFile`) inside `foreachBatch`.
   *
-  * Files are processed in (kind, name) order inside a batch — empresa
-  * before conductor/vehiculo, mirroring the FK dependency that the
-  * reference satisfies operationally by uploading empresas first.
+  * Files are processed in [[EtlRunner.landingOrder]] inside a batch —
+  * empresa before conductor/vehiculo, mirroring the FK dependency that
+  * the reference satisfies operationally by uploading empresas first.
   * Checkpointing makes each file exactly-once; replay after a crash
   * re-runs only unacknowledged batches (upserts idempotent, historized
   * appends duplicate — faithful to the reference, SURVEY §2 I).
@@ -45,16 +45,8 @@ object StreamingEtl {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         val files = batch.select("path").distinct()
-          .collect().map(_.getString(0))
-        val ordered = files.sortBy { p =>
-          val name = p.split('/').last
-          BronzeReader.classify(name) match {
-            case Some(BronzeReader.EmpresaFile) => (0, name)
-            case Some(_)                        => (1, name)
-            case None                           => (2, name)
-          }
-        }
-        ordered.foreach { p =>
+          .collect().map(_.getString(0)).toSeq
+        EtlRunner.landingOrder(files).foreach { p =>
           EtlRunner.processFile(store, p).foreach { r =>
             // D3 per-file summary, like the reference's console lines
             System.err.println(

@@ -132,8 +132,8 @@ object TextQueries {
     * long — n < 2^20 always holds because the kernel emits DISTINCT
     * shingles of a bounded-length document. Doc order survives packing
     * (doc_id in the high bits), so sorted posting lists and the x<y
-    * pair rule are unchanged. Shared with tools.Q24Probe so the
-    * probe's stage timings can never drift from the shipped query. */
+    * pair rule are unchanged. Shared with [[DedupIndex]] so the
+    * persisted index and the one-shot query index the same rows. */
   private[graft] def jaccardIndexRows(docs: DataFrame): DataFrame =
     // spread BEFORE the kernel: a single-row-group local file would
     // otherwise serialize the per-shingle md5 kernel onto one core

@@ -75,32 +75,6 @@ object DeltaServeBench {
         (System.nanoTime() - t0) / 1e9
       }.min
 
-      // per-job profile of one delta serve (SPARK_GRAFT_PROFILE=1):
-      // job count × fixed scheduling cost is the serve's floor
-      if (sys.env.contains("SPARK_GRAFT_PROFILE")) {
-        val jobs = collection.mutable.ArrayBuffer.empty[(Int, Long)]
-        val starts = collection.mutable.Map.empty[Int, Long]
-        val l = new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            starts(j.jobId) = j.time
-          override def onJobEnd(
-              j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-            jobs += j.jobId -> (j.time - starts.getOrElse(j.jobId, j.time))
-        }
-        s.sparkContext.addSparkListener(l)
-        val t0 = System.nanoTime()
-        graft.analytics.RankHistory.withDeltaServedRanks(
-          s, store, hist, changed)(_.count())
-        val wall = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(500) // let the listener bus drain
-        s.sparkContext.removeSparkListener(l)
-        println(f"  profile: wall $wall%.2fs, ${jobs.size} jobs, " +
-          f"job-time ${jobs.map(_._2).sum / 1e3}%.2fs; slowest: " +
-          jobs.sortBy(-_._2).take(8)
-            .map { case (id, ms) => s"#$id=${ms}ms" }.mkString(" "))
-      }
-
       val tDelta = timeMin(
         graft.analytics.RankHistory.withDeltaServedRanks(
           s, store, hist, changed)(_.count()))

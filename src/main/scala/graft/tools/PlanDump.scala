@@ -17,7 +17,7 @@ import org.apache.spark.sql.execution.{ExplainMode, SQLExecution}
   * that actually ran (`isFinalPlan=true`: final shuffle reads,
   * runtime-chosen join strategies); it is written as
   * `<outDir>/<query>_<suffix>.txt`. A comma list selects by exact name
-  * or prefix (the QueryBench convention); `bench` selects the
+  * or prefix ([[QueryBench.select]]); `bench` selects the
   * bench-flagged headline set. */
 object PlanDump {
 
@@ -41,14 +41,7 @@ object PlanDump {
     val names: Seq[String] =
       if (a.length < 4 || a(3) == "bench")
         graft.SparkEntry.specs.filter(_._2.bench).keys.toSeq.sorted
-      else a(3).split(",").toSeq.flatMap { q =>
-        require(q.nonEmpty, s"empty query name in '${a(3)}'")
-        val ks = graft.SparkEntry.queries.keySet
-        val matched =
-          if (ks(q)) Seq(q) else ks.filter(_.startsWith(q)).toSeq.sorted
-        require(matched.nonEmpty, s"no query matches '$q'")
-        matched
-      }
+      else QueryBench.select(a(3))
     for (q <- names.distinct) {
       val t0 = System.nanoTime()
       val txt = finalPlan(graft.SparkEntry.queries(q)(spark, d))

@@ -14,22 +14,25 @@ object QueryBench {
     val spark = graft.GraftSession.create()
     val d = a(1)
     val runs = if (a.length > 2) a(2).toInt else 2
-    val names = a(0).split(",").toSeq.flatMap { q =>
-      // empty elements would prefix-match EVERY query; a typo must
-      // fail loudly, not silently run nothing
-      require(q.nonEmpty, s"empty query name in '${a(0)}'")
-      val ks = graft.SparkEntry.queries.keySet
-      val matched =
-        if (ks(q)) Seq(q) else ks.filter(_.startsWith(q)).toSeq.sorted
-      require(matched.nonEmpty, s"no query matches '$q'")
-      matched
-    }
-    for (q <- names; i <- 1 to runs) {
+    for (q <- select(a(0)); i <- 1 to runs) {
       val t0 = System.nanoTime()
       graft.SparkEntry.queries(q)(spark, d)
         .write.format("noop").mode("overwrite").save()
       println(f"[querybench] $q run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
     spark.stop()
+  }
+
+  /** The queries a comma list names: each element by exact name, else
+    * every query it prefixes (sorted). */
+  def select(list: String): Seq[String] = list.split(",").toSeq.flatMap { q =>
+    // empty elements would prefix-match EVERY query; a typo must
+    // fail loudly, not silently run nothing
+    require(q.nonEmpty, s"empty query name in '$list'")
+    val ks = graft.SparkEntry.queries.keySet
+    val matched =
+      if (ks(q)) Seq(q) else ks.filter(_.startsWith(q)).toSeq.sorted
+    require(matched.nonEmpty, s"no query matches '$q'")
+    matched
   }
 }

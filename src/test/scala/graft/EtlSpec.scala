@@ -311,7 +311,7 @@ class EtlSpec extends SparkSpec {
 
     // seed the PREVIOUS release's layout: flat snapshot, no _bucket dirs
     val flat = MergeOps.merge(store.read("t", schema),
-      src("a" -> "1", "b" -> "2"), Seq("k"), "id", Seq("v"))
+      src("a" -> "1", "b" -> "2"), Seq("k"), "id", 0, Seq("v"))
     store.overwrite("t", flat)
     assert(!store.isBucketed("t"))
     val ids0 = store.read("t", schema).select("k", "id").collect()
@@ -719,5 +719,119 @@ class EtlSpec extends SparkSpec {
     val dirs = new java.io.File(store2.root, "u").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("_bucket="))
     assert(dirs.isEmpty, s"emptied buckets must be removed: ${dirs.toSeq}")
+  }
+
+  // ── one landing, every Silver table pinned ─────────────────────────
+
+  private val vehiculoHeader = BronzeSchemas.vehiculo.fieldNames.mkString(";")
+
+  /** The FIXTURES.md corpus as one landing: empresa, conductor,
+    * vehiculo, the conductor file replayed, then a vehiculo update file
+    * (UTF-8 BOM; an existing plate re-landed under another carrier, a
+    * new model and designation; a new plate and brand; a reject). */
+  private def landCorpus(store: SilverStore, dir: String): Unit = {
+    val anaHv = q(
+      """{"certificado":{"folio":"F200","fechaEmision":"02-01-2025","codigoVerificacion":"CV2"},
+        |"persona":{"comuna":"MAIPU","domicilio":"PASAJE 2",
+        |"infraccionesRegistradas":[{"procesoNumero":"P-7","tribunal":"JPL MAIPU","fechaDenuncia":"2021-03-04","infraccion":"LUZ ROJA","resolucion":"MULTA"},
+        |{"procesoNumero":"P-8","tribunal":"JPL MAIPU","fechaDenuncia":"2022-05-06","infraccion":"VELOCIDAD","resolucion":"ABSUELTO"}]}}"""
+        .stripMargin.replace("\n", ""))
+    val anaLf = q("""{"clase":["B","C"],"municipalidad":"MAIPU","fecha_de_control":"2024-02-03","fecha_ultimo_control":"2030-02-03"}""")
+    val conductor = writeCsv(dir, "conductores_1.csv",
+      s"""driver_name;national_id;birth_date;phone_number;email;carrier_bp;driver_role;hoja_de_vida_data;licencia_frontal_data;licencia_reverso_data
+         |JUAN  PEREZ;12345678-5;24-06-1990;+569111;j@x.cl;1111111;Titular;$hojaVidaJson;$licFrontalJson;$licReversoJson
+         |MAL RUT;12345678-9;01-01-1990;;;1111111;Titular;;;
+         |SIN EMPRESA;11111111-1;01-01-1990;;;9999999;Titular;;;
+         |ANA SOTO;7654321-6;1985-03-02, 10:00;;a@x.cl;2222222;Suplente;$anaHv;$anaLf;${q("""{"codigo":"ANA-1"}""")}
+         |SIN ROL;22222222-2;01-01-1990;;;1111111;;;;
+         |JUAN ACTUALIZADO;12.345.678-5;25/06/1990;+569222;;1111111;Suplente;;;
+         |""".stripMargin)
+    val pc = q("""{"municipalidad":"MAIPU","fecha_emision":"01-03-2025","fecha_vencimiento":"31-03-2026"}""")
+    val soap = q("""{"numero_poliza":987654321,"institucion_aseguradora":"ASEG 1","fecha_vencimiento_poliza":"31-03-2026"}""")
+    val soap0 = q("""{"numero_poliza":0,"institucion_aseguradora":"ASEG 2","fecha_vencimiento_poliza":"01-01-2027"}""")
+    val cav = q("""{"folio":"CAV-1","codigo_verificacion":"K2","fecha_emision":"15-02-2025","limitaciones_al_dominio":"NINGUNA","datos_propietario_actual":{"nombre":"EMPRESA 1","rut":"11111111-1","fecha_adquisicion":"10-10-2020"}}""")
+    val status = "Aprobada;Aprobada;Rechazada;Aprobada;No Aplica;Aprobada;Aprobada;Aprobada;Aprobada;Aprobada;Rechazada;Aprobada"
+    val vehiculo = writeCsv(dir, "vehiculos_1.csv", Seq(vehiculoHeader,
+      s"ABCD12;1111111;2020;si;ENG1;CHS1;VIN1;123456;Lona;05-07-2021;Camion;Carga;true;12000.5;10.2;2.5;3.1;MOP-A;20;VOLVO;FH 500;01-06-2025;01-06-2026;$status;$pc;$cav;$soap",
+      "NOCARRIER1;9999999;2019;no;;;;;;;Camion;Carga;false;;;;;;;VOLVO;FH 500;;;;;;;;;;;;;;;;;",
+      ";1111111;2019;no;;;;;;;Camion;Carga;false;;;;;;;VOLVO;FH 500;;;;;;;;;;;;;;;;;",
+      s"EFGH34;2222222;2018;no;ENG3;;;5000;;;Camion;Carga;no;9000;;;;;;VOLVO;FM 370;02-02-2025;02-02-2026;$status;;;$soap0",
+      s"ABCD12;2222222;2021;verdadero;ENG2;CHS1;VIN1;99;Lona;05-07-2021;Camion;Carga;si;12000.5;10.2;2.5;3.1;MOP-A;20;VOLVO;FH 500;01-06-2025;01-06-2026;$status;;;"
+    ).mkString("", "\n", "\n"))
+    val update = writeCsv(dir, "vehiculos_2_update.csv", Seq("\uFEFF" + vehiculoHeader,
+      s"ABCD12;2222222;2022;no;ENG9;CHS1;VIN1;150000;Lona;05-07-2021;Camion;Refrigerado;no;12500;10.2;2.5;3.1;MOP-B;22;VOLVO;FH 540;01-06-2026;01-06-2027;$status;$pc;;",
+      s"WXYZ98;1111111;2017;si;ENG7;CHS7;VIN7;80000;;;Tracto;Carga;no;7000;;;;;;SCANIA;R 450;;;$status;;$cav;$soap",
+      "NOMAKE1;1111111;2017;si;;;;;;;Tracto;Carga;no;;;;;;;;R 450;;;;;;;;;;;;;;;;;"
+    ).mkString("", "\n", "\n"))
+    val empresa = writeCsv(dir, "empresas_1.csv", empresasCsv)
+    for (f <- Seq(empresa, conductor, vehiculo, conductor, update))
+      EtlRunner.processFile(store, f, Some("2025-10-01"))
+  }
+
+  /** Every table under the store root as its column list plus its
+    * sorted row multiset; the wall-clock audit columns are dropped. */
+  private def silverTables(store: SilverStore): Map[String, Seq[String]] =
+    new java.io.File(store.root).listFiles()
+      .filter(f => f.isDirectory && !f.getName.startsWith("."))
+      .map { d =>
+        val df = store.read(d.getName).drop("date_created", "date_updated")
+        d.getName -> (df.columns.mkString(",") +:
+          df.collect().map(_.mkString("|")).toSeq.sorted)
+      }.toMap
+
+  test("landing characterization: every Silver row and surrogate id pinned") {
+    val store = new SilverStore(spark, mkTmp("silver-char"))
+    landCorpus(store, mkTmp("etl-char"))
+    val tables = silverTables(store)
+    def sha(lines: Seq[String]): String =
+      java.security.MessageDigest.getInstance("SHA-256")
+        .digest(lines.mkString("\n").getBytes("UTF-8"))
+        .map("%02x".format(_)).mkString.take(16)
+    val got = tables.map { case (t, ls) => t -> (ls.size - 1, sha(ls)) }
+    // (rows, hash of the column list + sorted rows); the failure
+    // message prints every table in full
+    val expected = Map(
+      "certificado_anotaciones_vigentes" -> (2, "330e8fed19dfb236"),
+      "clase_licencia" -> (3, "e78fcee89e3aef3a"),
+      "conductor" -> (2, "8a67837a4c3d0961"),
+      "conductor_rol" -> (2, "cb2b40880ac998f2"),
+      "empresa" -> (2, "04f0dbb6a01d59ad"),
+      "hoja_vida" -> (4, "149e4b831c949793"),
+      "hoja_vida_infraccion" -> (6, "c0a6e3d17cb8f056"),
+      "hoja_vida_restriccion" -> (4, "631e23b3d6b36b7b"),
+      "licencia" -> (4, "7cb833a187418fa9"),
+      "licencia_clase" -> (8, "1b803c2d6be6f2c6"),
+      "permiso_circulacion" -> (2, "0bc209acae7cadb4"),
+      "quarantine_conductor" -> (6, "9d0a9255d6155c94"),
+      "quarantine_empresa" -> (2, "fab2c37ca9ae641e"),
+      "quarantine_vehiculo" -> (3, "152a54a84478a31f"),
+      "revision_tecnica" -> (5, "7478c676b95048fb"),
+      "soap" -> (3, "f04f7ea8af342cfe"),
+      "tipo_designacion" -> (2, "183b36a29e3dcc47"),
+      "tipo_empresa" -> (2, "b02ab0f7ac3e9ca3"),
+      "tipo_vehiculo" -> (2, "e7c20200cce7f73a"),
+      "vehiculo" -> (3, "8e0aaf2301d9fc36"),
+      "vehiculo_marca" -> (2, "3b2c9882673baf32"),
+      "vehiculo_modelo" -> (4, "539a9578ce9e26b8"))
+    assert(got === expected, tables.toSeq.sortBy(_._1)
+      .map { case (t, ls) => ls.mkString(s"$t:\n  ", "\n  ", "") }.mkString("\n"))
+  }
+
+  test("a landing that crashes mid-write releases its cached Bronze rows") {
+    val dir = mkTmp("etl-leak")
+    val store = new SilverStore(spark, mkTmp("silver-leak"))
+    EtlRunner.processFile(store, writeCsv(dir, "empresas_1.csv", empresasCsv))
+    val cond = writeCsv(dir, "conductores_1.csv",
+      s"""driver_name;national_id;birth_date;phone_number;email;carrier_bp;driver_role;hoja_de_vida_data;licencia_frontal_data;licencia_reverso_data
+         |JUAN PEREZ;12345678-5;24-06-1990;;;1111111;Titular;$hojaVidaJson;;
+         |MAL RUT;12345678-9;01-01-1990;;;1111111;Titular;;;
+         |""".stripMargin)
+    val cached = spark.sparkContext.getPersistentRDDs.size
+    // the first commit step of the landing (its conductor_rol publish)
+    // runs after the flagged Bronze rows were materialized
+    Commit.beforeStep = _ => throw new Error("injected crash")
+    try intercept[Error](EtlRunner.processFile(store, cond))
+    finally Commit.beforeStep = _ => ()
+    assert(spark.sparkContext.getPersistentRDDs.size === cached)
   }
 }
