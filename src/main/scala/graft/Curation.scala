@@ -612,12 +612,8 @@ object Curation {
       graft.etl.Commit.recover(java.nio.file.Paths.get(bandsPath))
       val bands = spark.read.parquet(bandsPath)
       val mine = bands.join(broadcast(d), Seq("doc_id"), "left_semi")
-      val hit = mine.select(col("_bb")).distinct().collect().map {
-        case r => r.get(0) match {
-          case i: java.lang.Integer => i.longValue
-          case l: java.lang.Long    => l.longValue
-        }
-      }.toSeq.sorted
+      val hit = mine.select(col("_bb").cast("long")).distinct().collect()
+        .map(_.getLong(0)).toSeq.sorted
       val removed = if (hit.isEmpty) 0L else mine.count()
       val bandBytes = if (hit.nonEmpty) {
         val tmp = graft.etl.Commit.stage(java.nio.file.Paths.get(storeDir))

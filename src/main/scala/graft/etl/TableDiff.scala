@@ -156,24 +156,21 @@ object TableDiff {
     // exchange, bounded driver collect ──
     val f1 = bucketFingerprints(b1, bucketCol, valueCols)
     val f2 = bucketFingerprints(b2, bucketCol, valueCols)
-    // native-typed bucket values: an isin over CAST literals would
-    // wrap the partition column in a cast and defeat FileIndex pruning
-    // (SilverStore's `_bucket` is int; diff()'s `_db` is long).
     // The row COUNT compares alongside the hash sum: any add/remove
     // imbalance flips it regardless of hash values, cheaply shaving
-    // the equal-sum collision exposure the scaladoc documents
-    val differingVals = f1.select(col(bucketCol), col("fp").as("fp1"),
+    // the equal-sum collision exposure the scaladoc documents.
+    // Bucket values come back as longs whatever the column's integral
+    // type (SilverStore's `_bucket` is int; diff()'s `_db` is long);
+    // the isin below still reaches the scan as a partition filter.
+    val differing = f1.select(col(bucketCol), col("fp").as("fp1"),
         col("n").as("n1"))
       .join(f2.select(col(bucketCol), col("fp").as("fp2"),
           col("n").as("n2")),
         Seq(bucketCol), "full_outer")
       .filter(col("fp1").isNull || col("fp2").isNull ||
         col("fp1") =!= col("fp2") || col("n1") =!= col("n2"))
-      .select(col(bucketCol)).collect().map(_.get(0))
-    val differing = differingVals.map {
-      case i: java.lang.Integer => i.longValue
-      case l: java.lang.Long    => l.longValue
-    }.toSeq.sorted
+      .select(col(bucketCol).cast("long")).collect().map(_.getLong(0))
+      .toSeq.sorted
     val nonKey = valueCols.filterNot(keys.contains)
     if (differing.isEmpty) {
       // identical versions: the row-level join never runs
@@ -183,8 +180,8 @@ object TableDiff {
     }
     // ── row-level pass, pruned to the differing buckets (a partition
     // filter when bucketCol is the table's partition column) ──
-    val s1 = b1.filter(col(bucketCol).isin(differingVals: _*))
-    val s2 = b2.filter(col(bucketCol).isin(differingVals: _*))
+    val s1 = b1.filter(col(bucketCol).isin(differing: _*))
+    val s2 = b2.filter(col(bucketCol).isin(differing: _*))
     val d = classify(s1, s2, keys, nonKey)
     val counts = d.groupBy(col("diff_status")).count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap

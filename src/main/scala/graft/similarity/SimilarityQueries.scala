@@ -120,6 +120,99 @@ object SimilarityQueries {
         lit(-cid).as("n"))
     }: _*)
 
+  // ── the IVF rule, written once: assign → probe → pruned list read.
+  // Each takes a centroid-score column ([[centScores]], or q76's
+  // k-means twin), so every IVF path — direct (q29/q76/q90), served
+  // from the lists (q121/q124/q126/q129) and the [[VectorStore]] —
+  // ranks centroids by the same (r4 cosine desc, cid asc) order.
+
+  /** The nearest centroid's id: the argmax score struct's `n` is -cid. */
+  private[similarity] def assign(scores: Column): Column =
+    -array_max(scores).getField("n")
+
+  /** `q` with one row per probed centroid: each row's `nProbe`
+    * best-scoring centroids, as `cid` (same narrow math as [[assign]]:
+    * sort the scores per row, take the best nProbe). */
+  private[similarity] def probes(q: DataFrame, scores: Column,
+                                 nProbe: Int): DataFrame = {
+    val keep = q.columns.toSeq.map(col)
+    q.select(keep :+ explode(
+        slice(reverse(array_sort(scores)), 1, nProbe)).as("_p"): _*)
+      .select(keep :+ (-col("_p.n")).as("cid"): _*)
+  }
+
+  /** The probed inverted lists of `lists` (partitioned by `_c`), joined
+    * to their probes. The one driver-side collect — ≤ queries×nProbe
+    * cids — exists because the `_c` filter needs literals at plan time
+    * to PARTITION-prune the list read (PlanSpec pins the
+    * PartitionFilters); the probes then broadcast into the pruned scan,
+    * so per-query cost tracks the probed lists, never the corpus. */
+  private[similarity] def probedLists(lists: DataFrame,
+                                      probes: DataFrame): DataFrame = {
+    val cids = probes.select(col("cid")).distinct()
+      .collect().map(_.getLong(0)).sorted
+    lists.filter(col("_c").isin(cids: _*))
+      .join(broadcast(probes), col("_c") === col("cid"))
+  }
+
+  /** Each query's top `k` non-self candidates by r4 cosine of (`qe`,
+    * `embedding`) on bounded heaps — (query_id, rk, vec_id, cos). */
+  private def rerank(cand: DataFrame, k: Int): DataFrame =
+    TopK.perKeyRanked(cand.filter(col("vec_id") =!= col("query_id"))
+        .withColumn("cos", graft.analytics.StableRound.r4(
+          cosine(col("qe"), col("embedding"))))
+        .select(col("query_id"), col("vec_id"), col("cos")),
+      Seq("query_id"), Seq(col("cos").desc, col("vec_id")), k, "rk")
+      .select(col("query_id"), col("rk"), col("vec_id"), col("cos"))
+
+  /** The direct IVF search (q29, q76) under centroid scores `scores`:
+    * the corpus assignment is a narrow per-row expression (never
+    * expanded or shuffled), the vec_id < 10 queries' probes broadcast
+    * into it, and the probed lists' members rerank. */
+  private def directSearch(e: DataFrame,
+                           scores: Column => Column): DataFrame = {
+    val assigned = e.select(col("vec_id"), col("embedding"),
+      assign(scores(col("embedding"))).as("cid"))
+    val q = e.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+    rerank(assigned.join(broadcast(probes(q, scores(col("qe")), nProbe)),
+        Seq("cid")), 5)
+      .orderBy("query_id", "rk")
+  }
+
+  /** IVF search over inverted `lists(vec_id, embedding, _c)` under
+    * centroids `cents`: queries (`query_id`, `qe`) probe their nProbe
+    * nearest lists, read partition-pruned, rerank. ONE body for q121
+    * and [[VectorStore.search]]. */
+  private[similarity] def listSearch(lists: DataFrame,
+      cents: Seq[(Long, Array[Float])], queries: DataFrame,
+      nProbe: Int, k: Int): DataFrame =
+    rerank(probedLists(lists, probes(queries.select(col("query_id"),
+      col("qe")), centScores(cents, col("qe")), nProbe)), k)
+
+  /** The IVF-flat index artifact — the FAISS inverted-list layout in
+    * Spark terms, the vector twin of [[graft.text.Bm25Index]]: a
+    * [[VectorStore]] base generation built by [[VectorStore.init]]
+    * (`centroids/`, `lists/` partitioned by `_c`, `_meta`) once per
+    * EMBEDDINGS content fingerprint. Every embedding is assigned to its
+    * nearest centroid ONCE, so each inverted list is a parquet
+    * partition a query reaches by partition pruning; re-deriving the
+    * assignment per query (q29's direct build) re-scans every vector.
+    * Vectors are stored IN the lists (IVF-flat): rerank needs them, and
+    * colocating them with the assignment makes the probe read
+    * self-contained — no corpus-scale join at read time (the
+    * [[graft.text.Bm25Index]] denormalization argument). The name
+    * encodes the centroid count — a geometry change is a layout change
+    * the dataset key alone can't see. */
+  private[graft] def ivfFlat(s: SparkSession, d: String): String = {
+    val target = graft.text.Artifacts.dir(
+      d, s"ivf_flat_c${nCentroids}_v2", "embeddings.parquet")
+    graft.text.Artifacts.materialize(target) { tmp =>
+      VectorStore.init(s, Tables.embeddings(s, d), tmp.toString)
+    }
+    target.toString
+  }
+
   /** Product-quantization geometry (q94/q95): 8 subspaces × 8 dims,
     * 16-entry codebooks (the first [[nCentroids]] vectors' subvectors). */
   private val pqM = 8
@@ -147,13 +240,16 @@ object SimilarityQueries {
         lit(code).as("code"), dist.as("raw"))
     }.toIndexedSeq: _*))
 
-  /** q29's DuckDB replay — ONE definition shared by the direct IVF
-    * search (q29) and the artifact-served search (q121): the two paths
-    * must be value-identical, so they share an oracle by construction. */
-  private val ivfOracle: String = s"""
-        WITH cent AS (SELECT vec_id cid, embedding ce FROM embeddings
-                      WHERE vec_id < $nCentroids),
-        assigned AS (
+  /** The IVF centroid replay: `cent(cid, ce)`, the first
+    * [[nCentroids]] vectors ([[centroids]]). */
+  private val centCte: String = s"""cent AS (SELECT vec_id cid, embedding ce FROM embeddings
+                 WHERE vec_id < $nCentroids)"""
+
+  /** The [[assign]] rule in SQL: `assigned(vec_id, embedding, cid)`,
+    * each vector's nearest centroid by (r4 cosine desc, cid asc).
+    * Expects `cent(cid, ce)` in scope — ONE definition for every IVF
+    * oracle. */
+  private val assignedCte: String = s"""assigned AS (
           SELECT vec_id, embedding, cid FROM (
             SELECT b.vec_id, b.embedding, cent.cid, ROW_NUMBER() OVER (
                 PARTITION BY b.vec_id
@@ -161,26 +257,47 @@ object SimilarityQueries {
                   cent.ce::DOUBLE[], b.embedding::DOUBLE[]) * 10000 + 0.5) / 10000
                   DESC, cent.cid) crk
             FROM embeddings b CROSS JOIN cent)
-          WHERE crk = 1),
+          WHERE crk = 1)"""
+
+  /** The [[probes]] rule in SQL over query table `q(<id>, qe)`:
+    * `probes(<id>, qe, cid)`, each query's [[nProbe]] nearest
+    * centroids. Expects `cent(cid, ce)` in scope. */
+  private def probesCte(q: String, id: String): String = s"""probes AS (
+          SELECT $id, qe, cid FROM (
+            SELECT $q.$id, $q.qe, cent.cid, ROW_NUMBER() OVER (
+                PARTITION BY $q.$id
+                ORDER BY floor(list_cosine_similarity(
+                  cent.ce::DOUBLE[], $q.qe::DOUBLE[]) * 10000 + 0.5) / 10000
+                  DESC, cent.cid) prk
+            FROM $q CROSS JOIN cent)
+          WHERE prk <= $nProbe)"""
+
+  /** The probed-list search replay, ending in `ivf(query_id, rk,
+    * vec_id, cos)` — each query's top-5 non-self members of its probed
+    * lists. Expects `cent(cid, ce)` in scope; shared by the
+    * q29/q121/q183 oracle, q76 (over its k-means centroids) and q117. */
+  private val ivfRankedCtes: String = s"""$assignedCte,
         q AS (SELECT vec_id query_id, embedding qe FROM embeddings
               WHERE vec_id < 10),
-        probes AS (
-          SELECT query_id, qe, cid FROM (
-            SELECT q.query_id, q.qe, cent.cid, ROW_NUMBER() OVER (
-                PARTITION BY q.query_id
-                ORDER BY floor(list_cosine_similarity(
-                  cent.ce::DOUBLE[], q.qe::DOUBLE[]) * 10000 + 0.5) / 10000
-                  DESC, cent.cid) prk
-            FROM q CROSS JOIN cent)
-          WHERE prk <= $nProbe),
+        ${probesCte("q", "query_id")},
         hits AS (
           SELECT p.query_id, a.vec_id, floor(list_cosine_similarity(
               p.qe::DOUBLE[], a.embedding::DOUBLE[]) * 10000 + 0.5) / 10000 cos
           FROM assigned a JOIN probes p ON a.cid = p.cid
           WHERE a.vec_id != p.query_id),
-        ranked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                     ORDER BY cos DESC, vec_id) rk FROM hits)
-        SELECT query_id, rk, vec_id, cos FROM ranked WHERE rk <= 5
+        ivf AS (SELECT * FROM (
+            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+              ORDER BY cos DESC, vec_id) rk FROM hits)
+          WHERE rk <= 5)"""
+
+  /** q29's DuckDB replay — ONE definition shared by the direct IVF
+    * search (q29), the artifact-served search (q121) and the folded
+    * store (q183): the paths must be value-identical, so they share an
+    * oracle by construction. */
+  private val ivfOracle: String = s"""
+        WITH $centCte,
+        $ivfRankedCtes
+        SELECT query_id, rk, vec_id, cos FROM ivf
         ORDER BY query_id, rk"""
 
   /** The PQ code table (vec_id, codes: array of 8 codebook indices) —
@@ -291,28 +408,11 @@ object SimilarityQueries {
                 SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, s
                   ORDER BY d2, code) rk
                 FROM d) WHERE rk = 1),
-        cent AS (SELECT vec_id cid, embedding ce FROM embeddings
-                 WHERE vec_id < $nCentroids),
-        assigned AS (
-          SELECT vec_id, cid FROM (
-            SELECT b.vec_id, cent.cid, ROW_NUMBER() OVER (
-                PARTITION BY b.vec_id
-                ORDER BY floor(list_cosine_similarity(
-                  cent.ce::DOUBLE[], b.embedding::DOUBLE[]) * 10000 + 0.5) / 10000
-                  DESC, cent.cid) crk
-            FROM embeddings b CROSS JOIN cent)
-          WHERE crk = 1),
+        $centCte,
+        $assignedCte,
         q AS (SELECT vec_id query_id, embedding qe FROM embeddings
               WHERE vec_id < 10),
-        probes AS (
-          SELECT query_id, cid FROM (
-            SELECT q.query_id, cent.cid, ROW_NUMBER() OVER (
-                PARTITION BY q.query_id
-                ORDER BY floor(list_cosine_similarity(
-                  cent.ce::DOUBLE[], q.qe::DOUBLE[]) * 10000 + 0.5) / 10000
-                  DESC, cent.cid) prk
-            FROM q CROSS JOIN cent)
-          WHERE prk <= $nProbe),
+        ${probesCte("q", "query_id")},
         dt AS (SELECT vec_id AS query_id, s, code,
                  CAST(floor(raw * 10000 + 0.5) AS BIGINT) AS di
                FROM d0 WHERE vec_id < 10),
@@ -404,17 +504,8 @@ object SimilarityQueries {
     val cents = centroids(e)
     val q = e.filter(col("vec_id") <= 5)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val probes = q.select(col("qid"), col("qe"),
-        explode(slice(reverse(array_sort(centScores(cents, col("qe")))),
-          1, nProbe)).as("p"))
-      .select(col("qid"), col("qe"), (-col("p.n")).as("cid"))
-    // the one driver-side collect: ≤ queries×nProbe cids, the
-    // literals the artifact scan needs to partition-prune
-    val probedCids = probes.select(col("cid")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val cand = IvfIndex.lists(s, d)
-      .filter(col("_c").isin(probedCids: _*))
-      .join(broadcast(probes), col("_c") === col("cid"))
+    val cand = probedLists(VectorStore.lists(s, ivfFlat(s, d)),
+        probes(q, centScores(cents, col("qe")), nProbe))
       .withColumn("cos",
         graft.analytics.StableRound.r4(cosine(col("qe"), col("embedding"))))
       .select(col("qid"), col("vec_id").as("doc_id"), col("cos"))
@@ -598,79 +689,37 @@ object SimilarityQueries {
       build = (s, d) => {
         val e = Tables.embeddings(s, d)
         val cents = centroids(e)
-
-        // corpus assignment: argmax-cosine centroid as a narrow per-row
-        // expression — the corpus is never expanded or shuffled
-        val assigned = e.select(col("vec_id"), col("embedding"),
-          (-array_max(centScores(cents, col("embedding"))).getField("n"))
-            .as("cid"))
-
-        // queries probe their nProbe nearest centroids (same narrow
-        // math: sort the 16 scores per row, take the best nProbe)
-        val q = e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val probes = q.select(col("query_id"), col("qe"),
-            explode(slice(reverse(array_sort(centScores(cents, col("qe")))),
-              1, nProbe)).as("p"))
-          .select(col("query_id"), col("qe"), (-col("p.n")).as("cid"))
-
-        // search only the probed inverted lists (probes broadcast: the
-        // corpus side stays un-shuffled), rerank exact via TopKPerKey
-        val cand = assigned.join(broadcast(probes), Seq("cid"))
-          .filter(col("vec_id") =!= col("query_id"))
-          .withColumn("cos", graft.analytics.StableRound.r4(cosine(col("qe"), col("embedding"))))
-          .select(col("query_id"), col("vec_id"), col("cos"))
-        TopK.perKeyRanked(cand, Seq("query_id"),
-            Seq(col("cos").desc, col("vec_id")), 5, "rk")
-          .select(col("query_id"), col("rk"), col("vec_id"), col("cos"))
-          .orderBy("query_id", "rk")
+        directSearch(e, centScores(cents, _))
       },
       oracle = Some(ivfOracle)),
 
     // ── ANN served from the IVF-flat index artifact (q121) ──────────
     // q29's search with the assignment table MATERIALIZED: the
-    // [[IvfIndex]] artifact holds every (vec_id, embedding) under its
-    // centroid as a parquet PARTITION, so a query's nProbe lists are
-    // reached by partition pruning (the q116 recipe for vectors — the
-    // probed-cid literals come from one bounded driver-side collect of
-    // queries×nProbe rows, which must exist at plan time for the
-    // pruning to fire; PlanSpec pins the PartitionFilters). Probes then
-    // BROADCAST into the pruned list scan and the rerank is bounded
-    // heaps — per-query cost tracks the probed lists, never the
-    // corpus. Same oracle as q29 by construction: the artifact stores
-    // the direct path's own assignment.
+    // [[ivfFlat]] artifact is a [[VectorStore]] holding every
+    // (vec_id, embedding) under its centroid as a parquet PARTITION, so
+    // a query's nProbe lists are reached by partition pruning (the q116
+    // recipe for vectors). The search is [[VectorStore.search]]'s own
+    // body ([[listSearch]]) over the artifact's lists — per-query cost
+    // tracks the probed lists, never the corpus. Its centroids are
+    // [[centroids]] of the same embeddings, which is what the artifact
+    // stored (init trains with that rule), so q121 skips the stored
+    // copy's read and its parquet schema-inference job. Same oracle as
+    // q29 by construction: the artifact stores the direct path's own
+    // assignment.
     "q121_ann_from_index" -> QuerySpec(
       build = (s, d) => {
         val e = Tables.embeddings(s, d)
-        val cents = centroids(e)
         val q = e.filter(col("vec_id") < 10)
           .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val probes = q.select(col("query_id"), col("qe"),
-            explode(slice(reverse(array_sort(centScores(cents, col("qe")))),
-              1, nProbe)).as("p"))
-          .select(col("query_id"), col("qe"), (-col("p.n")).as("cid"))
-        // the one driver-side collect: ≤ queries×nProbe cids, needed
-        // as literals so the artifact scan partition-prunes
-        val probedCids = probes.select(col("cid")).distinct()
-          .collect().map(_.getLong(0)).sorted
-        val lists = IvfIndex.lists(s, d)
-          .filter(col("_c").isin(probedCids: _*))
-        val cand = lists
-          .join(broadcast(probes), col("_c") === col("cid"))
-          .filter(col("vec_id") =!= col("query_id"))
-          .withColumn("cos",
-            graft.analytics.StableRound.r4(cosine(col("qe"), col("embedding"))))
-          .select(col("query_id"), col("vec_id"), col("cos"))
-        TopK.perKeyRanked(cand, Seq("query_id"),
-            Seq(col("cos").desc, col("vec_id")), 5, "rk")
-          .select(col("query_id"), col("rk"), col("vec_id"), col("cos"))
+        listSearch(VectorStore.lists(s, ivfFlat(s, d)), centroids(e), q,
+            nProbe, 5)
           .orderBy("query_id", "rk")
       },
       oracle = Some(ivfOracle),
       bench = true),
 
     // ── incremental ANN maintenance (r14): fold a batch, then search ─
-    // Production vectors ARRIVE; rebuilding the IvfIndex artifact per
+    // Production vectors ARRIVE; rebuilding the [[ivfFlat]] artifact per
     // batch re-scans the corpus. [[VectorStore]] is the mutable ingest
     // twin (FAISS's train-vs-add split): geometry fixed at init, a
     // batch assigns itself in one narrow pass and APPENDS into its
@@ -789,7 +838,7 @@ object SimilarityQueries {
 
         for (_ <- 1 to 2) {
           val assigned = train.select(col("vec_id"), col("v"),
-            (-array_max(centScoresD(cents, col("v"))).getField("n")).as("cid"))
+            assign(centScoresD(cents, col("v"))).as("cid"))
           // element-wise mean per cluster, r4-rounded for cross-engine
           // bit-stability; clusters that lost every member keep their
           // previous centroid
@@ -805,23 +854,7 @@ object SimilarityQueries {
             cid -> means.getOrElse(cid, old) }
         }
 
-        val assigned = e.select(col("vec_id"), col("embedding"),
-          (-array_max(centScoresD(cents, col("embedding"))).getField("n"))
-            .as("cid"))
-        val q = e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val probes = q.select(col("query_id"), col("qe"),
-            explode(slice(reverse(array_sort(centScoresD(cents, col("qe")))),
-              1, nProbe)).as("p"))
-          .select(col("query_id"), col("qe"), (-col("p.n")).as("cid"))
-        val cand = assigned.join(broadcast(probes), Seq("cid"))
-          .filter(col("vec_id") =!= col("query_id"))
-          .withColumn("cos", graft.analytics.StableRound.r4(cosine(col("qe"), col("embedding"))))
-          .select(col("query_id"), col("vec_id"), col("cos"))
-        TopK.perKeyRanked(cand, Seq("query_id"),
-            Seq(col("cos").desc, col("vec_id")), 5, "rk")
-          .select(col("query_id"), col("rk"), col("vec_id"), col("cos"))
-          .orderBy("query_id", "rk")
+        directSearch(e, centScoresD(cents, _))
       },
       oracle = Some(s"""
         WITH train AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings
@@ -852,33 +885,13 @@ object SimilarityQueries {
                FROM (SELECT cid, unnest(v) x,
                        generate_subscripts(v, 1) idx FROM a2)
                GROUP BY cid, idx),
-        c2 AS (SELECT c1.cid,
+        cent AS (SELECT c1.cid,
                  coalesce(lm.vm, c1.ce) ce
                FROM c1 LEFT JOIN (
                  SELECT cid, list(m ORDER BY idx) vm FROM m2 GROUP BY cid) lm
                  ON c1.cid = lm.cid),
-        assigned AS (SELECT vec_id, embedding, cid FROM (
-            SELECT b.vec_id, b.embedding, c.cid, ROW_NUMBER() OVER (
-                PARTITION BY b.vec_id
-                ORDER BY floor(list_cosine_similarity(c.ce,
-                  b.embedding::DOUBLE[]) * 10000 + 0.5) / 10000 DESC, c.cid) rk
-            FROM embeddings b CROSS JOIN c2 c) WHERE rk = 1),
-        q AS (SELECT vec_id query_id, embedding qe FROM embeddings
-              WHERE vec_id < 10),
-        probes AS (SELECT query_id, qe, cid FROM (
-            SELECT q.query_id, q.qe, c.cid, ROW_NUMBER() OVER (
-                PARTITION BY q.query_id
-                ORDER BY floor(list_cosine_similarity(c.ce,
-                  q.qe::DOUBLE[]) * 10000 + 0.5) / 10000 DESC, c.cid) prk
-            FROM q CROSS JOIN c2 c) WHERE prk <= $nProbe),
-        hits AS (
-          SELECT p.query_id, a.vec_id, floor(list_cosine_similarity(
-              p.qe::DOUBLE[], a.embedding::DOUBLE[]) * 10000 + 0.5) / 10000 cos
-          FROM assigned a JOIN probes p ON a.cid = p.cid
-          WHERE a.vec_id != p.query_id),
-        ranked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                     ORDER BY cos DESC, vec_id) rk FROM hits)
-        SELECT query_id, rk, vec_id, cos FROM ranked WHERE rk <= 5
+        $ivfRankedCtes
+        SELECT query_id, rk, vec_id, cos FROM ivf
         ORDER BY query_id, rk""")),
 
     // ── int8 scalar quantization (embedding compression) ───────────
@@ -993,8 +1006,7 @@ object SimilarityQueries {
         val e = Tables.embeddings(s, d)
         val cents = centroids(e)
         val assigned = e.select(col("vec_id"), col("embedding"),
-          (-array_max(centScores(cents, col("embedding"))).getField("n"))
-            .as("cid"))
+          assign(centScores(cents, col("embedding"))).as("cid"))
         val banded = assigned.select(col("vec_id"), col("cid"),
           posexplode(array(hyperplaneBand(col("embedding"), 0),
             hyperplaneBand(col("embedding"), 1))).as(Seq("band", "bucket")))
@@ -1031,17 +1043,8 @@ object SimilarityQueries {
           s"(CASE WHEN list_cosine_similarity(embedding::DOUBLE[], ${sqlPlane(band * 4 + j)}) >= 0 THEN ${1 << j} ELSE 0 END)")
           .mkString(" + ")
         s"""
-        WITH cent AS (SELECT vec_id cid, embedding::DOUBLE[] ce
-                      FROM embeddings WHERE vec_id < $nCentroids),
-        assigned AS (
-          SELECT vec_id, embedding, cid FROM (
-            SELECT b.vec_id, b.embedding, cent.cid, ROW_NUMBER() OVER (
-                PARTITION BY b.vec_id
-                ORDER BY floor(list_cosine_similarity(cent.ce,
-                  b.embedding::DOUBLE[]) * 10000 + 0.5) / 10000 DESC,
-                  cent.cid) crk
-            FROM embeddings b CROSS JOIN cent)
-          WHERE crk = 1),
+        WITH $centCte,
+        $assignedCte,
         b AS (
           SELECT vec_id, cid, embedding, 0 AS band, ${bandExpr(0)} AS bucket
           FROM assigned
@@ -1186,18 +1189,11 @@ object SimilarityQueries {
         val e = Tables.embeddings(s, d)
         val cents = centroids(e)
         // queries carry BOTH probe targets and ADC tables (bounded)
-        val probes = e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("query_id"),
-            adcDtabCol(cents).as("dtab"),
-            explode(slice(reverse(array_sort(centScores(cents, col("embedding")))),
-              1, nProbe)).as("p"))
-          .select(col("query_id"), col("dtab"), (-col("p.n")).as("cid"))
-        val probedCids = probes.select(col("cid")).distinct()
-          .collect().map(_.getLong(0)).sorted
-        val lists = IvfPqIndex.lists(s, d)
-          .filter(col("_c").isin(probedCids: _*))
-        adcRankTail(lists
-          .join(broadcast(probes), col("_c") === col("cid"))
+        val q = e.filter(col("vec_id") < 10).select(col("vec_id")
+          .as("query_id"), col("embedding"), adcDtabCol(cents).as("dtab"))
+        adcRankTail(probedLists(IvfPqIndex.lists(s, d),
+            probes(q, centScores(cents, col("embedding")), nProbe)
+              .drop("embedding"))
           .filter(col("vec_id") =!= col("query_id"))
           .select(col("query_id"), col("vec_id"), adcAi.as("ai")))
       },
@@ -1376,17 +1372,10 @@ object SimilarityQueries {
         val qbase = e.filter(col("vec_id") < 10)
           .select(col("vec_id").as("query_id"),
             col("embedding").as("qe"), adcDtabCol(cents).as("dtab"))
-        val probes = qbase.select(col("query_id"), col("qe"), col("dtab"),
-            explode(slice(reverse(array_sort(centScores(cents, col("qe")))),
-              1, nProbe)).as("p"))
-          .select(col("query_id"), col("dtab"), (-col("p.n")).as("cid"))
-        val probedCids = probes.select(col("cid")).distinct()
-          .collect().map(_.getLong(0)).sorted
-        val lists = IvfPqIndex.lists(s, d)
-          .filter(col("_c").isin(probedCids: _*))
         // wider ADC shortlist from the coded lists (codes decide WHO)
         val shortlist = TopK.perKeyRanked(
-            lists.join(broadcast(probes), col("_c") === col("cid"))
+            probedLists(IvfPqIndex.lists(s, d),
+                probes(qbase, centScores(cents, col("qe")), nProbe).drop("qe"))
               .filter(col("vec_id") =!= col("query_id"))
               .select(col("query_id"), col("vec_id"), adcAi.as("ai")),
             Seq("query_id"), Seq(col("ai").asc, col("vec_id").asc),
@@ -1754,7 +1743,7 @@ object SimilarityQueries {
     // q127's production twin: the text ranking comes from the
     // partition-pruned Bm25Index (q116 — bit-identical to q111, shared
     // oracle) and the vector ranking from the partition-pruned
-    // IvfIndex lists (q121's probe shape under q127's query semantics:
+    // [[ivfFlat]] lists (q121's probe shape under q127's query semantics:
     // qid <= 5, self included). Per-query cost is postings-scale +
     // probed-lists-scale — nothing corpus-scale moves at read time.
     // The vector side is IVF-APPROXIMATE, so this is its own declared
@@ -1767,33 +1756,15 @@ object SimilarityQueries {
       },
       oracle = Some(s"""
         WITH ${graft.text.CurationQueries.bm25RankCtes},
-        cent AS (SELECT vec_id cid, embedding ce FROM embeddings
-                 WHERE vec_id < $nCentroids),
-        assigned AS (
-          SELECT vec_id, embedding, cid FROM (
-            SELECT b.vec_id, b.embedding, cent.cid, ROW_NUMBER() OVER (
-                PARTITION BY b.vec_id
-                ORDER BY floor(list_cosine_similarity(
-                  cent.ce::DOUBLE[], b.embedding::DOUBLE[]) * 10000 + 0.5) / 10000
-                  DESC, cent.cid) crk
-            FROM embeddings b CROSS JOIN cent)
-          WHERE crk = 1),
+        $centCte,
+        $assignedCte,
         vq AS (SELECT vec_id qid, embedding qe FROM embeddings
                WHERE vec_id <= 5),
-        vprobes AS (
-          SELECT qid, cid FROM (
-            SELECT vq.qid, cent.cid, ROW_NUMBER() OVER (
-                PARTITION BY vq.qid
-                ORDER BY floor(list_cosine_similarity(
-                  cent.ce::DOUBLE[], vq.qe::DOUBLE[]) * 10000 + 0.5) / 10000
-                  DESC, cent.cid) prk
-            FROM vq CROSS JOIN cent)
-          WHERE prk <= $nProbe),
-        vsc AS (SELECT vq.qid, a.vec_id doc_id, floor(
-                  list_cosine_similarity(vq.qe::DOUBLE[], a.embedding::DOUBLE[])
+        ${probesCte("vq", "qid")},
+        vsc AS (SELECT p.qid, a.vec_id doc_id, floor(
+                  list_cosine_similarity(p.qe::DOUBLE[], a.embedding::DOUBLE[])
                   * 10000 + 0.5) / 10000 cos
-                FROM vq JOIN vprobes p ON p.qid = vq.qid
-                JOIN assigned a ON a.cid = p.cid),
+                FROM probes p JOIN assigned a ON a.cid = p.cid),
         $rrfTailSql"""),
       bench = true),
 
@@ -1811,41 +1782,12 @@ object SimilarityQueries {
           .orderBy("query_id")
       },
       oracle = Some(s"""
-        WITH q AS (SELECT vec_id query_id, embedding qe FROM embeddings
-                   WHERE vec_id < 10),
+        WITH $centCte,
+        $ivfRankedCtes,
         $exactScoredCte,
         exact AS (SELECT query_id, vec_id FROM (
             SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
               ORDER BY cos DESC, vec_id) rk FROM scored)
-          WHERE rk <= 5),
-        cent AS (SELECT vec_id cid, embedding ce FROM embeddings
-                 WHERE vec_id < $nCentroids),
-        assigned AS (
-          SELECT vec_id, embedding, cid FROM (
-            SELECT b.vec_id, b.embedding, cent.cid, ROW_NUMBER() OVER (
-                PARTITION BY b.vec_id
-                ORDER BY floor(list_cosine_similarity(
-                  cent.ce::DOUBLE[], b.embedding::DOUBLE[]) * 10000 + 0.5) / 10000
-                  DESC, cent.cid) crk
-            FROM embeddings b CROSS JOIN cent)
-          WHERE crk = 1),
-        probes AS (
-          SELECT query_id, qe, cid FROM (
-            SELECT q.query_id, q.qe, cent.cid, ROW_NUMBER() OVER (
-                PARTITION BY q.query_id
-                ORDER BY floor(list_cosine_similarity(
-                  cent.ce::DOUBLE[], q.qe::DOUBLE[]) * 10000 + 0.5) / 10000
-                  DESC, cent.cid) prk
-            FROM q CROSS JOIN cent)
-          WHERE prk <= $nProbe),
-        hits AS (
-          SELECT p.query_id, a.vec_id, floor(list_cosine_similarity(
-              p.qe::DOUBLE[], a.embedding::DOUBLE[]) * 10000 + 0.5) / 10000 cos
-          FROM assigned a JOIN probes p ON a.cid = p.cid
-          WHERE a.vec_id != p.query_id),
-        ivf AS (SELECT query_id, vec_id FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY cos DESC, vec_id) rk FROM hits)
           WHERE rk <= 5)
         SELECT e.query_id, count(*) n_exact,
                CAST(sum(CASE WHEN i.vec_id IS NOT NULL THEN 1 ELSE 0 END)
@@ -1868,7 +1810,7 @@ object SimilarityQueries {
     // top-5 member once its list is probed (it outscores every other
     // candidate by definition, under the shared (cos, vec_id) tie
     // order). So the sweep is: exact top-5 (q28 composed unchanged) ⋈
-    // assignment (the IvfIndex artifact) ⋈ the query's 16-row rank
+    // assignment (the [[ivfFlat]] artifact) ⋈ the query's 16-row rank
     // frame, then four conditional sums over a 50-row frame — q28's
     // one corpus pass is the only corpus-scale work, and the scan-cost
     // column folds the per-list census against the same rank frame.
@@ -1879,7 +1821,7 @@ object SimilarityQueries {
         val budgets = Seq(1, 2, 4, 8)
         val exact = queries("q28_ann_bruteforce").build(s, d)
           .select(col("query_id"), col("vec_id"))
-        val assigned = IvfIndex.lists(s, d)
+        val assigned = VectorStore.lists(s, ivfFlat(s, d))
           .select(col("vec_id"), col("_c").cast("long").as("cid"))
         // per query, the full centroid preference order (10×16 rows)
         val qrank = e.filter(col("vec_id") < 10)
@@ -1922,17 +1864,8 @@ object SimilarityQueries {
             SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
               ORDER BY cos DESC, vec_id) rk FROM scored)
           WHERE rk <= 5),
-        cent AS (SELECT vec_id cid, embedding ce FROM embeddings
-                 WHERE vec_id < $nCentroids),
-        assigned AS (
-          SELECT vec_id, cid FROM (
-            SELECT b.vec_id, cent.cid, ROW_NUMBER() OVER (
-                PARTITION BY b.vec_id
-                ORDER BY floor(list_cosine_similarity(
-                  cent.ce::DOUBLE[], b.embedding::DOUBLE[]) * 10000 + 0.5) / 10000
-                  DESC, cent.cid) crk
-            FROM embeddings b CROSS JOIN cent)
-          WHERE crk = 1),
+        $centCte,
+        $assignedCte,
         qrank AS (
           SELECT query_id, cid, crank FROM (
             SELECT q.query_id, cent.cid, ROW_NUMBER() OVER (

@@ -5,15 +5,15 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.etl.Commit
-import graft.operators.TopK
 import graft.text.LabelStore
-import VectorFunctions.cosine
 
 /** Mutable IVF-flat ingest store — incremental maintenance for the ANN
   * index, the vector twin of [[graft.text.LabelStore]] (labels) and
   * [[graft.operators.CascadedRollup.foldFinest]] (rollups): production
-  * vectors ARRIVE, and rebuilding [[IvfIndex]]'s immutable artifact per
-  * batch re-scans the corpus.
+  * vectors ARRIVE, and rebuilding an immutable index per batch
+  * re-scans the corpus. (The immutable q121 index,
+  * [[SimilarityQueries.ivfFlat]], is itself a base generation of this
+  * store, built once per dataset by [[init]].)
   *
   * The store exploits the IVF split FAISS formalizes as train vs add:
   * the GEOMETRY (centroids) is trained once at [[init]] and persisted
@@ -29,9 +29,9 @@ import VectorFunctions.cosine
   *
   * Per-batch cost: batch scan + ≤ nCentroids partition appends —
   * independent of corpus size. Searches partition-prune to their
-  * nProbe lists exactly like [[IvfIndex]] (per-query cost tracks the
-  * probed lists, never the corpus). [[forget]] completes the
-  * governance pair ([[graft.etl.MergeOps.deleteBucketed]] /
+  * nProbe lists with q121's own body, [[SimilarityQueries.listSearch]]
+  * (per-query cost tracks the probed lists, never the corpus).
+  * [[forget]] completes the governance pair ([[graft.etl.MergeOps.deleteBucketed]] /
   * [[graft.text.LabelStore.forget]] discipline): erasure locates its
   * `_c` partitions with one narrow scan and rewrites ONLY those,
   * untouched lists byte-identical.
@@ -248,9 +248,8 @@ object VectorStore {
 
   private def assign(vecs: DataFrame,
                      cents: Seq[(Long, Array[Float])]): DataFrame =
-    vecs.select(col("vec_id"), col("embedding"),
-      (-array_max(SimilarityQueries.centScores(cents, col("embedding")))
-        .getField("n")).as("_c"))
+    vecs.select(col("vec_id"), col("embedding"), SimilarityQueries.assign(
+      SimilarityQueries.centScores(cents, col("embedding"))).as("_c"))
 
   /** Fold an ingest batch (vec_ids disjoint from the store): one
     * narrow batch-scale assignment pass, then an APPEND into the
@@ -304,41 +303,24 @@ object VectorStore {
   }
 
   /** The inverted lists (vec_id, embedding, _c) — filter `_c` by the
-    * probed centroid ids to partition-prune a read, exactly like
-    * [[IvfIndex.lists]]. */
+    * probed centroid ids to partition-prune a read. */
   def lists(s: SparkSession, storeDir: String): DataFrame =
     s.read.parquet(listsPath(genRoot(storeDir)))
 
-  /** IVF search against the store — q121's probe shape: queries
-    * (`query_id`, `qe`) pick their nProbe nearest stored centroids,
-    * the bounded probed-cid set prunes the list read at the parquet
-    * PARTITION level, probes broadcast into the pruned scan, rerank on
-    * bounded heaps. Output (query_id, rk, vec_id, cos), self-hits
+  /** IVF search against the store — q121's search: the store checks
+    * (meta, query width), then [[SimilarityQueries.listSearch]] over
+    * the resolved generation's lists and centroids. Queries
+    * (`query_id`, `qe`); output (query_id, rk, vec_id, cos), self-hits
     * excluded. */
   def search(s: SparkSession, storeDir: String, queries: DataFrame,
              nProbe: Int, k: Int): DataFrame = {
     val root = genRoot(storeDir)
     val cents = checkedCentroids(s, root)
     checkDims(queries, "qe", cents.head._2.length, "search queries")
-    val probes = queries.select(col("query_id"), col("qe"),
-        explode(slice(reverse(array_sort(
-          SimilarityQueries.centScores(cents, col("qe")))), 1, nProbe))
-          .as("p"))
-      .select(col("query_id"), col("qe"), (-col("p.n")).as("cid"))
-    val probedCids = probes.select(col("cid")).distinct()
-      .collect().map(_.getLong(0)).sorted
     // read via the SAME resolved generation as the geometry above —
     // a retrain landing between the two reads must not mix them
-    val cand = s.read.parquet(listsPath(root))
-      .filter(col("_c").isin(probedCids: _*))
-      .join(broadcast(probes), col("_c") === col("cid"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cos", graft.analytics.StableRound.r4(
-        cosine(col("qe"), col("embedding"))))
-      .select(col("query_id"), col("vec_id"), col("cos"))
-    TopK.perKeyRanked(cand, Seq("query_id"),
-        Seq(col("cos").desc, col("vec_id")), k, "rk")
-      .select(col("query_id"), col("rk"), col("vec_id"), col("cos"))
+    SimilarityQueries.listSearch(s.read.parquet(listsPath(root)), cents,
+      queries, nProbe, k)
   }
 
   /** Per-list population census — the drift monitor [[init]]'s
@@ -360,12 +342,8 @@ object VectorStore {
     try {
       val all = s.read.parquet(listsPath(root))
       val mine = all.join(broadcast(d), Seq("vec_id"), "left_semi")
-      val hit = mine.select(col("_c")).distinct().collect().map {
-        _.get(0) match {
-          case i: java.lang.Integer => i.longValue
-          case l: java.lang.Long    => l.longValue
-        }
-      }.toSeq.sorted
+      val hit = mine.select(col("_c").cast("long")).distinct().collect()
+        .map(_.getLong(0)).toSeq.sorted
       if (hit.isEmpty) return ForgetStats(0L, 0)
       val removed = mine.count()
       val keep = all.filter(col("_c").isin(hit: _*))

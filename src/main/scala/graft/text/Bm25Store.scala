@@ -75,8 +75,8 @@ object Bm25Store {
 
   /** Driver-side twin of the `_tb` partition expression (md5Hash60 %
     * buckets) — builds the partition-pruning literal from a collected
-    * query-term set, the [[Bm25Index.bucketOf]] recipe under the
-    * store's own bucket count. */
+    * query-term set under the store's own bucket count
+    * ([[Bm25Index.bucketOf]] is this at the artifact's count). */
   def bucketOf(t: String, buckets: Int): Long = {
     val hex = java.security.MessageDigest.getInstance("MD5")
       .digest(t.getBytes("UTF-8")).map("%02x".format(_)).mkString
@@ -222,24 +222,19 @@ object Bm25Store {
     recover(storeDir)
     val d = ids.select(col("doc_id")).distinct().persist()
     try {
-      // partition values read back with an inferred integral type —
-      // extract defensively (the VectorStore.forget `_c` lesson)
-      def longsOf(df: DataFrame): Seq[Long] = df.collect().map {
-        _.get(0) match {
-          case i: java.lang.Integer => i.longValue
-          case l: java.lang.Long    => l.longValue
-        }
-      }.toSeq.sorted
       val all = postings(s, storeDir)
       val mine = all.join(broadcast(d), Seq("doc_id"), "left_semi")
-      val hit = longsOf(mine.select(col("_tb")).distinct())
+      // partition values read back with an inferred integral type
+      val hit = mine.select(col("_tb").cast("long")).distinct().collect()
+        .map(_.getLong(0)).toSeq.sorted
       val dlAll = s.read.parquet(doclensPath(storeDir))
       val dHit = dlAll.join(broadcast(d), Seq("doc_id"), "left_semi")
       val removed = dHit.count()
       if (removed == 0 && hit.isEmpty) return ForgetStats(0L, 0)
       val keepP = all.filter(col("_tb").isin(hit: _*))
         .join(broadcast(d), Seq("doc_id"), "left_anti")
-      val dbHit = longsOf(dHit.select(col("_db")).distinct())
+      val dbHit = dHit.select(col("_db").cast("long")).distinct().collect()
+        .map(_.getLong(0)).toSeq.sorted
       val keepD = dlAll.filter(col("_db").isin(dbHit: _*))
         .join(broadcast(d), Seq("doc_id"), "left_anti")
       val tmp = Commit.stage(Paths.get(storeDir))

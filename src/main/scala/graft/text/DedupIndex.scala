@@ -176,11 +176,8 @@ object Bm25Index {
 
   /** Driver-side twin of the `_tb` partition expression, for building
     * the partition-pruning literal from a collected query-term set. */
-  private[graft] def bucketOf(t: String): Long = {
-    val hex = java.security.MessageDigest.getInstance("MD5")
-      .digest(t.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    java.lang.Long.parseLong(hex.take(15), 16) % tokenBuckets
-  }
+  private[graft] def bucketOf(t: String): Long =
+    Bm25Store.bucketOf(t, tokenBuckets)
 }
 
 /** MinHash band-signature store — the corpus-side half of INCREMENTAL

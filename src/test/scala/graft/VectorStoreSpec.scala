@@ -240,4 +240,29 @@ class VectorStoreSpec extends SparkSpec {
         "a geometry/meta mismatch must fail fast, not mis-prune")
     }
   }
+
+  test("q121's IVF-flat artifact is a VectorStore: _meta recorded, search == q121") {
+    val prev = sys.props.get("graft.artifacts.dir")
+    sys.props("graft.artifacts.dir") = freshDir()
+    try {
+      val served = SparkEntry.queries("q121_ann_from_index")(spark, sf)
+        .collect().toSeq
+      val dir = graft.similarity.SimilarityQueries.ivfFlat(spark, sf)
+      val width = emb.select(size(col("embedding"))).distinct()
+        .collect().map(_.getInt(0)).toSeq
+      assert(width.size == 1)
+      assert(VectorStore.metaOf(dir) == Some((16, width.head)),
+        "the artifact must carry the store's _meta (nCentroids, dim)")
+      val q = emb.filter(col("vec_id") < 10)
+        .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+      val mine = VectorStore.search(spark, dir, q, 2, 5)
+        .orderBy("query_id", "rk").collect().toSeq
+      assert(served.nonEmpty)
+      assert(mine == served,
+        "VectorStore.search over the artifact must equal q121 row for row")
+    } finally prev match {
+      case Some(v) => sys.props("graft.artifacts.dir") = v
+      case None    => sys.props.remove("graft.artifacts.dir")
+    }
+  }
 }
