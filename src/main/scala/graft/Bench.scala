@@ -114,10 +114,12 @@ object Bench {
     // settled them in one field). Counters are attributed to a query
     // by snapshot around its timed action; the action blocks until its
     // jobs complete, so only listener-bus dispatch lag (ms) can leak
-    // an event into a neighbor — jobs/tasks take the MAX across passes
-    // (boundary leakage only ever undercounts one pass), task_ms the
-    // MIN (the machine-noise convention, same as the wall). File
-    // record only (stdout budget).
+    // an event into a neighbor. All three take the MIN across passes,
+    // the wall's convention: only sf0.001 is warmed, so a query's
+    // first sf0.1 pass also builds its artifacts, and a max would
+    // report that build instead of the query (the price: a pass that
+    // leaked a trailing event can read a few tasks low). File record
+    // only (stdout budget).
     val jobsCtr = new java.util.concurrent.atomic.AtomicLong
     val tasksCtr = new java.util.concurrent.atomic.AtomicLong
     val taskMsCtr = new java.util.concurrent.atomic.AtomicLong
@@ -133,10 +135,10 @@ object Bench {
             taskMsCtr.addAndGet(m.executorRunTime))
         }
       })
-    val jobsMax = collection.mutable.Map[String, Long]()
-      .withDefaultValue(0L)
-    val tasksMax = collection.mutable.Map[String, Long]()
-      .withDefaultValue(0L)
+    val jobsMin = collection.mutable.Map[String, Long]()
+      .withDefaultValue(Long.MaxValue)
+    val tasksMin = collection.mutable.Map[String, Long]()
+      .withDefaultValue(Long.MaxValue)
     val taskMsMin = collection.mutable.Map[String, Long]()
       .withDefaultValue(Long.MaxValue)
     def timePass(qs: Seq[(String, (SparkSession, String) =>
@@ -150,8 +152,8 @@ object Bench {
         // failures are reported as -1, never as a (fast) success
         val t = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
         samples(name) = t :: samples(name)
-        jobsMax(name) = jobsMax(name) max (jobsCtr.get - j0)
-        tasksMax(name) = tasksMax(name) max (tasksCtr.get - k0)
+        jobsMin(name) = jobsMin(name) min (jobsCtr.get - j0)
+        tasksMin(name) = tasksMin(name) min (tasksCtr.get - k0)
         taskMsMin(name) = taskMsMin(name) min (taskMsCtr.get - m0)
     }
     val (heavy, normal) = timed.partition { case (n, _) => gcHeavy(n) }
@@ -282,11 +284,12 @@ object Bench {
     def jsL(xs: Seq[(String, Long)]) = xs.map { case (k, v) =>
       s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     val names = mins.map(_._1)
+    def minOf(m: collection.Map[String, Long]) = jsL(names.map(k =>
+      k -> (if (m(k) == Long.MaxValue) -1L else m(k))))
     val structField =
-      s""""queries_jobs":${jsL(names.map(k => k -> jobsMax(k)))},""" +
-      s""""queries_tasks":${jsL(names.map(k => k -> tasksMax(k)))},""" +
-      s""""queries_task_ms":${jsL(names.map(k =>
-        k -> (if (taskMsMin(k) == Long.MaxValue) -1L else taskMsMin(k))))},"""
+      s""""queries_jobs":${minOf(jobsMin)},""" +
+      s""""queries_tasks":${minOf(tasksMin)},""" +
+      s""""queries_task_ms":${minOf(taskMsMin)},"""
     val full =
       s"""{"metric":"total","value":${r3(total)},"unit":"sec","runs":$runs,""" +
       s""""sf":"$sfDir","action":"$actionName","total_median":${r3(totalMed)},""" +

@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.operators.{AsOfJoin, JoinAdvisor, SaltedJoin}
@@ -2160,11 +2160,6 @@ object ExtendedQueries {
     store.resolve("state").toString
   }
 
-  /** The q136 PageRank rank table (node, rank_scaled), one row per
-    * graph node — THE shared definition for the direct query and the
-    * [[RankIndex]] artifact build. See the q136 entry for the scale
-    * rationale (long node ids, single-pass edge build, cached edges,
-    * per-iteration |V|-scale exchange only). */
   /** [[fulfillmentEdges]] with each row's source degree attached —
     * ONE definition of (src, dst, d) for the q136 build and the
     * [[EdgeIndex]] artifact (a degree-semantics change cannot diverge
@@ -2174,67 +2169,29 @@ object ExtendedQueries {
     edges.join(
       edges.groupBy(col("src")).agg(count(lit(1)).as("d")), "src")
 
+  /** The src-bucketed [[EdgeIndex]] artifact as [[PageRank]] input:
+    * every parallel edge is its own row, so each row weighs w = 1. */
+  private def indexEdges(s: SparkSession, d: String): DataFrame =
+    EdgeIndex.load(s, d).withColumn("w", lit(1L))
+
   /** The q136 PageRank rank table (node, rank_scaled), one row per
-    * graph node, handed to `use` inside a managed scope: the caches
-    * the iteration needs are unpersisted when `use` returns, so `use`
-    * MUST force its result (collect or write) — the
-    * [[graft.text.CurationQueries.withDupClusterLabels]] pattern.
+    * graph node, handed to `use` inside [[PageRank.ranks]]' managed
+    * scope (`use` MUST force its result — the
+    * [[graft.text.CurationQueries.withDupClusterLabels]] pattern).
     * Shared by the q136 direct query and the [[RankIndex]] build.
     *
     * Iterates over the src-BUCKETED [[EdgeIndex]] artifact (degrees
-    * already denormalized there), the shape q139 proved: a bucketed
-    * scan's HashPartitioning(src) survives persist(), so every
-    * iteration's rank⋈edges join exchanges ONLY the |V|-row rank side
-    * — the |E|-row edge table is read pre-partitioned and never
-    * re-shuffled. The ad-hoc persist of [[fulfillmentEdges]] this
-    * replaced paid the lineitem⋈orders edge build per run (bench
-    * min-of-3: 5.0 → 3.2 s at sf0.1, 29.2 → 11.1 s at 100×; the
-    * remaining floor is the three |E|-scale probe+agg passes —
-    * parallel-edge multiplicity is 1.02 at scale, so weighted-edge
-    * compression cannot cut it further). */
+    * already denormalized there): a bucketed scan's
+    * HashPartitioning(src) survives persist(), so every iteration's
+    * rank⋈edges join exchanges ONLY the |V|-row rank side. The ad-hoc
+    * persist of [[fulfillmentEdges]] this replaced paid the
+    * lineitem⋈orders edge build per run (bench min-of-3: 5.0 → 3.2 s
+    * at sf0.1, 29.2 → 11.1 s at 100×; the remaining floor is the three
+    * |E|-scale probe+agg passes — parallel-edge multiplicity is 1.02 at
+    * scale, so weighted-edge compression cannot cut it further). */
   private[graft] def withPagerankRanks[T](s: SparkSession, d: String)
-      (use: DataFrame => T): T = {
-    val scale = 1000000000000L
-    val iters = 3
-    val ed = EdgeIndex.load(s, d).persist()
-    // node-scale init frame: distinct over the bucketed scan rides
-    // HashPartitioning(src) — no exchange
-    val nodes = ed.select(col("src").as("node")).distinct().persist()
-    try {
-      val nNodes = nodes.count() // bounded scalar: |suppliers|+|customers|
-      val rInit = scale / nNodes
-      val base = rInit * 15 / 100
-      // iteration 1 is a constant-rank substitution (`nodes` = the
-      // distinct src of `ed`, so the r0 join matches every edge row at
-      // r = rInit): contrib = rInit div d straight off the edge scan —
-      // no rank-side exchange, no join, integer-identical (the
-      // RankHistory.firstStepRank argument, unweighted flavor)
-      var rank = ed
-        .select(col("dst"), expr(s"$rInit div d").as("contrib"))
-        .groupBy(col("dst"))
-        .agg(sum(col("contrib")).as("sc"))
-        .select(col("dst").as("node"),
-          (lit(base) + expr("(85 * sc) div 100")).as("r"))
-      for (_ <- 2 to iters) {
-        // shuffle_hash, not broadcast: at 100x the |V|-row rank table
-        // is 1.6M rows — building and shipping that broadcast 3x
-        // measured ~25% slower than hash-exchanging it against the
-        // cached edges
-        rank = ed.join(rank.hint("shuffle_hash"), ed("src") === rank("node"))
-          .select(col("dst"), expr("r div d").as("contrib"))
-          .groupBy(col("dst"))
-          .agg(sum(col("contrib")).as("sc"))
-          .select(col("dst").as("node"),
-            (lit(base) + expr("(85 * sc) div 100")).as("r"))
-      }
-      use(rank.select(
-        concat(when(col("node") % 2 === 0, "s").otherwise("c"),
-          expr("node div 2")).as("node"),
-        col("r").as("rank_scaled")))
-    } finally {
-      nodes.unpersist(false); ed.unpersist(false)
-    }
-  }
+      (use: DataFrame => T): T =
+    PageRank.ranks(indexEdges(s, d), PageRank.Global())((r, _) => use(r))
 
   /** Force the bounded top-20 inside a managed-cache scope and return
     * it as a local frame (20 rows — driver-bounded by construction). */
@@ -2270,193 +2227,68 @@ object ExtendedQueries {
   }
 
   /** The q136 rank table served from the MAINTAINED weighted edge
-    * state ([[EdgeFold]]) — [[withPagerankRanks]]'s recurrence with
-    * weighted contributions: degree = Σw per src (= the parallel-edge
-    * multiplicity the one-shot build counts), per-edge contribution
-    * `w · (r div d)` (= the sum of the w identical per-parallel-row
-    * `r // d` terms), so the served ranks are integer-identical to the
-    * one-shot q136 build over the union of the folded batches. Same
-    * managed-scope contract as [[withPagerankRanks]]: `use` must force
-    * its result. The maintained edge table arrives as the store's
-    * composed BUCKETED scan ([[EdgeFold.degreedEdgesBucketed]]) with
-    * the degree maintained in-state, so the serve carries ZERO
-    * |E|-scale exchange end to end — setup included: no per-serve
-    * repartition, no degree self-join (r18's weak mark); each
-    * iteration exchanges ONLY the |V|-row rank side (the EdgeIndex
-    * co-location property, inherited from the store's own layout). */
+    * state ([[EdgeFold]]): [[PageRank]]'s recurrence with the folded
+    * weights — degree = Σw per src (= the parallel-edge multiplicity
+    * the one-shot build counts), so the served ranks are integer-
+    * identical to the one-shot q136 build over the union of the folded
+    * batches. Same managed-scope contract as [[withPagerankRanks]]. The
+    * maintained edge table arrives as the store's composed BUCKETED
+    * scan ([[EdgeFold.degreedEdgesBucketed]]) with the degree
+    * maintained in-state, so the serve carries ZERO |E|-scale exchange
+    * end to end — setup included: no per-serve repartition, no degree
+    * self-join; each iteration exchanges ONLY the |V|-row rank side. */
   private[graft] def withMaintainedPagerankRanks[T](s: SparkSession,
-      storeDir: String)(use: DataFrame => T): T = {
-    val scale = 1000000000000L
-    val iters = 3
-    val ed = EdgeFold.degreedEdgesBucketed(s, storeDir).persist()
-    val nodes = ed.select(col("src").as("node")).distinct().persist()
-    try {
-      val nNodes = nodes.count()
-      val rInit = scale / nNodes
-      val base = rInit * 15 / 100
-      // iteration 1 is a constant-rank substitution — no rank frame,
-      // no join, one |V|-scale exchange (RankHistory.firstStepRank)
-      var rank = RankHistory.firstStepRank(ed, rInit, base)
-      for (_ <- 2 to iters)
-        rank = RankHistory.stepRank(ed, rank, base)
-      use(rank.select(
-        concat(when(col("node") % 2 === 0, "s").otherwise("c"),
-          expr("node div 2")).as("node"),
-        col("r").as("rank_scaled")))
-    } finally {
-      nodes.unpersist(false); ed.unpersist(false)
-    }
-  }
+      storeDir: String)(use: DataFrame => T): T =
+    PageRank.ranks(EdgeFold.degreedEdgesBucketed(s, storeDir),
+      PageRank.Global())((r, _) => use(r))
 
   /** q139's seed suppliers (suppkey values; node ids are 2k). Baked
     * into the oracle SQL. A def: `queries` forces the oracle at object
     * init, BEFORE trailing vals would be assigned. */
   private[graft] def pprSeedSuppliers: Seq[Long] = Seq(1L, 2L, 3L, 4L, 5L)
 
-  /** Iteration 1 of the PERSONALIZED rank recurrence without the rank
-    * join (r21, the [[graft.analytics.RankHistory.firstStepRank]]
-    * pattern applied to the seeded flavor): r0 is the constant rInit
-    * over exactly the seed node set, so the inner join
-    * `ed ⋈ r0 ON src = node` is row-identical to
-    * `ed WHERE src IN seedNodes` (seeds = distinct ed-src ∩ seedNodes,
-    * and every matched row reads r = rInit) — the damped contribution
-    * computes straight off the (bucketed) edge scan: no rank-side
-    * exchange, no join. `contrib` is the caller's per-edge term with
-    * r = rInit substituted (`rInit div d` unweighted,
-    * `w · (rInit div d)` weighted). The caller unions its restart
-    * mass exactly as in the later iterations. */
-  private def pprFirstContribs(ed: DataFrame, seedNodes: Seq[Long],
-                               contrib: Column): DataFrame =
-    ed.filter(col("src").isin(seedNodes: _*))
-      .select(col("dst"), contrib.as("contrib"))
-      .groupBy(col("dst"))
-      .agg(sum(col("contrib")).as("sc"))
-      .select(col("dst").as("node"), expr("(85 * sc) div 100").as("rc"))
+  /** q139's restart: the seed suppliers' node ids. */
+  private def pprRestart = PageRank.Personalized(pprSeedSuppliers.map(_ * 2))
 
   /** Personalized PageRank over the [[EdgeIndex]] edge artifact:
-    * restart mass on [[pprSeedSuppliers]] only, 3 iterations, integer
-    * trillionths. The full-outer join with the seed base keeps every
-    * seed's restart term alive whether or not the frontier reached it
-    * this round (the textbook PPR recurrence). */
+    * restart mass on [[pprSeedSuppliers]] only ([[PageRank.Personalized]]). */
   private[graft] def withPprRanks[T](s: SparkSession, d: String)
-      (use: DataFrame => T): T = {
-    val scale = 1000000000000L
-    val seedNodes = pprSeedSuppliers.map(_ * 2)
-    val rInit = scale / seedNodes.size
-    val base = scale * 15 / 100 / seedNodes.size
-    val ed = EdgeIndex.load(s, d).persist()
-    val seeds = ed.select(col("src").as("node"))
-      .filter(col("node").isin(seedNodes: _*)).distinct().persist()
-    try {
-      var rank: DataFrame = null
-      for (i <- 1 to 3) {
-        // iteration 1 is a seed-filter substitution — no rank frame,
-        // no join (pprFirstContribs); later iterations: the edge side
-        // arrives bucketed by src (HashPartitioning survives persist()
-        // because a bucketed scan has no shuffle for AQE to erase), so
-        // the join exchanges ONLY the rank side; shuffle_hash skips
-        // the edge-side sort an SMJ would add
-        val contribs =
-          if (i == 1) pprFirstContribs(ed, seedNodes,
-            expr(s"$rInit div d"))
-          else ed
-            .join(rank.hint("shuffle_hash"), ed("src") === rank("node"))
-            .select(col("dst"), expr("r div d").as("contrib"))
-            .groupBy(col("dst"))
-            .agg(sum(col("contrib")).as("sc"))
-            .select(col("dst").as("node"), expr("(85 * sc) div 100").as("rc"))
-        // restart rule as union + re-aggregate (r18, the q209 lesson):
-        // coalesce(rc,0)+coalesce(rb,0) ≡ sum over {damped row, seed
-        // row} per node — the same integers the oracle's FULL JOIN
-        // computes, without the SMJ sort of the frontier every round
-        rank = contribs.select(col("node"), col("rc").as("r"))
-          .unionByName(seeds.select(col("node"), lit(base).as("r")))
-          .groupBy(col("node")).agg(sum(col("r")).as("r"))
-      }
-      use(rank.select(
-        concat(when(col("node") % 2 === 0, "s").otherwise("c"),
-          expr("node div 2")).as("node"),
-        col("r").as("rank_scaled")))
-    } finally { seeds.unpersist(false); ed.unpersist(false) }
-  }
+      (use: DataFrame => T): T =
+    PageRank.ranks(indexEdges(s, d), pprRestart)((r, _) => use(r))
 
   /** q139's PPR served from the MAINTAINED weighted edge state — the
-    * [[withMaintainedPagerankRanks]] weighting applied to
-    * [[withPprRanks]]' recurrence, so ONE maintained store serves the
-    * whole graph-report family (global centrality q208, personalized
-    * q209) the way one maintained Markov cell table serves q205 and
-    * q207. Weighted contributions are integer-identical to the
-    * per-parallel-row sums (same argument as the global serve); the
-    * full-outer restart rule is unchanged. Managed scope — `use` must
-    * force its result. Edge side: the composed bucketed scan with
-    * in-state degrees ([[EdgeFold.degreedEdgesBucketed]]) — zero
-    * |E|-scale exchange, setup included (see
-    * [[withMaintainedPagerankRanks]]). */
+    * [[withMaintainedPagerankRanks]] edges under [[withPprRanks]]'
+    * restart, so ONE maintained store serves the whole graph-report
+    * family (global centrality q208, personalized q209) the way one
+    * maintained Markov cell table serves q205 and q207. Managed scope
+    * — `use` must force its result. */
   private[graft] def withMaintainedPprRanks[T](s: SparkSession,
-      storeDir: String)(use: DataFrame => T): T = {
-    val scale = 1000000000000L
-    val seedNodes = pprSeedSuppliers.map(_ * 2)
-    val rInit = scale / seedNodes.size
-    val base = scale * 15 / 100 / seedNodes.size
-    val ed = EdgeFold.degreedEdgesBucketed(s, storeDir).persist()
-    val seeds = ed.select(col("src").as("node"))
-      .filter(col("node").isin(seedNodes: _*)).distinct().persist()
-    try {
-      var rank: DataFrame = null
-      for (i <- 1 to 3) {
-        // iteration 1 is a seed-filter substitution — no rank frame,
-        // no join (pprFirstContribs, weighted flavor)
-        val contribs =
-          if (i == 1) pprFirstContribs(ed, seedNodes,
-            col("w") * expr(s"$rInit div d"))
-          else ed
-            .join(rank.hint("shuffle_hash"), ed("src") === rank("node"))
-            .select(col("dst"), (col("w") * expr("r div d")).as("contrib"))
-            .groupBy(col("dst"))
-            .agg(sum(col("contrib")).as("sc"))
-            .select(col("dst").as("node"), expr("(85 * sc) div 100").as("rc"))
-        // the restart rule as union + re-aggregate instead of q139's
-        // FULL OUTER join: coalesce(rc,0)+coalesce(rb,0) ≡ sum over
-        // {damped row, seed row} per node — same integers, but the
-        // hash agg rides contribs' existing partitioning where the
-        // SMJ full-outer sorted the frontier every round
-        rank = contribs.select(col("node"), col("rc").as("r"))
-          .unionByName(seeds.select(col("node"), lit(base).as("r")))
-          .groupBy(col("node")).agg(sum(col("r")).as("r"))
-      }
-      use(rank.select(
-        concat(when(col("node") % 2 === 0, "s").otherwise("c"),
-          expr("node div 2")).as("node"),
-        col("r").as("rank_scaled")))
-    } finally { seeds.unpersist(false); ed.unpersist(false) }
-  }
+      storeDir: String)(use: DataFrame => T): T =
+    PageRank.ranks(EdgeFold.degreedEdgesBucketed(s, storeDir), pprRestart)(
+      (r, _) => use(r))
 
   /** The q139 oracle: same edge CTEs as q136, the PPR recurrence
     * unrolled with the full-outer restart rule. */
   private lazy val pprOracleSql: String = {
-    val scale = 1000000000000L
-    val seedNodes = pprSeedSuppliers.map(_ * 2)
-    val rInit = scale / seedNodes.size
-    val base = scale * 15 / 100 / seedNodes.size
-    val inList = seedNodes.mkString(", ")
-    val iterCtes = (1 to 3).map { i =>
+    val seeds = pprRestart.seeds
+    val iterCtes = (1 to PageRank.iters).map { i =>
       s"""c$i AS (SELECT e.dst AS node, (85 * sum(r${i - 1}.r // e.d)) // 100 rc
              FROM e JOIN r${i - 1} ON e.src = r${i - 1}.node
              GROUP BY e.dst),
          r$i AS (SELECT coalesce(c.node, s.node) AS node,
                 coalesce(c.rc, 0)
-                  + (CASE WHEN s.node IS NOT NULL THEN $base ELSE 0 END) AS r
+                  + (CASE WHEN s.node IS NOT NULL
+                     THEN ${PageRank.scale} * 15 // 100 // ${seeds.size}
+                     ELSE 0 END) AS r
               FROM c$i c FULL JOIN seeds s ON c.node = s.node)"""
     }.mkString(", ")
     s"""
     WITH $pagerankEdgeCtes,
-    seeds AS (SELECT DISTINCT src AS node FROM e WHERE src IN ($inList)),
-    r0 AS (SELECT node, $rInit r FROM seeds),
+    seeds AS (SELECT DISTINCT src AS node FROM e
+              WHERE src IN (${seeds.mkString(", ")})),
+    r0 AS (SELECT node, ${PageRank.scale} // ${seeds.size} r FROM seeds),
     $iterCtes
-    SELECT (CASE WHEN node % 2 = 0 THEN 's' ELSE 'c' END)
-             || (node // 2)::VARCHAR AS node,
-           CAST(r AS BIGINT) AS rank_scaled
-    FROM r3 ORDER BY rank_scaled DESC, node LIMIT 20"""
+    $rankTop20Sql"""
   }
 
   /** The q136/q137 result shape over a rank table (private[graft]:
@@ -2476,10 +2308,19 @@ object ExtendedQueries {
     deg AS (SELECT src, count(*) d FROM eu GROUP BY src),
     e AS (SELECT eu.src, eu.dst, deg.d FROM eu JOIN deg ON eu.src = deg.src)"""
 
+  /** The shared oracle tail: the last iteration's (node long, r) table
+    * labelled s<k>/c<k> and cut to the top 20 — ONE copy for the q136
+    * and q139 oracles (the SQL twin of [[PageRank.labelled]] +
+    * [[pagerankTop20]]). */
+  private def rankTop20Sql: String = s"""
+    SELECT (CASE WHEN node % 2 = 0 THEN 's' ELSE 'c' END)
+             || (node // 2)::VARCHAR AS node,
+           CAST(r AS BIGINT) AS rank_scaled
+    FROM r${PageRank.iters} ORDER BY rank_scaled DESC, node LIMIT 20"""
+
   /** One oracle for the direct build AND the artifact read path. */
   private lazy val pagerankOracleSql: String = {
-    val scale = 1000000000000L
-    val iterCtes = (1 to 3).map { i =>
+    val iterCtes = (1 to PageRank.iters).map { i =>
       s"""r$i AS (SELECT e.dst AS node,
              (SELECT rbase FROM c) + (85 * sum(r${i - 1}.r // e.d)) // 100 AS r
            FROM e JOIN r${i - 1} ON e.src = r${i - 1}.node
@@ -2487,13 +2328,10 @@ object ExtendedQueries {
     }.mkString(", ")
     s"""
     WITH $pagerankEdgeCtes,
-    c AS (SELECT ($scale // count(*)) rinit,
-                 (($scale // count(*)) * 15) // 100 rbase FROM deg),
+    c AS (SELECT (${PageRank.scale} // count(*)) rinit,
+                 ((${PageRank.scale} // count(*)) * 15) // 100 rbase FROM deg),
     r0 AS (SELECT src AS node, (SELECT rinit FROM c) r FROM deg),
     $iterCtes
-    SELECT (CASE WHEN node % 2 = 0 THEN 's' ELSE 'c' END)
-             || (node // 2)::VARCHAR AS node,
-           CAST(r AS BIGINT) AS rank_scaled
-    FROM r3 ORDER BY rank_scaled DESC, node LIMIT 20"""
+    $rankTop20Sql"""
   }
 }

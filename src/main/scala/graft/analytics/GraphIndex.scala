@@ -132,7 +132,7 @@ object EdgeFold {
     // layout guard (r19 ADVICE, high): folding a (src, dst, w, d) slice
     // on top of a pre-degree (src, dst, w) store would leave UNTOUCHED
     // buckets 3-column — readers null-fill d (schema union), a
-    // compaction bakes the nulls in permanently, and stepRank's
+    // compaction bakes the nulls in permanently, and the recurrence's
     // `w * (r div d)` contributions silently vanish (sum skips nulls).
     // Refuse before any write, against the version this fold would read.
     val root = java.nio.file.Paths.get(storeDir)
@@ -222,6 +222,145 @@ object EdgeFold {
     BucketedStateStore.prune(storeDir, keep)
 }
 
+/** THE integer PageRank recurrence over the fulfillment graph, written
+  * once for every rank serve: q136/q137 and q139 over the [[EdgeIndex]]
+  * artifact, q208/q209 over the maintained [[EdgeFold]] state,
+  * [[RankHistory.publish]], and q210's saturation fallback. The oracles
+  * (`ExtendedQueries.pagerankOracleSql` / `pprOracleSql`) unroll the same
+  * arithmetic in DuckDB SQL and take [[scale]] and [[iters]] from here.
+  *
+  * Ranks are integer multiples of 1/[[scale]], so two engines' summation
+  * orders cannot diverge. Each iteration sends a source's rank r along
+  * every out-edge row as `w · (r div d)` ([[contrib]]) — w the parallel-
+  * edge weight, d the source's out-degree Σw — and damps each node's
+  * in-sum to `(85 · Σ) div 100` ([[damped]]) before the [[Restart]]
+  * mass is added. On the [[EdgeIndex]] artifact every parallel edge is
+  * its own row with w = 1: summing `1 · (r div d)` once per row gives
+  * the same integers as one weighted row's `w · (r div d)`. */
+object PageRank {
+
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.functions.{col, concat, expr, lit, sum, when}
+
+  /** Ranks are integer multiples of 1/scale. */
+  val scale = 1000000000000L
+
+  /** The recurrence is unrolled to a fixed iteration count. */
+  val iters = 3
+
+  /** Where the restart (teleport) mass lands. */
+  sealed trait Restart
+
+  /** Every node restarts: r0 = scale / |V| on every node, and
+    * 15/100 of r0 is added to every damped sum. |V| is the number of
+    * distinct edge sources — counted over the cached edges unless
+    * `nodes` is already known (the q210 fallback reads it from the rank
+    * history). */
+  final case class Global(nodes: Option[Long] = None) extends Restart
+
+  /** Restart mass on the seed nodes only: r0 = scale / |seeds| on each
+    * seed that is an edge source, and scale · 15/100 / |seeds| added to
+    * each of those seeds every iteration, whether or not the walk
+    * reached it (the textbook personalized recurrence). */
+  final case class Personalized(seeds: Seq[Long]) extends Restart
+
+  /** r0 and the per-iteration restart mass when each of `n` nodes
+    * restarts ([[Global]]). */
+  private[analytics] def uniform(n: Long): (Long, Long) =
+    (scale / n, scale / n * 15 / 100)
+
+  /** One edge row's share of its source's rank: `w · (r div d)` as
+    * `contrib`; `r` is a rank column name or an integer literal. */
+  private[analytics] def contrib(r: String, d: String = "d"): Column =
+    (col("w") * expr(s"$r div $d")).as("contrib")
+
+  /** A node's damped in-rank over its [[contrib]] rows, as `rc` (an
+    * aggregate: use it in `groupBy(...).agg`). */
+  private[analytics] def damped: Column =
+    expr("(85 * sum(contrib)) div 100").as("rc")
+
+  /** (node long, r) → (node "s<k>" for supplier 2k / "c<k>" for
+    * customer 2k+1, rank_scaled): node ids stay longs through the
+    * iterations and become strings only here. */
+  private[analytics] def labelled(rank: DataFrame): DataFrame =
+    rank.select(
+      concat(when(col("node") % 2 === 0, "s").otherwise("c"),
+        expr("node div 2")).as("node"),
+      col("r").as("rank_scaled"))
+
+  /** Run the recurrence over `edges` (src, dst, w, d) and hand `use` the
+    * [[labelled]] rank table and the count r0 divides by (|V| for
+    * [[Global]], |seeds| for [[Personalized]]). Managed scope: the
+    * edges and the restart's node frame stay cached through the
+    * iterations and are unpersisted when `use` returns, so `use` MUST
+    * force its result (collect or write). `each(i, r_i)` sees every iteration's
+    * (node, r) table and returns the frame iteration i + 1 reads —
+    * [[RankHistory.publish]] writes r_i there and reads it back.
+    *
+    * Iteration 1 needs no join: r0 is the constant rInit over exactly
+    * the sources it reads (every source for [[Global]]; the seed-
+    * filtered scan for [[Personalized]]), so `edges ⋈ r0` is a
+    * substitution — one |V|-scale exchange (the sum), none for the rank
+    * side. Later iterations join the rank onto the cached edges under
+    * shuffle_hash: edges read bucketed by src keep HashPartitioning(src)
+    * through persist(), so only the |V|-row rank side is exchanged and
+    * the |E|-row edge side is never re-shuffled or sorted. shuffle_hash,
+    * not broadcast: at 100x the rank table is 1.6M rows, and
+    * broadcasting it each iteration measured ~25% slower.
+    *
+    * The personalized restart is a union with the seed rows and a
+    * re-aggregate — the same integers as the oracle's FULL JOIN with
+    * `coalesce(rc, 0) + base`, while the hash agg rides the damped
+    * sums' partitioning where a sort-merge full-outer join sorted the
+    * frontier every round (128.8 → 46.8 s warm at 100x for q209). */
+  private[analytics] def ranks[T](edges: DataFrame, restart: Restart,
+      each: (Int, DataFrame) => DataFrame = (_, r) => r)
+      (use: (DataFrame, Long) => T): T = {
+    val ed = edges.persist()
+    // the restart's node frame: every source (counted for |V|), or the
+    // seeds that are sources (unioned into every iteration)
+    val srcs = ed.select(col("src").as("node"))
+    val nodes = (restart match {
+      case Global(None) => Some(srcs)
+      case Global(Some(_)) => None
+      case Personalized(ns) => Some(srcs.filter(col("node").isin(ns: _*)))
+    }).map(_.distinct().persist())
+    try {
+      // r0 = rInit on exactly the sources of `firstEdges`
+      val (n, rInit, base, firstEdges) = restart match {
+        case Global(known) =>
+          // |V| reaches the driver as one bounded count, which also
+          // fills the edge cache
+          val n = known.getOrElse(nodes.get.count())
+          val (rInit, base) = uniform(n)
+          (n, rInit, base, ed)
+        case Personalized(ns) => (ns.size.toLong, scale / ns.size,
+          scale * 15 / 100 / ns.size, ed.filter(col("src").isin(ns: _*)))
+      }
+      def step(contribs: DataFrame): DataFrame = {
+        val rc = contribs.groupBy(col("dst")).agg(damped)
+          .withColumnRenamed("dst", "node")
+        restart match {
+          case _: Global =>
+            rc.select(col("node"), (lit(base) + col("rc")).as("r"))
+          case _: Personalized => rc.select(col("node"), col("rc").as("r"))
+            .unionByName(nodes.get.select(col("node"), lit(base).as("r")))
+            .groupBy(col("node")).agg(sum(col("r")).as("r"))
+        }
+      }
+      var rank = each(1,
+        step(firstEdges.select(col("dst"), contrib(rInit.toString))))
+      for (i <- 2 to iters)
+        rank = each(i, step(
+          ed.join(rank.hint("shuffle_hash"), ed("src") === rank("node"))
+            .select(col("dst"), contrib("r"))))
+      use(labelled(rank), n)
+    } finally {
+      nodes.foreach(_.unpersist(false)); ed.unpersist(false)
+    }
+  }
+}
+
 /** Incremental rank DELTA-SERVE over the [[EdgeFold]] store (r18
   * directive 5): the fold made the BUILD batch-proportional, but every
   * serve still re-ran the full 3 iterations over all |E|. For a sliver
@@ -277,46 +416,9 @@ object EdgeFold {
   * direction; republish after compacting. */
 object RankHistory {
 
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions.{col, concat, expr, first, lit,
-    sum, when}
+  import org.apache.spark.sql.functions.{col, first, lit}
   import java.nio.file.{Files, Paths}
   import graft.streaming.BucketedStateStore
-
-  private val scale = 1000000000000L
-  private val iters = 3
-
-  /** ONE weighted PageRank iteration over a degree-carrying edge frame
-    * — THE shared step for the full maintained serve
-    * ([[graft.analytics.ExtendedQueries.withMaintainedPagerankRanks]]),
-    * [[publish]], and [[withDeltaServedRanks]]' saturation fallback
-    * (three copies of this arithmetic could drift; one cannot). */
-  private[analytics] def stepRank(ed: DataFrame, rank: DataFrame,
-                                  base: Long): DataFrame =
-    ed.join(rank.hint("shuffle_hash"), ed("src") === rank("node"))
-      .select(col("dst"), (col("w") * expr("r div d")).as("contrib"))
-      .groupBy(col("dst"))
-      .agg(sum(col("contrib")).as("sc"))
-      .select(col("dst").as("node"),
-        (lit(base) + expr("(85 * sc) div 100")).as("r"))
-
-  /** [[stepRank]] specialised to the FIRST iteration, where the rank
-    * frame is `nodes × rInit` — a constant per matched row. The join
-    * is a no-op substitution there (`nodes` = distinct src of `ed`, so
-    * EVERY edge row matches and reads r = rInit), so the first step
-    * needs no rank-side exchange and no join at all: contrib =
-    * `w · (rInit div d)` directly off the edge scan — integer-
-    * identical, one |V|-scale exchange (the groupBy) instead of two.
-    * Shared by the full maintained serve, [[publish]], and the
-    * saturation fallback, like [[stepRank]]. */
-  private[analytics] def firstStepRank(ed: DataFrame, rInit: Long,
-                                       base: Long): DataFrame =
-    ed.select(col("dst"),
-        (col("w") * expr(s"$rInit div d")).as("contrib"))
-      .groupBy(col("dst"))
-      .agg(sum(col("contrib")).as("sc"))
-      .select(col("dst").as("node"),
-        (lit(base) + expr("(85 * sc) div 100")).as("r"))
 
   /** Which path the last [[withDeltaServedRanks]] call took — "delta"
     * or "full" (saturation fallback). Test seam, not an API. */
@@ -340,31 +442,22 @@ object RankHistory {
     val root = Paths.get(storeDir)
     val version = BucketedStateStore.latestVersion(root)
       .getOrElse(sys.error(s"no edge state under $storeDir"))
-    val ed = EdgeFold.degreedEdgesBucketed(s, storeDir).persist()
-    val nodes = ed.select(col("src").as("node")).distinct().persist()
     val hroot = Paths.get(historyDir)
     graft.etl.Commit.recover(hroot)
     val tmp = graft.etl.Commit.stage(hroot)
     try {
-      val nNodes = nodes.count()
-      val rInit = scale / nNodes
-      val base = rInit * 15 / 100
-      var rank: DataFrame = null
       Files.createDirectories(tmp)
-      for (i <- 1 to iters) {
-        rank = if (i == 1) firstStepRank(ed, rInit, base)
-               else stepRank(ed, rank, base)
-        rank.write.parquet(tmp.resolve(s"r$i").toString)
-        rank = s.read.parquet(tmp.resolve(s"r$i").toString)
-      }
+      val nNodes = PageRank.ranks(EdgeFold.degreedEdgesBucketed(s, storeDir),
+        PageRank.Global(), each = (i, rank) => {
+          val ri = tmp.resolve(s"r$i").toString
+          rank.write.parquet(ri)
+          s.read.parquet(ri)
+        })((_, n) => n)
       Files.writeString(tmp.resolve("state_version"), version.toString)
       Files.writeString(tmp.resolve("n_nodes"), nNodes.toString)
       graft.etl.Commit.claim(hroot, tmp)
       graft.etl.Commit.prune(hroot, 2)
-    } finally {
-      nodes.unpersist(false); ed.unpersist(false)
-      graft.etl.Commit.deleteRecursively(tmp)
-    }
+    } finally graft.etl.Commit.deleteRecursively(tmp)
   }
 
   /** The newest published history payload dir: the highest `v<N>` when
@@ -389,10 +482,10 @@ object RankHistory {
     * than the full serve. Each hop therefore counts its affected set
     * (the frame is pinned anyway) and, once
     * `|Aᵢ| ≥ saturationFrac · |V|`, abandons the overlay and runs the
-    * full maintained recurrence from the SAME pinned bucketed edges
-    * ([[stepRank]] — identical integers either way, so the switch is
-    * invisible to the result). [[lastServeMode]] records the path for
-    * the spec; the sliver (production) regime stays
+    * full maintained recurrence ([[PageRank.ranks]] over the bucketed
+    * edges, with the history's |V| — identical integers either way, so
+    * the switch is invisible to the result). [[lastServeMode]] records
+    * the path for the spec; the sliver (production) regime stays
     * neighborhood-proportional. */
   def withDeltaServedRanks[T](s: SparkSession, storeDir: String,
       historyDir: String, changedSrcs: DataFrame,
@@ -425,7 +518,6 @@ object RankHistory {
     // the whole cached |E| relation through every hop join and its
     // guards, so the delta path LOST to the full serve at every scale
     // — DeltaServeBench measured 0.2–0.5×)
-    lazy val edFull = pin(EdgeFold.degreedEdgesBucketed(s, storeDir))
     // a pruned slice is neighborhood-scale: collapse the per-bucket
     // task grain to the session's shuffle parallelism — slice joins
     // gain nothing from the store's bucketing (both sides are small),
@@ -461,8 +553,7 @@ object RankHistory {
             "(RankHistory.publish).")
       }
       val nNodes = histNodes
-      val rInit = scale / nNodes
-      val base = rInit * 15 / 100
+      val (rInit, base) = PageRank.uniform(nNodes)
       // w-symmetry guard (r19 ADVICE): the in-edge reversal below is
       // exact ONLY on symmetric-weight graphs — on an asymmetric one
       // the inner joins silently drop/fabricate contributions. Verify
@@ -499,9 +590,10 @@ object RankHistory {
       }
       var affectedPrev: DataFrame = null // A_{i-1}
       var rNewPrev: DataFrame = null     // recomputed r_{i-1} on A_{i-1}
-      var served: DataFrame = null
+      var served: DataFrame = null // the overlay, once hop `iters` lands
+      var saturated = false
       var i = 1
-      while (i <= iters && served == null) {
+      while (served == null && !saturated) {
         val sources =
           if (i == 1) c
           else pin(affectedPrev.unionByName(c).distinct())
@@ -519,18 +611,10 @@ object RankHistory {
         val affected = pin(edS.join(sources.hint("shuffle_hash"),
             edS("src") === sources("node"))
           .select(edS("dst").as("node")).distinct())
-        if (affected.count() >= saturationFrac * nNodes) {
-          // the neighborhood reached most of the graph — the overlay
-          // path is now full-graph work PLUS joins; serve fully from
-          // the complete pinned edges instead (identical integers)
-          RankHistory.lastServeMode = "full"
-          // first iteration needs neither the node frame nor a join
-          // (constant rank substitution — firstStepRank), which also
-          // retires the full-|E| distinct pass the node frame cost
-          var rank = firstStepRank(edFull, rInit, base)
-          for (_ <- 2 to iters) rank = stepRank(edFull, rank, base)
-          served = rank
-        } else {
+        // the neighborhood reached most of the graph — the overlay
+        // path is now full-graph work PLUS joins; serve fully instead
+        if (affected.count() >= saturationFrac * nNodes) saturated = true
+        else {
           requireSymmetric()
           // in-edges of A_i: out-edges of A_i reversed (w symmetric),
           // read from A_i's own buckets — pruned, never |E|. Pinned:
@@ -553,8 +637,7 @@ object RankHistory {
           val withR =
             if (i == 1)
               inE.join(deg.hint("shuffle_hash"), "s")
-                .select(col("n"),
-                  (col("w") * expr(s"$rInit div ds")).as("contrib"))
+                .select(col("n"), PageRank.contrib(rInit.toString, "ds"))
             else {
               val rPrevEff = s.read
                 .parquet(hroot.resolve(s"r${i - 1}").toString)
@@ -563,29 +646,31 @@ object RankHistory {
               inE.join(deg.hint("shuffle_hash"), "s")
                 .join(rPrevEff.withColumnRenamed("node", "s")
                   .hint("shuffle_hash"), "s")
-                .select(col("n"),
-                  (col("w") * expr("r div ds")).as("contrib"))
+                .select(col("n"), PageRank.contrib("r", "ds"))
             }
-          val rNew = withR.groupBy(col("n"))
-            .agg(sum(col("contrib")).as("sc"))
-            .select(col("n").as("node"),
-              (lit(base) + expr("(85 * sc) div 100")).as("r"))
-          if (i == iters) {
-            RankHistory.lastServeMode = "delta"
+          val rNew = withR.groupBy(col("n")).agg(PageRank.damped)
+            .select(col("n").as("node"), (lit(base) + col("rc")).as("r"))
+          if (i == PageRank.iters)
             served = s.read.parquet(hroot.resolve(s"r$i").toString)
               .join(affected, Seq("node"), "left_anti")
               .unionByName(rNew)
-          } else {
+          else {
             rNewPrev = pin(rNew)
             affectedPrev = affected
           }
         }
         i += 1
       }
-      use(served.select(
-        concat(when(col("node") % 2 === 0, "s").otherwise("c"),
-          expr("node div 2")).as("node"),
-        col("r").as("rank_scaled")))
+      if (saturated) {
+        RankHistory.lastServeMode = "full"
+        // the full |E| relation is read only here; the history's |V|
+        // is reused, so the fallback runs no node count
+        PageRank.ranks(EdgeFold.degreedEdgesBucketed(s, storeDir),
+          PageRank.Global(Some(nNodes)))((ranks, _) => use(ranks))
+      } else {
+        RankHistory.lastServeMode = "delta"
+        use(PageRank.labelled(served))
+      }
     } finally pinned.foreach(_.unpersist(false))
   }
 }

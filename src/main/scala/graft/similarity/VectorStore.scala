@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.etl.Commit
 import graft.text.LabelStore
 
@@ -65,6 +66,17 @@ object VectorStore {
   private def metaPath(dir: String) =
     java.nio.file.Paths.get(dir, "_meta")
 
+  /** The stored tables' schemas — the types parquet inference reads
+    * back, `_c` an integer partition value. Reads pass them, so no
+    * read pays a schema-inference Spark job. */
+  private val centsSchema = StructType(Seq(StructField("vec_id", LongType),
+    StructField("embedding", ArrayType(FloatType))))
+  private val listsSchema = centsSchema.add("_c", IntegerType)
+
+  /** The inverted lists of the generation at `root`. */
+  private def listsAt(s: SparkSession, root: String): DataFrame =
+    s.read.schema(listsSchema).parquet(listsPath(root))
+
   /** The generation all reads and mutations act on: the highest
     * `v<N>` subdir when [[retrain]] has published one, else the
     * store root itself (the base generation [[init]] writes). */
@@ -102,7 +114,7 @@ object VectorStore {
     * (probes pick centroids the `_c=` layout was not keyed by). */
   private def checkedCentroids(s: SparkSession, root: String)
       : Seq[(Long, Array[Float])] = {
-    val cents = s.read.parquet(centsPath(root))
+    val cents = s.read.schema(centsSchema).parquet(centsPath(root))
       .select(col("vec_id"), col("embedding")).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
       .sortBy(_._1).toSeq
@@ -305,7 +317,7 @@ object VectorStore {
   /** The inverted lists (vec_id, embedding, _c) — filter `_c` by the
     * probed centroid ids to partition-prune a read. */
   def lists(s: SparkSession, storeDir: String): DataFrame =
-    s.read.parquet(listsPath(genRoot(storeDir)))
+    listsAt(s, genRoot(storeDir))
 
   /** IVF search against the store — q121's search: the store checks
     * (meta, query width), then [[SimilarityQueries.listSearch]] over
@@ -319,7 +331,7 @@ object VectorStore {
     checkDims(queries, "qe", cents.head._2.length, "search queries")
     // read via the SAME resolved generation as the geometry above —
     // a retrain landing between the two reads must not mix them
-    SimilarityQueries.listSearch(s.read.parquet(listsPath(root)), cents,
+    SimilarityQueries.listSearch(listsAt(s, root), cents,
       queries, nProbe, k)
   }
 
@@ -340,7 +352,7 @@ object VectorStore {
     checkedCentroids(s, root) // geometry/meta agreement, fail fast
     val d = ids.select(col("vec_id")).distinct().persist()
     try {
-      val all = s.read.parquet(listsPath(root))
+      val all = listsAt(s, root)
       val mine = all.join(broadcast(d), Seq("vec_id"), "left_semi")
       val hit = mine.select(col("_c").cast("long")).distinct().collect()
         .map(_.getLong(0)).toSeq.sorted

@@ -4,6 +4,7 @@ import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.etl.Commit
 
@@ -55,6 +56,19 @@ object Bm25Store {
   private def postingsPath(dir: String) = s"$dir/postings"
   private def doclensPath(dir: String) = s"$dir/doclens"
   private def metaPath(dir: String) = Paths.get(dir, "_meta")
+
+  /** The two tables' schemas — the types parquet inference reads back,
+    * `_tb`/`_db` integer partition values. Reads pass them, so no read
+    * pays a schema-inference Spark job. */
+  private val postingsSchema = StructType(Seq(StructField("t", StringType),
+    StructField("doc_id", LongType), StructField("tf", LongType),
+    StructField("dl", IntegerType), StructField("_tb", IntegerType)))
+  private val doclensSchema = StructType(Seq(StructField("doc_id", LongType),
+    StructField("dl", IntegerType), StructField("_db", IntegerType)))
+
+  /** The (doc_id, dl, _db) side table. */
+  private def doclens(s: SparkSession, dir: String): DataFrame =
+    s.read.schema(doclensSchema).parquet(doclensPath(dir))
 
   /** Posting-bucket count recorded at [[init]]; `None` pre-sidecar
     * (never the case for stores this object wrote — init always
@@ -177,12 +191,12 @@ object Bm25Store {
 
   /** The raw postings (t, doc_id, tf, dl, _tb). */
   def postings(s: SparkSession, storeDir: String): DataFrame =
-    s.read.parquet(postingsPath(storeDir))
+    s.read.schema(postingsSchema).parquet(postingsPath(storeDir))
 
   /** One (n_docs, avgdl) row — derived from `doclens`, so folds and
     * forgets keep it correct by construction. */
   def stats(s: SparkSession, storeDir: String): DataFrame =
-    s.read.parquet(doclensPath(storeDir))
+    doclens(s, storeDir)
       .agg(count(lit(1)).cast("double").as("n_docs"),
         (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
 
@@ -224,10 +238,10 @@ object Bm25Store {
     try {
       val all = postings(s, storeDir)
       val mine = all.join(broadcast(d), Seq("doc_id"), "left_semi")
-      // partition values read back with an inferred integral type
+      // partition values read back as integers (postingsSchema)
       val hit = mine.select(col("_tb").cast("long")).distinct().collect()
         .map(_.getLong(0)).toSeq.sorted
-      val dlAll = s.read.parquet(doclensPath(storeDir))
+      val dlAll = doclens(s, storeDir)
       val dHit = dlAll.join(broadcast(d), Seq("doc_id"), "left_semi")
       val removed = dHit.count()
       if (removed == 0 && hit.isEmpty) return ForgetStats(0L, 0)

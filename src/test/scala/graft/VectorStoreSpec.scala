@@ -265,4 +265,54 @@ class VectorStoreSpec extends SparkSpec {
       case None    => sys.props.remove("graft.artifacts.dir")
     }
   }
+
+  /** Spark jobs started by `body` on this thread: jobs are tagged with
+    * a job group, and a sentinel job in a second group fences the
+    * listener bus (events arrive in order, so once the sentinel's start
+    * is seen every earlier start has been counted). */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = "jobs-" + java.util.UUID.randomUUID
+    val fence = new java.util.concurrent.CountDownLatch(1)
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => n.incrementAndGet()
+          case Some(g) if g == group + "-fence" => fence.countDown()
+          case _ => ()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(group + "-fence", "fence")
+      try spark.range(1).collect() finally sc.clearJobGroup()
+      assert(fence.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      n.get
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("store reads pass their schemas: building a search or a BM25 " +
+      "scoring frame runs no schema-inference job") {
+    import spark.implicits._
+    val vdir = freshDir()
+    VectorStore.init(spark, emb, vdir)
+    val q = emb.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+    val bdir = Files.createTempDirectory("graft-bm25store").toString
+    val docs = Seq((1L, "red widget red gear"), (2L, "blue bolt red"))
+      .toDF("doc_id", "text")
+    graft.text.Bm25Store.init(spark, docs, bdir)
+    val qterms = Seq((1L, "red"), (1L, "bolt")).toDF("qid", "t")
+    // what remains are the stores' own bounded driver reads (search:
+    // the centroids, the query-width check, the probed cids; scored:
+    // the distinct query terms). Reading centroids + lists (search) or
+    // postings + doclens (scored) with inferred schemas ran one more
+    // job per read: 7 and 4.
+    assert(jobsDuring(VectorStore.search(spark, vdir, q, 2, 5)) == 5)
+    assert(jobsDuring(graft.text.Bm25Store.scored(spark, bdir, qterms)) == 2)
+  }
 }
